@@ -3777,6 +3777,11 @@ def dedup_master_keep_list_staged(
         F.col("doc_id_a").alias("doc_a"),
         F.col("doc_id_b").alias("doc_b"),
     ).persist()
+    # built once, up front: left lazy, the two lanes that read it would
+    # both block on its first build, each under its own lane label
+    spark.sparkContext.setJobDescription("keep-list stage: shared candidates")
+    cand.count()
+    spark.sparkContext.setJobDescription(None)
 
     def run_lane(item):
         """Build + materialize one lane, then release ITS OWN scratch
@@ -3890,7 +3895,8 @@ QUERIES.update(
 
 
 def master_history_state(
-    spark: SparkSession, sf_dir: str, hist: DataFrame
+    spark: SparkSession, sf_dir: str, hist: DataFrame,
+    scratch: list | None = None,
 ) -> dict:
     """The per-lane signature stores the incremental capstone probes —
     the PERSISTABLE "previous run" state (each value is a DataFrame in
@@ -3911,8 +3917,14 @@ def master_history_state(
     the slice signatures once here instead of once per consumer
     (shingle pipeline ×3, minhash/simhash votes ×2, embedding UDF ×2,
     winnow map ×2) was the single largest cost of the incremental
-    lane. Lifecycle is caller-owned (clearCache), catalog-wide."""
+    lane. Lifecycle is caller-owned (clearCache), catalog-wide.
+
+    ``scratch``: if given, the persisted shingle table the stores are
+    derived from (not itself a store) is appended to it, so a caller
+    that releases its state before later phases releases this too."""
     sh_hist = with_shingles(hist).persist()
+    if scratch is not None:
+        scratch.append(sh_hist)
     hashed, keepers = _content_hash_keepers(hist)
     lsh_b = _lsh_band_buckets(spark, sf_dir, shingled=sh_hist)
     return {
@@ -3975,7 +3987,6 @@ def _master_cross_edges(
         d_hashed = delta_state["hashed"]
         ld = delta_state["lsh_buckets"]
         sd = delta_state["simhash_bands"]
-        sem_d = delta_state["semantic_buckets"]
         emb_d = delta_state["embeddings"]
         delta_fps = delta_state["substring_fps"]
     else:
@@ -3983,7 +3994,6 @@ def _master_cross_edges(
         d_hashed = _content_hash_keepers(delta)[0]
         ld = _lsh_band_buckets(spark, sf_dir, shingled=sh_delta)
         sd = _simhash_pair_bands(spark, sf_dir, shingled=sh_delta)
-        sem_d = _semantic_buckets(sh_delta)
         emb_d = _hashing_bow_embeddings(sh_delta).persist()
         delta_fps = None
 
@@ -4068,8 +4078,7 @@ def _master_cross_edges(
     # semantic band keys are the LSH lane's by shared definition
     # (see master_history_state), so the probe's candidate id pairs
     # ARE lsh_cand — reuse them instead of re-joining the projected
-    # semantic store (sem_d stays in the signature for store-schema
-    # compatibility and the self-contained derivation below).
+    # semantic store.
     sem_cand = lsh_cand
     emb_h = state["embeddings"]
     sem_pairs = sem_cand.join(
@@ -4180,8 +4189,8 @@ def dedup_master_keep_list_incremental(
     docs = _docs(spark, sf_dir)
     # The staged predecessor, derived inside the timed query: one
     # signature store + one pair pass over the whole corpus.
-    state = master_history_state(spark, sf_dir, docs)
     scratch: list = []
+    state = master_history_state(spark, sf_dir, docs, scratch=scratch)
     all_edges = iter_checkpoint(
         _master_edge_union(spark, sf_dir, docs, state=state, scratch=scratch)
     )

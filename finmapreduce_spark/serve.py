@@ -3,12 +3,18 @@
 webapp/backend/api/endpoints.py:183-304: one uploaded document + one
 question → answer/reasoning/evidence + token stats, no judge).
 
-The same declarative DAG runs on a 1-row DataFrame — latency is
-dominated by the LLM call exactly as in the reference; Spark overhead
-at n=1 is the price of one code path for both serving and batch (the
-reference keeps a pipeline-instance cache for the same reason we keep
-the shared SparkSession). For sustained request streams, use
-streaming/pipeline.py::serve_mapreduce (micro-batched foreachBatch).
+The same declarative DAG runs on a 1-row DataFrame (the reference
+keeps a pipeline-instance cache for the same reason we keep the shared
+SparkSession). A request is a one-partition plan: the upload is a
+one-row ``LocalRelation`` (sources.readers.load_upload), the scan
+floor never widens past that known row count
+(operators.parallelism.scan_floor), and ``n_chunks`` is counted from
+the persisted map output rather than by re-chunking — so every stage
+runs exactly one task and none runs twice. Spark's cost at n=1 is then
+a fixed chain of about a dozen single-task stages, with no Python task
+on an empty partition. For
+sustained request streams, use streaming/pipeline.py::serve_mapreduce
+(micro-batched foreachBatch).
 
 Also here: ``preview`` — the reference's POST /preview (full-doc load
 + first-2000-chars, endpoints.py:351-423).
@@ -74,16 +80,16 @@ def answer_single(
 
     t0 = time.time()
     stages = run_mapreduce(qa, docs, cfg)
-    answers = stages["answers"].persist()  # one execution, several reads
     try:
-        row = answers.collect()[0].asDict()
-        n_chunks = stages["chunks"].count()
+        row = stages["answers"].collect()[0].asDict()
+        # one map row per chunk, read from the persisted map output
+        # that answering just materialized — counting ``chunks`` would
+        # re-run the doc join and the tokenizer
+        n_chunks = stages["mapped"].count()
     finally:
         # per-request persists must not accumulate across a
         # long-lived server EVEN when the request fails mid-action
-        # (the HTTP layer catches and keeps serving); unpersist is a
-        # no-op on non-persisted frames
-        answers.unpersist()
+        # (the HTTP layer catches and keeps serving)
         stages["mapped"].unpersist()
         stages["reduced"].unpersist()
     total_time = round(time.time() - t0, 3)

@@ -195,9 +195,23 @@ def load_upload(
     else:
         with open(path, encoding="utf-8", errors="replace") as f:
             content = f.read()
+    # A one-row Arrow table becomes a JVM LocalRelation whatever
+    # spark.sql.execution.arrow.pyspark.enabled says: one partition,
+    # and the optimizer knows rowCount = 1, so scan_floor leaves the
+    # request's plan at one task per stage.  A pickled row list would
+    # be an ExistingRDD of defaultParallelism slices, all but one
+    # empty, each still a Python task.
+    import pyarrow as pa
+
     return spark.createDataFrame(
-        [(0, os.path.basename(path), question, content)],
-        "qa_id long, doc_name string, question string, content string",
+        pa.table(
+            {
+                "qa_id": pa.array([0], pa.int64()),
+                "doc_name": pa.array([os.path.basename(path)], pa.string()),
+                "question": pa.array([question], pa.string()),
+                "content": pa.array([content], pa.string()),
+            }
+        )
     )
 
 

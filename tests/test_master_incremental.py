@@ -70,3 +70,35 @@ def test_incremental_keep_list_equals_batch_capstone(spark, sf_dir):
     )
     assert got == want
     spark.catalog.clearCache()
+
+
+def test_incremental_releases_history_shingles_before_cc(spark, sf_dir, monkeypatch):
+    """The shingle table master_history_state persists feeds the pair
+    pass only; the incremental keep-list must release it with the
+    other stores, so neither CC phase runs under it."""
+    from pyspark import StorageLevel
+
+    from finmapreduce_spark.queries import dedup
+
+    spark.catalog.clearCache()
+    shingled, pinned_at_cc = [], []
+    real_shingles, real_cc = dedup.with_shingles, dedup.connected_components
+
+    def with_shingles(df):
+        out = real_shingles(df)
+        shingled.append(out)
+        return out
+
+    def connected_components(edges, *a, **kw):
+        pinned_at_cc.append(
+            [df for df in shingled if df.storageLevel != StorageLevel.NONE]
+        )
+        return real_cc(edges, *a, **kw)
+
+    monkeypatch.setattr(dedup, "with_shingles", with_shingles)
+    monkeypatch.setattr(dedup, "connected_components", connected_components)
+    dedup_master_keep_list_incremental(spark, sf_dir).collect()
+    spark.catalog.clearCache()
+    assert shingled, "the history store was not derived from shingles"
+    # entered twice (history labels, then the merge), both times clean
+    assert pinned_at_cc == [[], []]

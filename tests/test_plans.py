@@ -1316,3 +1316,49 @@ def test_passage_df_filter_shares_window_exchange(spark, sf_dir):
     n_exchanges = plan.count("Exchange")
     assert n_exchanges <= 10, f"{n_exchanges} Exchange nodes"
     spark.catalog.clearCache()
+
+
+def _local_rows(spark, n):
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({"k": pa.array(range(n), pa.int64())})
+    )
+
+
+def test_scan_floor_one_row_local_relation_adds_no_exchange(spark):
+    """A one-row LocalRelation (the serving upload's shape) has
+    rowCount = 1: the floor returns it untouched — one partition, no
+    Exchange, so no Python task downstream runs on an empty slice."""
+    from finmapreduce_spark.operators.parallelism import scan_floor
+
+    df = scan_floor(_local_rows(spark, 1), "k")
+    assert "Exchange" not in plan_of(df)
+    assert df.rdd.getNumPartitions() == 1
+
+
+def test_scan_floor_caps_at_known_row_count(spark):
+    """Two known rows fill at most two partitions, whatever the
+    session's defaultParallelism — also when the floor has to widen a
+    coalesced relation (the row count survives the coalesce)."""
+    from finmapreduce_spark.operators.parallelism import scan_floor
+
+    assert spark.sparkContext.defaultParallelism > 2
+    for src in (_local_rows(spark, 2), _local_rows(spark, 2).coalesce(1)):
+        df = scan_floor(src, "k")
+        assert df.rdd.getNumPartitions() == 2
+        assert sorted(r.k for r in df.collect()) == [0, 1]
+
+
+def test_scan_floor_still_widens_file_scans(spark, sf_dir):
+    """A parquet scan carries no row count, so the floor spreads it to
+    defaultParallelism exactly as before (the batch and curation
+    lanes' decision is unchanged)."""
+    from finmapreduce_spark.operators.parallelism import scan_floor
+
+    scan = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    target = spark.sparkContext.defaultParallelism
+    assert scan.rdd.getNumPartitions() < target
+    df = scan_floor(scan, "doc_id")
+    assert "hashpartitioning(doc_id" in plan_of(df)
+    assert df.rdd.getNumPartitions() == target

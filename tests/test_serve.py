@@ -491,3 +491,63 @@ def test_http_prompt_set_without_format_type(spark):
     finally:
         server.shutdown()
         server.server_close()
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_load_upload_is_one_row_local_relation(spark, doc_file, arrow):
+    """The upload row is a one-partition LocalTableScan whose row count
+    the optimizer knows, with the Arrow conf on or off (a plain
+    SparkSession leaves it off), so the request plan stays one task
+    wide."""
+    from finmapreduce_spark.sources.readers import load_upload
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        df = load_upload(spark, doc_file, "q?")
+        qe = df._jdf.queryExecution()
+        assert qe.optimizedPlan().stats().rowCount().get() == 1
+        assert "LocalTableScan" in qe.executedPlan().toString()
+        assert df.rdd.getNumPartitions() == 1
+        assert df.schema.simpleString() == (
+            "struct<qa_id:bigint,doc_name:string,question:string,content:string>"
+        )
+        assert df.collect()[0]["doc_name"] == "report.md"
+    finally:
+        spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize("fail", [False, True])
+def test_answer_single_releases_its_persists(spark, doc_file, monkeypatch, fail):
+    """answer_single's ``finally`` hands back every per-request persist:
+    the persistent-RDD count returns to where it was after a good
+    request AND after one whose action fails once the LLM stages are
+    cached (the HTTP layer catches the error and keeps serving)."""
+    from pyspark.sql import functions as F
+
+    from finmapreduce_spark import serve
+
+    jsc = spark.sparkContext._jsc
+    pinned = []
+    real = serve.run_mapreduce
+
+    def run(qa, docs, cfg):
+        stages = real(qa, docs, cfg)
+        stages["mapped"].count()  # materialize the cached map output
+        pinned.append(jsc.getPersistentRDDs().size())
+        if fail:
+            stages["answers"] = stages["answers"].withColumn(
+                "boom", F.raise_error(F.lit("executor lost"))
+            )
+        return stages
+
+    monkeypatch.setattr(serve, "run_mapreduce", run)
+    before = jsc.getPersistentRDDs().size()
+    if fail:
+        with pytest.raises(Exception, match="executor lost"):
+            answer_single(spark, doc_file, "What grew?")
+    else:
+        assert answer_single(spark, doc_file, "What grew?")["answer"]
+    assert pinned and pinned[0] > before
+    assert jsc.getPersistentRDDs().size() == before
