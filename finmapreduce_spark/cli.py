@@ -118,7 +118,7 @@ def run(argv: list[str] | None = None, spark=None) -> str:
     from finmapreduce_spark.llm.prompts import (
         auto_prompt_set,
         load_prompt_set,
-        prompt_set_flags,
+        prompt_config,
     )
     from finmapreduce_spark.session import get_spark
     from finmapreduce_spark.sources.readers import (
@@ -138,44 +138,17 @@ def run(argv: list[str] | None = None, spark=None) -> str:
 
     # client factory: hermetic mock by default; live providers build
     # the OpenAI-compatible transport per executor (keys from env)
-    if args.provider == "mock":
-        from finmapreduce_spark.llm.runner import mock_client_factory
+    from finmapreduce_spark.llm.runner import client_for
 
-        client_factory = mock_client_factory
-        cache_namespace = ""
-    else:
-        import functools
-
-        from finmapreduce_spark.llm.runner import (
-            cache_namespace_for,
-            provider_client_factory,
-            resolve_provider_config,
-        )
-
-        # Resolve the effective endpoint/model/temperature ONCE on the
-        # driver (CLI args beat OPENAI_MODEL/OPENAI_BASE_URL env) and
-        # pin both the cache namespace and the executor factories to
-        # that identity — otherwise two runs with different
-        # OPENAI_MODEL but no --model_name would share namespace
-        # "openai::" and replay each other's cached answers.
-        resolved = resolve_provider_config(
-            args.provider,
-            model=args.model_name,
-            temperature=args.temperature,
-            max_tokens=args.llm_max_tokens,
-        )
-        cache_namespace = f"{args.provider}:{cache_namespace_for(resolved)}"
-        client_factory = functools.partial(
-            provider_client_factory,
-            args.provider,
-            model=resolved.model,
-            temperature=resolved.temperature,
-            max_tokens=resolved.max_tokens,
-            base_url=resolved.base_url,
-            requests_per_minute=args.requests_per_minute,
-            tokens_per_minute=args.tokens_per_minute,
-            burst=args.request_burst_size,
-        )
+    client_factory, cache_namespace = client_for(
+        args.provider,
+        model=args.model_name,
+        temperature=args.temperature,
+        max_tokens=args.llm_max_tokens,
+        requests_per_minute=args.requests_per_minute,
+        tokens_per_minute=args.tokens_per_minute,
+        burst=args.request_burst_size,
+    )
 
     loader = load_financebench if args.dataset == "financebench" else load_finqa
     qa_raw = loader(spark, args.data_path, num_samples=args.num_samples)
@@ -264,11 +237,7 @@ def run(argv: list[str] | None = None, spark=None) -> str:
             response_cache_dir=args.response_cache_dir,
             response_cache_namespace=cache_namespace,
             client_factory=client_factory,
-            map_template=prompt_set["map"],
-            reduce_template=prompt_set["reduce"],
-            judge_template=prompt_set["judge"],
-            reduce_expect_json=prompt_set_flags(prompt_set_name)["reduce_json"],
-            judge_expect_json=prompt_set_flags(prompt_set_name)["judge_json"],
+            **prompt_config(prompt_set_name),
             # real-run posture: the sink's write+stats and the judge all
             # consume `answers`; persist so LLM stages fire exactly once
             persist_llm_outputs=True,

@@ -119,8 +119,7 @@ def _request_config(cfg: MapReduceConfig, body: dict):
     if "format_type" in body or "prompt_set" in body:
         from finmapreduce_spark.llm.prompts import (
             auto_prompt_set,
-            load_prompt_set,
-            prompt_set_flags,
+            prompt_config,
         )
 
         fmt = body.get("format_type")
@@ -137,13 +136,7 @@ def _request_config(cfg: MapReduceConfig, body: dict):
         # auto-detect.
         named = body.get("prompt_set")
         set_name = named if named is not None else auto_prompt_set(fmt)
-        prompt_set = load_prompt_set(set_name)
-        flags = prompt_set_flags(set_name)
-        overrides["map_template"] = prompt_set["map"]
-        overrides["reduce_template"] = prompt_set["reduce"]
-        overrides["judge_template"] = prompt_set["judge"]
-        overrides["reduce_expect_json"] = flags["reduce_json"]
-        overrides["judge_expect_json"] = flags["judge_json"]
+        overrides.update(prompt_config(set_name))
     # Per-request provider/model selection (reference endpoints.py:
     # 62-124 builds the LLM per request from the posted model config).
     # "mock" is accepted for hermetic serving; live providers resolve
@@ -167,6 +160,7 @@ def _request_config(cfg: MapReduceConfig, body: dict):
     if provider is not None:
         if provider not in ("mock", *MODELS_CATALOG["providers"]):
             raise ValueError(f"unknown provider {provider!r}")
+        model = body.get("model")
         if provider == "mock":
             # model/temperature cannot apply to the mock — a silently
             # dropped knob reads as applied, so both 400
@@ -176,43 +170,18 @@ def _request_config(cfg: MapReduceConfig, body: dict):
                 raise ValueError(
                     "'temperature' is not applicable to provider 'mock'"
                 )
-            from finmapreduce_spark.llm.runner import mock_client_factory
+        elif model is not None and model not in MODELS_CATALOG["models"].get(
+            provider, []
+        ):
+            # the reference webapp restricts to its published catalog
+            # (endpoints.py:325-348); custom endpoints use
+            # OPENAI_MODEL/OPENAI_BASE_URL server-side
+            raise ValueError(f"unknown model {model!r} for provider {provider!r}")
+        from finmapreduce_spark.llm.runner import client_for
 
-            overrides["client_factory"] = mock_client_factory
-            overrides["response_cache_namespace"] = ""
-        else:
-            import functools
-
-            from finmapreduce_spark.llm.runner import (
-                cache_namespace_for,
-                provider_client_factory,
-                resolve_provider_config,
-            )
-
-            model = body.get("model")
-            if model is not None and model not in MODELS_CATALOG[
-                "models"
-            ].get(provider, []):
-                # the reference webapp restricts to its published
-                # catalog (endpoints.py:325-348); custom endpoints
-                # use OPENAI_MODEL/OPENAI_BASE_URL server-side
-                raise ValueError(
-                    f"unknown model {model!r} for provider {provider!r}"
-                )
-            resolved = resolve_provider_config(
-                provider, model=model, temperature=temp
-            )
-            overrides["client_factory"] = functools.partial(
-                provider_client_factory,
-                provider,
-                model=resolved.model,
-                temperature=resolved.temperature,
-                max_tokens=resolved.max_tokens,
-                base_url=resolved.base_url,
-            )
-            overrides["response_cache_namespace"] = (
-                f"{provider}:{cache_namespace_for(resolved)}"
-            )
+        factory, namespace = client_for(provider, model=model, temperature=temp)
+        overrides["client_factory"] = factory
+        overrides["response_cache_namespace"] = namespace
     elif "model" in body:
         raise ValueError("'model' requires 'provider'")
     for knob in ("score_threshold", "chunk_size", "chunk_overlap"):

@@ -203,6 +203,20 @@ def prompt_set_flags(name: str | None = None) -> dict[str, bool]:
     return {"reduce_json": _REDUCE_JSON[name], "judge_json": True}
 
 
+def prompt_config(name: str) -> dict:
+    """The MapReduceConfig fields a prompt set decides: its map /
+    reduce / judge templates and the reduce / judge JSON parse
+    expectations. Same name resolution as load_prompt_set."""
+    prompt_set, flags = load_prompt_set(name), prompt_set_flags(name)
+    return {
+        "map_template": prompt_set["map"],
+        "reduce_template": prompt_set["reduce"],
+        "judge_template": prompt_set["judge"],
+        "reduce_expect_json": flags["reduce_json"],
+        "judge_expect_json": flags["judge_json"],
+    }
+
+
 def available_prompt_sets() -> list[str]:
     """The six reference set names, for CLI/API validation surfaces."""
     return sorted(_SETS)

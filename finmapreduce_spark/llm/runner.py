@@ -154,6 +154,40 @@ def provider_client_factory(
     )
 
 
+def client_for(
+    provider: str,
+    model: str | None = None,
+    temperature: float | None = None,
+    max_tokens: int | None = None,
+    **limits,
+) -> tuple:
+    """(client_factory, response-cache namespace) for ``provider``:
+    the hermetic mock, or a live provider whose endpoint/model/
+    temperature are resolved ONCE on the driver (explicit args beat
+    OPENAI_MODEL/OPENAI_BASE_URL env) and pinned into both the
+    executor factory and the cache namespace — otherwise two runs with
+    different OPENAI_MODEL but no explicit model would share namespace
+    "openai::" and replay each other's cached answers. ``limits``:
+    provider_client_factory's rate-limit knobs."""
+    if provider == "mock":
+        return mock_client_factory, ""
+    import functools
+
+    resolved = resolve_provider_config(
+        provider, model=model, temperature=temperature, max_tokens=max_tokens
+    )
+    factory = functools.partial(
+        provider_client_factory,
+        provider,
+        model=resolved.model,
+        temperature=resolved.temperature,
+        max_tokens=resolved.max_tokens,
+        base_url=resolved.base_url,
+        **limits,
+    )
+    return factory, f"{provider}:{cache_namespace_for(resolved)}"
+
+
 def openai_client_factory() -> RateLimitedClient:
     """Back-compat alias for provider_client_factory("openai")."""
     return provider_client_factory("openai")

@@ -218,10 +218,7 @@ FROM (SELECT doc_id, {_MINHASH_SQL_COLS} FROM ({_SHINGLES_SQL}))
 # ---------------------------------------------------------------------------
 
 def _lsh_band_buckets(
-    spark: SparkSession,
-    sf_dir: str,
-    shingled: DataFrame | None = None,
-    scratch: list | None = None,
+    spark: SparkSession, sf_dir: str, shingled: DataFrame | None = None
 ) -> DataFrame:
     """The shared band-bucket table (doc_id, hashed shingles, band_id,
     key) behind BOTH pair builders — one definition, so a banding or
@@ -229,9 +226,10 @@ def _lsh_band_buckets(
     variants out of their shared oracle.
 
     ``shingled``: an already-built (and persisted) with_shingles frame
-    to reuse — the master keep-list builds the scan→split→shingle
-    pipeline ONCE and shares it across its LSH/SimHash/semantic lanes
-    instead of re-running it per lane (round-10 next-round candidate).
+    to reuse — master_history_state builds the scan→split→shingle
+    pipeline ONCE and shares it across the keep-list's LSH/SimHash/
+    semantic stores instead of re-running it per lane (round-10
+    next-round candidate).
 
     Verify payload is 64-bit shingle hashes, not the shingle strings:
     the intersection COUNT is hash-invariant (collision odds within one
@@ -258,7 +256,7 @@ def _lsh_band_buckets(
         *_minhash_cols(F.col("shingles")),
     )
     band0, band1 = _band_exprs()
-    out = (
+    return (
         sig.select(
             "doc_id",
             F.col("sh_hashed").alias("shingles"),
@@ -272,41 +270,36 @@ def _lsh_band_buckets(
         .select("doc_id", "shingles", "b.band_id", "b.key")
         .persist()
     )
-    if scratch is not None:
-        scratch.append(out)
-    return out
 
 
-def _attach_shingle_sets(cand: DataFrame, buckets: DataFrame) -> DataFrame:
+def _attach_shingle_sets(
+    cand: DataFrame, buckets_a: DataFrame, buckets_b: DataFrame
+) -> DataFrame:
     """``cand`` (doc_a, doc_b) + ``sh_a``/``sh_b`` hashed-shingle
-    arrays from the persisted bucket table's band-0 slice (one row
-    per doc — guide §2.3/§8 "decide with small rows, attach the heavy
-    payload once": the candidate join and the grid tiler move bare
-    8-byte ids; the shingle arrays cross the wire exactly once here,
-    instead of riding the in-bucket index window, both replicated
-    explode sides and the candidate dedup). Joins are pinned
+    arrays from each side's persisted bucket table, band-0 slice (one
+    row per doc — guide §2.3/§8 "decide with small rows, attach the
+    heavy payload once": the candidate join and the grid tiler move
+    bare 8-byte ids; the shingle arrays cross the wire exactly once
+    here, instead of riding the in-bucket index window, both
+    replicated explode sides and the candidate dedup). A self-join
+    passes the same table twice; the incremental capstone's cross
+    probe passes the delta's and the history's. Joins are pinned
     sort-merge for the pairgrid reasons: both sides are corpus-derived
     (candidates via explode, the shingle table corpus-sized), so a
     broadcast is never legitimate at scale and a shuffled-hash build
     is an unspillable per-partition map."""
-    sig = buckets.filter(F.col("band_id") == 0).select("doc_id", "shingles")
+
+    def side(buckets, suffix):
+        return buckets.filter(F.col("band_id") == 0).select(
+            F.col("doc_id").alias(f"doc_{suffix}"),
+            F.col("shingles").alias(f"sh_{suffix}"),
+        )
+
     return (
         cand.hint("merge")
-        .join(
-            sig.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("shingles").alias("sh_a"),
-            ),
-            "doc_a",
-        )
+        .join(side(buckets_a, "a"), "doc_a")
         .hint("merge")
-        .join(
-            sig.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("shingles").alias("sh_b"),
-            ),
-            "doc_b",
-        )
+        .join(side(buckets_b, "b"), "doc_b")
     )
 
 
@@ -325,6 +318,30 @@ def _jaccard_verify(pairs: DataFrame) -> DataFrame:
     )
 
 
+def _bucket_pairs(
+    left: DataFrame, right: DataFrame, keys: list[str], payload: tuple = ()
+) -> DataFrame:
+    """(doc_a, doc_b, {payload}_a, {payload}_b): one row per doc pair
+    sharing all ``keys`` in some bucket (deduped across buckets) — the
+    plain, un-tiled band join. ``left is right`` is a self-join and
+    keeps doc_a < doc_b; two different tables are a probe (the
+    incremental capstone's delta × history) and keep every hit."""
+    l, r = left.alias("l"), right.alias("r")
+    cond = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    if left is right:
+        cond.append(F.col("l.doc_id") < F.col("r.doc_id"))
+    return (
+        l.join(r, reduce(lambda x, y: x & y, cond))
+        .select(
+            F.col("l.doc_id").alias("doc_a"),
+            F.col("r.doc_id").alias("doc_b"),
+            *[F.col(f"l.{c}").alias(f"{c}_a") for c in payload],
+            *[F.col(f"r.{c}").alias(f"{c}_b") for c in payload],
+        )
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
 def dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate pairs via band-bucket equi-join (the shuffle key is
     the bucket — at 100 TB this is the only join that runs, never the
@@ -333,22 +350,8 @@ def dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify (_attach_shingle_sets).
     """
     buckets = _lsh_band_buckets(spark, sf_dir)
-    left = buckets.alias("l")
-    right = buckets.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    return _jaccard_verify(_attach_shingle_sets(cand, buckets))
+    cand = _bucket_pairs(buckets, buckets, ["band_id", "key"])
+    return _jaccard_verify(_attach_shingle_sets(cand, buckets, buckets))
 
 
 # ---------------------------------------------------------------------------
@@ -371,31 +374,17 @@ def dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 LSH_GRID_BLOCK = 64
 
 
-def dedup_lsh_pairs_grid(
-    spark: SparkSession,
-    sf_dir: str,
-    shingled: DataFrame | None = None,
-    buckets: DataFrame | None = None,
-    scratch: list | None = None,
-) -> DataFrame:
-    # ``buckets``: a prebuilt (and persisted) _lsh_band_buckets table
-    # — the incremental capstone derives each corpus slice's signature
-    # store ONCE and feeds both its internal pair join and the cross
-    # probe from it, instead of re-running scan→shingle→minhash per
-    # consumer. ``scratch`` collects frames THIS call persists so a
-    # staged caller can release exactly this lane's state.
+def _lsh_grid_cand(buckets: DataFrame, scratch: list | None = None) -> DataFrame:
+    """(doc_a, doc_b): the band-bucket self-join through the shared
+    grid tiler — the LSH lane's one candidate build. The tiler moves
+    bare ids; shingle arrays attach once at the verify (guide §2.3/§8
+    — they no longer ride the in-bucket index window, the two
+    replicated explode sides, the cell sort-merge sorts, or the
+    candidate dedup exchange). ``scratch`` collects the tiler's
+    persisted index table."""
     from finmapreduce_spark.operators.pairgrid import grid_self_pairs
 
-    if buckets is None:
-        buckets = _lsh_band_buckets(
-            spark, sf_dir, shingled=shingled, scratch=scratch
-        )
-
-    # The tiler moves bare ids; shingle arrays attach once at the
-    # verify (guide §2.3/§8 — they no longer ride the in-bucket index
-    # window, the two replicated explode sides, the cell sort-merge
-    # sorts, or the candidate dedup exchange).
-    cand = grid_self_pairs(
+    return grid_self_pairs(
         buckets.select("doc_id", "band_id", "key"),
         ["band_id", "key"],
         "doc_id",
@@ -406,7 +395,13 @@ def dedup_lsh_pairs_grid(
         F.col("doc_id_a").alias("doc_a"),
         F.col("doc_id_b").alias("doc_b"),
     )
-    return _jaccard_verify(_attach_shingle_sets(cand, buckets))
+
+
+def dedup_lsh_pairs_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    buckets = _lsh_band_buckets(spark, sf_dir)
+    return _jaccard_verify(
+        _attach_shingle_sets(_lsh_grid_cand(buckets), buckets, buckets)
+    )
 
 
 DEDUP_LSH_ORACLE = f"""
@@ -609,13 +604,10 @@ assert SIMHASH_PAIR_BITS % SIMHASH_PAIR_BANDS == 0
 
 
 def _simhash_pair_bands(
-    spark: SparkSession,
-    sf_dir: str,
-    shingled: DataFrame | None = None,
-    scratch: list | None = None,
+    spark: SparkSession, sf_dir: str, shingled: DataFrame | None = None
 ) -> DataFrame:
     # ``shingled``: an already-built AND PERSISTED with_shingles frame
-    # to reuse (master keep-list lane sharing). Persisted matters
+    # to reuse (master_history_state's lane sharing). Persisted matters
     # here: the NULL-text filter below then reads the cache instead
     # of re-deriving the projection (see the pushdown note).
     # Features are the distinct 3-word SHINGLES, not words: on a
@@ -679,7 +671,7 @@ def _simhash_pair_bands(
     # tables): the cache lives behind the returned lazy plan, so the
     # caller clears it via spark.catalog.clearCache() when done —
     # bench.py does after every query.
-    bands = (
+    return (
         sig.select(
             "doc_id",
             "sim",
@@ -700,29 +692,12 @@ def _simhash_pair_bands(
         .select("doc_id", "sim", F.col("b.k").alias("k"), F.col("b.bv").alias("bv"))
         .persist()
     )
-    if scratch is not None:
-        scratch.append(bands)
-    return bands
 
 
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bands = _simhash_pair_bands(spark, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.k") == F.col("b.k"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.sim").alias("sim_a"),
-            F.col("b.sim").alias("sim_b"),
-        )
-        .distinct()  # a pair matching in >1 band must count once
-    )
+def _hamming_verify(cand: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming) for the (doc_a, doc_b, sim_a, sim_b)
+    candidates within SIMHASH_HAMMING_MAX — one xor+popcount per
+    pair."""
     ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("long")
     return (
         cand.withColumn("hamming", ham)
@@ -731,10 +706,15 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    bands = _simhash_pair_bands(spark, sf_dir)
+    # deduped: a pair matching in >1 band must count once
+    return _hamming_verify(_bucket_pairs(bands, bands, ["k", "bv"], ("sim",)))
+
+
 def dedup_simhash_pairs_grid(
     spark: SparkSession,
     sf_dir: str,
-    shingled: DataFrame | None = None,
     bands: DataFrame | None = None,
     scratch: list | None = None,
 ) -> DataFrame:
@@ -742,14 +722,13 @@ def dedup_simhash_pairs_grid(
     band self-join goes through the shared grid tiler
     (operators/pairgrid.py) so a band value shared by a boilerplate
     cluster cannot funnel its pair product through one task. Same
-    pairs, same oracle. ``bands``/``scratch``: prebuilt signature
-    store / persisted-frame collector (see dedup_lsh_pairs_grid)."""
+    pairs, same oracle. ``bands``: a prebuilt signature store (the
+    master keep-list's, from master_history_state); ``scratch``
+    collects the tiler's persisted index table."""
     from finmapreduce_spark.operators.pairgrid import grid_self_pairs
 
     if bands is None:
-        bands = _simhash_pair_bands(
-            spark, sf_dir, shingled=shingled, scratch=scratch
-        )
+        bands = _simhash_pair_bands(spark, sf_dir)
     cand = grid_self_pairs(
         bands, ["k", "bv"], "doc_id", ["sim"], scratch=scratch
     ).select(
@@ -758,12 +737,7 @@ def dedup_simhash_pairs_grid(
         F.col("sim_a"),
         F.col("sim_b"),
     )
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("long")
-    return (
-        cand.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
-        .select("doc_a", "doc_b", "hamming")
-    )
+    return _hamming_verify(cand)
 
 
 _SIMHASH_PAIR_SIG_SQL = " + ".join(
@@ -1311,10 +1285,8 @@ keepers AS (
 def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     hashed, keepers = _content_hash_keepers(docs)
-    exact_losers = (
-        hashed.join(keepers, "content_hash")
-        .filter(F.col("doc_id") != F.col("keeper"))
-        .select("doc_id")
+    exact_losers = _exact_pairs(hashed, keepers).select(
+        F.col("doc_b").alias("doc_id")
     )
     near_losers = (
         dedup_cluster_canonical(spark, sf_dir)
@@ -2276,8 +2248,8 @@ SEMANTIC_COSINE_MIN = 0.99
 
 def _semantic_buckets(shingled: DataFrame) -> DataFrame:
     """(doc_id, band_id, key): the semantic lane's MinHash band
-    buckets over an already-shingled frame — shared by the batch lane
-    and the incremental capstone's cross probe."""
+    buckets over an already-shingled frame — the LSH lane's band keys
+    without the shingle payload."""
     sig = shingled.select("doc_id", *_minhash_cols(F.col("shingles")))
     band0, band1 = _band_exprs()
     return sig.select(
@@ -2294,7 +2266,7 @@ def _semantic_buckets(shingled: DataFrame) -> DataFrame:
 def _hashing_bow_embeddings(docs: DataFrame) -> DataFrame:
     """(doc_id, e, nm): hashing-BoW embedding + L2 norm — the
     semantic lane's verify features, one definition for the batch
-    lane and the incremental cross probe."""
+    lane and the master keep-list's signature store."""
     from finmapreduce_spark.functions.scoring import embed_text_udf
 
     return docs.select(
@@ -2302,61 +2274,14 @@ def _hashing_bow_embeddings(docs: DataFrame) -> DataFrame:
     ).withColumn("nm", F.sqrt(_dot(F.col("e"), F.col("e"))))
 
 
-def dedup_semantic_verify(
-    spark: SparkSession,
-    sf_dir: str,
-    shingled: DataFrame | None = None,
-    buckets: DataFrame | None = None,
-    emb: DataFrame | None = None,
-    scratch: list | None = None,
-    cand: DataFrame | None = None,
+def _cosine_verify(
+    cand: DataFrame, emb_a: DataFrame, emb_b: DataFrame
 ) -> DataFrame:
-    """Band-bucket candidates ∘ hashing-BoW cosine gate.
-
-    Scale: candidate generation is the same banded equi-join as
-    dedup_lsh_pairs (the only join that runs at 100 TB); embedding is
-    one narrow Arrow map over the corpus, persisted so the pair join's
-    two sides don't re-run the UDF; the verify is a 64-element fold
-    per candidate. The embedding's integer-valued components keep the
-    cosine FP-exact, so the DuckDB oracle reconstructs the whole DAG
-    — candidates AND model output — relationally."""
-    # ``buckets``/``emb``: prebuilt signature stores (the incremental
-    # capstone's master_history_state shape); ``scratch`` collects the
-    # frames THIS call persists (staged-lane lifecycle). ``cand``:
-    # prebuilt candidate id pairs — the semantic band keys are the
-    # LSH lane's by shared definition, so a keep-list composition
-    # that already generated the LSH candidates passes them here and
-    # this lane runs the cosine gate only.
-    docs = (
-        shingled
-        if shingled is not None
-        else with_shingles(_docs(spark, sf_dir))
-    )
-    if cand is None:
-        if buckets is None:
-            buckets = _semantic_buckets(docs)
-        cand = (
-            buckets.alias("l")
-            .join(
-                buckets.alias("r"),
-                (F.col("l.band_id") == F.col("r.band_id"))
-                & (F.col("l.key") == F.col("r.key"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
-            )
-            .select(
-                F.col("l.doc_id").alias("doc_a"),
-                F.col("r.doc_id").alias("doc_b"),
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-    # when a shared shingled frame is passed it still carries text,
-    # and reading it hits the caller's cache instead of a fourth
-    # corpus scan
-    if emb is None:
-        emb = _hashing_bow_embeddings(docs).persist()
-        if scratch is not None:
-            scratch.append(emb)
-    a, b = emb.alias("a"), emb.alias("b")
+    """(doc_a, doc_b, cosine) for the (doc_a, doc_b) candidates whose
+    hashing-BoW cosine passes SEMANTIC_COSINE_MIN — ``emb_a``/``emb_b``
+    are each side's (doc_id, e, nm) table (the same one for a
+    self-join). The verify is a 64-element fold per candidate."""
+    a, b = emb_a.alias("a"), emb_b.alias("b")
     pairs = (
         cand.join(a, cand.doc_a == F.col("a.doc_id"))
         .join(b, cand.doc_b == F.col("b.doc_id"))
@@ -2371,6 +2296,24 @@ def dedup_semantic_verify(
     return (
         pairs.select("doc_a", "doc_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= SEMANTIC_COSINE_MIN)
+    )
+
+
+def dedup_semantic_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Band-bucket candidates ∘ hashing-BoW cosine gate.
+
+    Scale: candidate generation is the same banded equi-join as
+    dedup_lsh_pairs (the only join that runs at 100 TB); embedding is
+    one narrow Arrow map over the corpus, persisted so the pair join's
+    two sides don't re-run the UDF. The embedding's integer-valued
+    components keep the cosine FP-exact, so the DuckDB oracle
+    reconstructs the whole DAG — candidates AND model output —
+    relationally."""
+    docs = with_shingles(_docs(spark, sf_dir))
+    buckets = _semantic_buckets(docs)
+    emb = _hashing_bow_embeddings(docs).persist()
+    return _cosine_verify(
+        _bucket_pairs(buckets, buckets, ["band_id", "key"]), emb, emb
     )
 
 
@@ -3526,130 +3469,82 @@ def dedup_master_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume-sized; CC is the O(log n)-round star algorithm. This is
     the plan shape a production curation run actually executes."""
     docs = _docs(spark, sf_dir)
-    labels = connected_components(_master_edge_union(spark, sf_dir, docs))
+    state = master_history_state(spark, sf_dir, docs)
+    labels = connected_components(_master_edge_union(spark, sf_dir, docs, state))
     losers = labels.filter(F.col("doc_id") != F.col("label")).select("doc_id")
     return docs.select("doc_id", "lang").join(losers, "doc_id", "left_anti")
+
+
+def _master_lanes(
+    spark: SparkSession,
+    sf_dir: str,
+    docs: DataFrame,
+    state: dict,
+    scratch: list | None = None,
+) -> list:
+    """The capstone's five edge lanes as ``[(name, build)]``, in the
+    fixed order lsh, semantic, simhash, exact, substring — the ONE
+    definition the inline, staged and incremental keep-lists compose.
+    ``build(lane_scratch)`` returns the lane's (doc_a, doc_b, ...)
+    pair table over ``docs``, reading its signatures from ``state``
+    (master_history_state over the same ``docs``); ``lane_scratch``
+    collects the frames that lane alone persists (the grid tilers'
+    index tables), so a staged caller can release one lane's state
+    while its sibling is still in flight.
+
+    The MinHash-LSH and semantic lanes share ONE grid-tiled candidate
+    build: their band keys are identical by shared definition
+    (_semantic_buckets is the LSH bucket table without the payload),
+    so the two lanes differ only in the verify gate. It is persisted
+    (both verifies read it) and appended to ``scratch`` after its
+    tiler index — last, so a staged caller can materialize it up
+    front."""
+    lsh_b, emb = state["lsh_buckets"], state["embeddings"]
+    cand = _lsh_grid_cand(lsh_b, scratch).persist()
+    if scratch is not None:
+        scratch.append(cand)
+    return [
+        ("lsh", lambda s: _jaccard_verify(
+            _attach_shingle_sets(cand, lsh_b, lsh_b))),
+        ("semantic", lambda s: _cosine_verify(cand, emb, emb)),
+        ("simhash", lambda s: dedup_simhash_pairs_grid(
+            spark, sf_dir, bands=state["simhash_bands"], scratch=s)),
+        ("exact", lambda s: _exact_pairs(state["hashed"], state["keepers"])),
+        ("substring", lambda s: exact_substring_pairs(
+            docs, fps=state["substring_fps"], scratch=s)),
+    ]
+
+
+def _exact_pairs(hashed: DataFrame, keepers: DataFrame) -> DataFrame:
+    """(doc_a = keeper, doc_b): every doc whose content hash has a
+    different min-id keeper. Null hashes drop out of the equi-join."""
+    return (
+        hashed.join(keepers, "content_hash")
+        .filter(F.col("doc_id") != F.col("keeper"))
+        .select(F.col("keeper").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+    )
 
 
 def _master_edge_union(
     spark: SparkSession,
     sf_dir: str,
     docs: DataFrame,
-    state: dict | None = None,
+    state: dict,
     scratch: list | None = None,
 ) -> DataFrame:
-    """The capstone's five-signal edge union over ``docs`` —
-    corpus-subset-parametric so the incremental twin can run it over
-    the history and delta slices independently.
-
-    ``state``: this slice's prebuilt signature stores
-    (master_history_state over the SAME ``docs``) — the incremental
-    capstone derives the corpus signatures once and feeds this pair
-    join (and, on the production probe path, the cross probe) from
-    them (round-15: the signature pipeline used to run twice per
-    slice). Pair semantics are identical either way: each lane
-    consumes exactly the table it would have derived itself.
+    """The capstone's five-signal edge union over ``docs``: the lane
+    table (_master_lanes) unioned and deduped in one lazy plan.
 
     ``scratch``: collects every frame the lanes persist beyond the
-    ``state`` tables themselves (the grid tilers' indexed bucket
-    tables), so a caller that materializes the union once can release
-    this call's entire footprint mid-query (the staged-lane
-    lifecycle)."""
-    if state is not None:
-        hashed, keepers = state["hashed"], state["keepers"]
-    else:
-        hashed, keepers = _content_hash_keepers(docs)
-    exact_edges = (
-        hashed.join(keepers, "content_hash")
-        .filter(F.col("doc_id") != F.col("keeper"))
-        .select(
-            F.col("keeper").alias("doc_a"), F.col("doc_id").alias("doc_b")
-        )
-    )
-    from finmapreduce_spark.operators.pairgrid import grid_self_pairs
-
-    def _banded_cand(buckets):
-        """ONE grid-tiled candidate build shared by the MinHash-LSH
-        and semantic lanes — their band keys are identical by shared
-        definition (round-16; see master_history_state), so the two
-        lanes differ only in the verify gate. Persisted: both
-        verifies read it."""
-        c = grid_self_pairs(
-            buckets.select("doc_id", "band_id", "key"),
-            ["band_id", "key"],
-            "doc_id",
-            [],
-            block=LSH_GRID_BLOCK,
-            scratch=scratch,
-        ).select(
-            F.col("doc_id_a").alias("doc_a"),
-            F.col("doc_id_b").alias("doc_b"),
-        ).persist()
-        if scratch is not None:
-            scratch.append(c)
-        return c
-
-    if state is not None:
-        lsh_b = state["lsh_buckets"]
-        cand = _banded_cand(lsh_b)
-        return (
-            exact_edges.unionByName(
-                _jaccard_verify(
-                    _attach_shingle_sets(cand, lsh_b)
-                ).select("doc_a", "doc_b")
-            )
-            .unionByName(
-                dedup_simhash_pairs_grid(
-                    spark,
-                    sf_dir,
-                    bands=state["simhash_bands"],
-                    scratch=scratch,
-                ).select("doc_a", "doc_b")
-            )
-            .unionByName(
-                dedup_semantic_verify(
-                    spark,
-                    sf_dir,
-                    emb=state["embeddings"],
-                    cand=cand,
-                ).select("doc_a", "doc_b")
-            )
-            .unionByName(
-                exact_substring_pairs(
-                    docs, fps=state["substring_fps"], scratch=scratch
-                ).select("doc_a", "doc_b")
-            )
-            .distinct()
-        )
-    # ONE scan→split→shingle pipeline shared by the LSH, SimHash and
-    # semantic lanes (round-10 candidate (a): each lane used to
-    # rebuild it — three extra corpus scans at 100 TB), and ONE
-    # bucket table + candidate build shared by the LSH and semantic
-    # lanes. Persisted so the lanes' downstream derivations all read
-    # the cache; lifecycle is caller-owned per the catalog-wide
-    # clearCache contract.
-    shingled = with_shingles(docs).persist()
-    buckets = _lsh_band_buckets(spark, sf_dir, shingled=shingled)
-    cand = _banded_cand(buckets)
-    return (
-        exact_edges.unionByName(
-            _jaccard_verify(
-                _attach_shingle_sets(cand, buckets)
-            ).select("doc_a", "doc_b")
-        )
-        .unionByName(
-            dedup_simhash_pairs_grid(
-                spark, sf_dir, shingled=shingled
-            ).select("doc_a", "doc_b")
-        )
-        .unionByName(
-            dedup_semantic_verify(
-                spark, sf_dir, shingled=shingled, cand=cand
-            ).select("doc_a", "doc_b")
-        )
-        .unionByName(exact_substring_pairs(docs).select("doc_a", "doc_b"))
-        .distinct()
-    )
+    ``state`` tables themselves (the shared candidates and the grid
+    tilers' index tables), so a caller that materializes the union
+    once can release this call's entire footprint mid-query (the
+    incremental keep-list does, before its CC phases)."""
+    lanes = _master_lanes(spark, sf_dir, docs, state, scratch)
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [build(scratch).select("doc_a", "doc_b") for _, build in lanes],
+    ).distinct()
 
 
 DEDUP_MASTER_KEEP_ORACLE = f"""
@@ -3693,13 +3588,11 @@ QUERIES.update(
 )
 
 
-def dedup_master_keep_list_staged(
-    spark: SparkSession, sf_dir: str, stage_dir: str | None = None
-) -> DataFrame:
+def dedup_master_keep_list_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The master keep-list with each edge lane MATERIALIZED (at most
     two lanes in flight) before the union+CC — the shape a production
-    curation run takes at full corpus scale, for three reasons found
-    by the round-14/15 scale studies:
+    curation run takes at full corpus scale, for two reasons found by
+    the round-14/15 scale studies:
 
     1. Scratch-disk ceiling: the inline composition keeps all five
        lanes' shuffle files live inside ONE distinct() job, and at
@@ -3715,92 +3608,44 @@ def dedup_master_keep_list_staged(
        tables, so every downstream join plans from REAL sizes instead
        of explode-underestimated pipeline estimates (the 12.9 GiB
        mis-broadcast class).
-    3. Reusable artifacts: per-signal pair tables are exactly what an
-       incremental curation pipeline diffs, audits, and re-clusters
-       without recomputing signatures.
 
-    Result-identical to dedup_master_keep_list (same oracle): lanes,
-    union-distinct, CC, and the anti-join are unchanged — only the
-    materialization boundary moves.
-
-    ``stage_dir=None`` (the default catalog/bench path) hands each
-    lane's pair table to the CC phase as an eager persist+count
-    instead of a parquet round-trip (round-16, guide §5: the cheaper
-    intra-query handoff when the artifact itself is not wanted, and
-    handle-owned release stays trivially safe under the concurrent
-    lane scheduling). Pass ``stage_dir`` to keep the production
-    parquet artifacts (reason 3 above).
-    """
+    Result-identical to dedup_master_keep_list (same oracle): the
+    same lane table (_master_lanes), union-distinct, CC and anti-join
+    — only the materialization boundary moves. Each lane's pair table
+    reaches the CC phase as an eager persist+count (round-16, guide
+    §5: the cheap intra-query handoff; handle-owned release stays
+    trivially safe under the concurrent lane scheduling)."""
     import gc as _gc
+    from concurrent.futures import ThreadPoolExecutor
 
     docs = _docs(spark, sf_dir)
-
-    def exact_lane():
-        hashed, keepers = _content_hash_keepers(docs)
-        return (
-            hashed.join(keepers, "content_hash")
-            .filter(F.col("doc_id") != F.col("keeper"))
-            .select(
-                F.col("keeper").alias("doc_a"), F.col("doc_id").alias("doc_b")
-            )
-        )
-
-    # ONE scan→split→shingle pipeline shared by the LSH/SimHash/
-    # semantic lanes, exactly as the inline _master_edge_union does
-    # (round-15: the first staged version rebuilt it per lane — three
-    # corpus scans + three shingle builds, the single largest cost of
-    # the staged composition at sf0.1). Staging's scratch-relief
-    # property survives: each lane's OWN persisted state (signature
-    # tables, grid index) is released via ``scratch`` right after its
-    # pair table lands in parquet, so concurrent-shuffle peak is still
-    # max(lane), and only the shared shingle cache — ~corpus-sized,
-    # MEMORY_AND_DISK, strictly less than what the inline composition
-    # holds — spans the three signature lanes. It is dropped before
-    # the scratch-heaviest lane (substring) starts.
-    shingled = with_shingles(docs).persist()
-    shared_scratch: list = []
-    # ONE bucket table + ONE grid candidate build shared by the LSH
-    # and semantic lanes (their band keys are identical by shared
-    # definition — see master_history_state); released with the other
-    # shared signature state once its consumer lanes are done.
-    from finmapreduce_spark.operators.pairgrid import grid_self_pairs
-
-    buckets = _lsh_band_buckets(spark, sf_dir, shingled=shingled)
-    cand = grid_self_pairs(
-        buckets.select("doc_id", "band_id", "key"),
-        ["band_id", "key"],
-        "doc_id",
-        [],
-        block=LSH_GRID_BLOCK,
-        scratch=shared_scratch,
-    ).select(
-        F.col("doc_id_a").alias("doc_a"),
-        F.col("doc_id_b").alias("doc_b"),
-    ).persist()
-    # built once, up front: left lazy, the two lanes that read it would
-    # both block on its first build, each under its own lane label
+    # ONE signature store shared by every lane, exactly as the inline
+    # composition (round-15: the first staged version rebuilt the
+    # shingle pipeline per lane — the single largest cost of the
+    # staged composition at sf0.1). ``shared`` holds the shingle
+    # cache, the LSH/semantic candidate table and its tiler index.
+    shared: list = []
+    state = master_history_state(spark, sf_dir, docs, scratch=shared)
+    lanes = _master_lanes(spark, sf_dir, docs, state, shared)
+    # The shared candidates (appended last) are built once, up front,
+    # with the shingle cache and tiler index beneath them: left lazy,
+    # the two lanes that read them would both block on their first
+    # build, each under its own lane label.
     spark.sparkContext.setJobDescription("keep-list stage: shared candidates")
-    cand.count()
+    shared[-1].count()
     spark.sparkContext.setJobDescription(None)
 
     def run_lane(item):
         """Build + materialize one lane, then release ITS OWN scratch
-        (blocking). The handoff is parquet when stage_dir is given
-        (the production artifact), an eager persist+count otherwise —
-        the pair table is handle-owned, so release needs no
-        checkpoint-id attribution and stays safe under the
+        (blocking). The pair table is handle-owned, so release needs
+        no checkpoint-id attribution and stays safe under the
         concurrent-lane scheduling below. Job descriptions are
         thread-local, so each in-flight lane is labelled in the UI."""
         name, build = item
         spark.sparkContext.setJobDescription(f"keep-list stage: {name}")
         scratch: list = []
-        df = build(scratch).select("doc_a", "doc_b")
-        if stage_dir is not None:
-            df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-            out = spark.read.parquet(f"{stage_dir}/{name}")
-        else:
-            out = df.persist()
-            out.count()
+        out = build(scratch).select("doc_a", "doc_b").persist()
+        out.count()
         for fr in scratch:
             fr.unpersist(True)
         spark.sparkContext.setJobDescription(None)
@@ -3814,74 +3659,32 @@ def dedup_master_keep_list_staged(
     # Peak scratch becomes max(adjacent lane pair) instead of
     # max(lane) — still far under the sum(lanes) that ENOSPC'd the
     # r14 100× inline composition; the pool size is the §2.6
-    # recommendation, not a core-count tunable. Per-lane scratch
-    # lists keep a lane's release from touching an in-flight
-    # sibling's state; the shared signature tables (shingles,
-    # buckets, candidates) are released at the group boundaries
-    # below.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        first = list(
-            pool.map(
-                run_lane,
-                [
-                    (
-                        "lsh",
-                        lambda s: _jaccard_verify(
-                            _attach_shingle_sets(cand, buckets)
-                        ),
-                    ),
-                    (
-                        "semantic",
-                        lambda s: dedup_semantic_verify(
-                            spark,
-                            sf_dir,
-                            shingled=shingled,
-                            cand=cand,
-                            scratch=s,
-                        ),
-                    ),
-                    (
-                        "simhash",
-                        lambda s: dedup_simhash_pairs_grid(
-                            spark, sf_dir, shingled=shingled, scratch=s
-                        ),
-                    ),
-                ],
-            )
-        )
-    for fr in (cand, buckets, shingled, *shared_scratch):
-        fr.unpersist(True)
-    _gc.collect()
-    spark.sparkContext._jvm.System.gc()
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        second = list(
-            pool.map(
-                run_lane,
-                [
-                    ("exact", lambda s: exact_lane()),
-                    (
-                        "substring",
-                        lambda s: exact_substring_pairs(docs, scratch=s),
-                    ),
-                ],
-            )
-        )
-    _gc.collect()
-    spark.sparkContext._jvm.System.gc()
-    staged = first + second
+    # recommendation, not a core-count tunable. Two groups: the three
+    # shingle-signature lanes, then exact + substring (raw-text
+    # signatures). The first group's signature state is released
+    # before the scratch-heaviest lane (substring) starts.
+    first_done = (
+        *shared,
+        *(state[k] for k in ("lsh_buckets", "embeddings", "simhash_bands")),
+    )
+    staged = []
+    for group, done in ((lanes[:3], first_done), (lanes[3:], state.values())):
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            staged += pool.map(run_lane, group)
+        for fr in done:
+            fr.unpersist(True)
+        _gc.collect()
+        spark.sparkContext._jvm.System.gc()
     edges = reduce(lambda a, b: a.unionByName(b), staged).distinct()
     labels = connected_components(edges)
     losers = labels.filter(F.col("doc_id") != F.col("label")).select("doc_id")
     out = docs.select("doc_id", "lang").join(losers, "doc_id", "left_anti")
-    if stage_dir is None:
-        # CC's output is checkpoint-backed; the pair-table caches feed
-        # nothing in the returned plan. Lineage is intact (persist,
-        # not checkpoint), so this release is safe even against a
-        # late re-read.
-        for df in staged:
-            df.unpersist()
+    # CC's output is checkpoint-backed; the pair-table caches feed
+    # nothing in the returned plan. Lineage is intact (persist, not
+    # checkpoint), so this release is safe even against a late
+    # re-read.
+    for df in staged:
+        df.unpersist()
     return out
 
 
@@ -3898,26 +3701,31 @@ def master_history_state(
     spark: SparkSession, sf_dir: str, hist: DataFrame,
     scratch: list | None = None,
 ) -> dict:
-    """The per-lane signature stores the incremental capstone probes —
-    the PERSISTABLE "previous run" state (each value is a DataFrame in
-    an existing store schema; a production pipeline writes these to
-    parquet next to the staged pair tables and the label table, and
-    per-ingest cost then depends on the DELTA only).
+    """The per-lane signature stores every master keep-list lane reads
+    — and the PERSISTABLE "previous run" state the incremental
+    capstone probes (each value is a DataFrame in an existing store
+    schema; a production pipeline writes these to parquet next to the
+    staged pair tables and the label table, and per-ingest cost then
+    depends on the DELTA only).
 
     Keys: ``hashed`` (doc_id → content_hash), ``keepers``
     (content_hash → min-id keeper), ``lsh_buckets``
     (band_signature_table / _lsh_band_buckets schema), ``simhash_bands``
-    (doc_id, sim, k, bv), ``semantic_buckets`` (doc_id, band_id, key),
-    ``embeddings`` (doc_id, e, nm), ``substring_fps`` (doc_id, fp —
-    substring_fp_table, already the streaming store schema).
+    (doc_id, sim, k, bv), ``embeddings`` (doc_id, e, nm),
+    ``substring_fps`` (doc_id, fp — substring_fp_table, already the
+    streaming store schema). The semantic lane has no store of its
+    own: its band keys ARE the LSH lane's (_semantic_buckets uses the
+    identical _minhash_cols + _band_exprs over the same shingles), so
+    it reads ``lsh_buckets`` (round-16, guide §1.2 "don't compute
+    things twice").
 
-    Every table is persisted: the incremental capstone reads each one
-    from BOTH its slice-internal pair join (_master_edge_union with
-    ``state=``) and the cross probe — round-15 measurement: deriving
-    the slice signatures once here instead of once per consumer
-    (shingle pipeline ×3, minhash/simhash votes ×2, embedding UDF ×2,
-    winnow map ×2) was the single largest cost of the incremental
-    lane. Lifecycle is caller-owned (clearCache), catalog-wide.
+    Every table is persisted: the stores are derived once from ONE
+    shingle pipeline and read by several consumers (both sides of a
+    pair join, the cross probe) — round-15 measurement: deriving the
+    signatures once here instead of once per consumer (shingle
+    pipeline ×3, minhash/simhash votes ×2, embedding UDF ×2, winnow
+    map ×2) was the single largest cost of the incremental lane.
+    Lifecycle is caller-owned (clearCache), catalog-wide.
 
     ``scratch``: if given, the persisted shingle table the stores are
     derived from (not itself a store) is appended to it, so a caller
@@ -3926,23 +3734,13 @@ def master_history_state(
     if scratch is not None:
         scratch.append(sh_hist)
     hashed, keepers = _content_hash_keepers(hist)
-    lsh_b = _lsh_band_buckets(spark, sf_dir, shingled=sh_hist)
     return {
         "hashed": hashed.persist(),
         "keepers": keepers.persist(),
-        "lsh_buckets": lsh_b,
+        "lsh_buckets": _lsh_band_buckets(spark, sf_dir, shingled=sh_hist),
         "simhash_bands": _simhash_pair_bands(
             spark, sf_dir, shingled=sh_hist
         ),
-        # The semantic lane's band keys ARE the LSH lane's
-        # (_semantic_buckets uses the identical _minhash_cols +
-        # _band_exprs over the same shingles) — derive the store as a
-        # projection of the persisted LSH bucket table instead of
-        # re-running the whole minhash pass (round-16, guide §1.2
-        # "don't compute things twice"; value-identical by shared
-        # definition, and _master_edge_union shares the candidate
-        # pair build between the two lanes for the same reason).
-        "semantic_buckets": lsh_b.select("doc_id", "band_id", "key"),
         "embeddings": _hashing_bow_embeddings(sh_hist).persist(),
         "substring_fps": substring_fp_table(_substring_base(hist)).persist(),
     }
@@ -3954,7 +3752,6 @@ def _master_cross_edges(
     delta: DataFrame,
     hist: DataFrame,
     state: dict | None = None,
-    delta_state: dict | None = None,
 ) -> DataFrame:
     """Delta×history edges for every capstone signal: each lane's
     pair criterion is a pure pairwise function of per-doc signatures
@@ -3963,11 +3760,15 @@ def _master_cross_edges(
     + gram verify), so probing the delta's signature tables against
     the history's finds exactly the cross pairs the full-corpus lane
     join would — the decomposition the incremental capstone rests on.
+    The probes are the plain band joins of the batch lanes with one
+    table per side; the verifies are the batch lanes' own checks.
 
     ``state``: prebuilt history stores (master_history_state) — the
     production path, where history signatures were persisted by the
     previous run and only the delta derives signatures this ingest.
     Omitted, they are derived here (the self-contained catalog path).
+    The delta's stores always come from master_history_state over
+    ``delta``.
 
     Scale: every probe is the banded/fingerprint equi-join of its
     batch lane with the DELTA on the build-friendly side — per-ingest
@@ -3979,124 +3780,14 @@ def _master_cross_edges(
     text.)"""
     if state is None:
         state = master_history_state(spark, sf_dir, hist)
-    # ``delta_state``: the delta slice's prebuilt signature stores
-    # (master_history_state over ``delta``) — shared with the delta's
-    # internal edge union by the incremental capstone so the delta
-    # signatures too are derived exactly once per ingest.
-    if delta_state is not None:
-        d_hashed = delta_state["hashed"]
-        ld = delta_state["lsh_buckets"]
-        sd = delta_state["simhash_bands"]
-        emb_d = delta_state["embeddings"]
-        delta_fps = delta_state["substring_fps"]
-    else:
-        sh_delta = with_shingles(delta).persist()
-        d_hashed = _content_hash_keepers(delta)[0]
-        ld = _lsh_band_buckets(spark, sf_dir, shingled=sh_delta)
-        sd = _simhash_pair_bands(spark, sf_dir, shingled=sh_delta)
-        emb_d = _hashing_bow_embeddings(sh_delta).persist()
-        delta_fps = None
-
-    # exact: connect every delta doc to the history keeper of its
-    # content hash (null hashes drop out of the equi-join, matching
-    # the batch lane's null-unsafe join semantics)
-    exact_cross = d_hashed.join(state["keepers"], "content_hash").select(
-        F.col("keeper").alias("doc_a"), F.col("doc_id").alias("doc_b")
+    dstate = master_history_state(spark, sf_dir, delta)
+    ld, lh = dstate["lsh_buckets"], state["lsh_buckets"]
+    # The semantic band keys are the LSH lane's by shared definition
+    # (see master_history_state), so one probe feeds both verifies.
+    cand = _bucket_pairs(ld, lh, ["band_id", "key"])
+    sim_cand = _bucket_pairs(
+        dstate["simhash_bands"], state["simhash_bands"], ["k", "bv"], ("sim",)
     )
-
-    # MinHash/LSH: band-key probe + the lane's exact Jaccard verify.
-    # The probe join moves ids only; the hashed-shingle verify
-    # payloads attach once afterwards from each side's band-0 store
-    # slice (round-16, the cross-probe twin of _attach_shingle_sets —
-    # the arrays used to ride the probe exchange and the candidate
-    # dedup for every band hit).
-    lh = state["lsh_buckets"]
-    lsh_cand = (
-        ld.alias("l")
-        .join(
-            lh.alias("r"),
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.key") == F.col("r.key")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    lsh_pairs = (
-        lsh_cand.hint("merge")
-        .join(
-            ld.filter(F.col("band_id") == 0).select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("shingles").alias("sh_a"),
-            ),
-            "doc_a",
-        )
-        .hint("merge")
-        .join(
-            lh.filter(F.col("band_id") == 0).select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("shingles").alias("sh_b"),
-            ),
-            "doc_b",
-        )
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter / (F.size("sh_a") + F.size("sh_b") - inter)
-    lsh_cross = (
-        lsh_pairs.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b")
-    )
-
-    # SimHash: band probe + popcount verify
-    sh_ = state["simhash_bands"]
-    sim_cand = (
-        sd.alias("l")
-        .join(
-            sh_.alias("r"),
-            (F.col("l.k") == F.col("r.k"))
-            & (F.col("l.bv") == F.col("r.bv")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.col("l.sim").alias("sim_a"),
-            F.col("r.sim").alias("sim_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("long")
-    sim_cross = (
-        sim_cand.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
-        .select("doc_a", "doc_b")
-    )
-
-    # semantic: MinHash-band probe + hashing-BoW cosine gate. The
-    # semantic band keys are the LSH lane's by shared definition
-    # (see master_history_state), so the probe's candidate id pairs
-    # ARE lsh_cand — reuse them instead of re-joining the projected
-    # semantic store.
-    sem_cand = lsh_cand
-    emb_h = state["embeddings"]
-    sem_pairs = sem_cand.join(
-        emb_d.alias("a"), sem_cand.doc_a == F.col("a.doc_id")
-    ).join(emb_h.alias("b"), sem_cand.doc_b == F.col("b.doc_id"))
-    cos = F.round(
-        F.when(
-            F.col("a.nm") * F.col("b.nm") > 0,
-            _dot(F.col("a.e"), F.col("b.e")) / (F.col("a.nm") * F.col("b.nm")),
-        ).otherwise(F.lit(0.0)),
-        6,
-    )
-    sem_cross = (
-        sem_pairs.withColumn("cosine", cos)
-        .filter(F.col("cosine") >= SEMANTIC_COSINE_MIN)
-        .select("doc_a", "doc_b")
-    )
-
     # verbatim substring: the delta winnows itself and probes the
     # history fingerprint store (window guarantee: no shared
     # >=min_len substring is missed)
@@ -4104,18 +3795,22 @@ def _master_cross_edges(
         delta.select("doc_id", "text"),
         hist.select("doc_id", "text"),
         history_fps=state["substring_fps"],
-        incoming_fps=delta_fps,
+        incoming_fps=dstate["substring_fps"],
     ).select(
         F.col("hist_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
     )
-
-    return (
-        exact_cross.unionByName(lsh_cross)
-        .unionByName(sim_cross)
-        .unionByName(sem_cross)
-        .unionByName(sub_cross)
-        .distinct()
+    lanes = (
+        # every delta doc → the history keeper of its content hash
+        _exact_pairs(dstate["hashed"], state["keepers"]),
+        _jaccard_verify(_attach_shingle_sets(cand, ld, lh)),
+        _hamming_verify(sim_cand),
+        _cosine_verify(cand, dstate["embeddings"], state["embeddings"]),
+        sub_cross,
     )
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [df.select("doc_a", "doc_b") for df in lanes],
+    ).distinct()
 
 
 def dedup_master_keep_list_incremental(
@@ -4286,8 +3981,9 @@ def incremental_substring_pairs(
     bi = _substring_base(incoming)
     bh = _substring_base(history)
     created = scratch if scratch is not None else []
-    # ``incoming_fps``: prebuilt delta fp store (the incremental
-    # capstone's delta_state) — skips re-winnowing the delta here.
+    # ``incoming_fps``: prebuilt delta fp store (the keep-list cross
+    # probe's master_history_state over the delta) — skips
+    # re-winnowing the delta here.
     if incoming_fps is not None:
         fi = incoming_fps
     else:

@@ -22,13 +22,8 @@ from finmapreduce_spark.llm.prompts import load_prompt_set
 from finmapreduce_spark.llm.runner import normalize_judgment
 from finmapreduce_spark.plans.mapreduce import (
     MapReduceConfig,
-    answers_with_errors,
-    chunk_stage,
-    filter_stage,
-    join_documents,
     judge_stage,
-    map_stage,
-    reduce_stage,
+    run_mapreduce,
 )
 from finmapreduce_spark.queries import QuerySpec
 from finmapreduce_spark.session import read_table
@@ -78,6 +73,25 @@ def synthetic_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _docs(spark, sf_dir):
     return read_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+
+def _dag(spark: SparkSession, sf_dir: str, cfg: MapReduceConfig) -> dict:
+    """Every stage of the QA MapReduce DAG over the synthetic workload
+    (plans/mapreduce.py::run_mapreduce) — lazy: a query acts only on
+    the stage it returns."""
+    return run_mapreduce(synthetic_qa(spark, sf_dir), _docs(spark, sf_dir), cfg)
+
+
+def _e2e_answers(spark: SparkSession, sf_dir: str, cfg: MapReduceConfig) -> DataFrame:
+    """The answer rows the end-to-end parity queries certify."""
+    return _dag(spark, sf_dir, cfg)["answers"].select(
+        "qa_id",
+        "doc_id",
+        F.coalesce("doc_error", F.lit("ok")).alias("doc_status"),
+        "n_kept",
+        "llm_answer",
+        "llm_reasoning",
+    )
 
 
 # Shared oracle CTEs replicating the DAG with the mock-LLM closed forms.
@@ -157,22 +171,7 @@ answers AS (
 # ---------------------------------------------------------------------------
 
 def pipeline_e2e_answers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qa = synthetic_qa(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    qa_docs = join_documents(qa, docs)
-    chunks = chunk_stage(qa_docs, CFG)
-    mapped = map_stage(chunks, CFG)
-    kept = filter_stage(mapped, CFG)
-    reduced = reduce_stage(kept, qa, CFG)
-    answers = answers_with_errors(qa, qa_docs, reduced)
-    return answers.select(
-        "qa_id",
-        "doc_id",
-        F.coalesce("doc_error", F.lit("ok")).alias("doc_status"),
-        "n_kept",
-        "llm_answer",
-        "llm_reasoning",
-    )
+    return _e2e_answers(spark, sf_dir, CFG)
 
 
 PIPE_E2E_ORACLE = f"""
@@ -193,11 +192,7 @@ FROM answers
 
 def pipeline_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6+A11: filtering effectiveness and score-distribution stats."""
-    qa = synthetic_qa(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    qa_docs = join_documents(qa, docs)
-    chunks = chunk_stage(qa_docs, CFG)
-    mapped = map_stage(chunks, CFG)
+    mapped = _dag(spark, sf_dir, CFG)["mapped"]
     scored = mapped.withColumn(
         "score",
         F.when(
@@ -234,11 +229,7 @@ FROM mapped GROUP BY qa_id
 # ---------------------------------------------------------------------------
 
 def pipeline_token_usage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qa = synthetic_qa(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    qa_docs = join_documents(qa, docs)
-    chunks = chunk_stage(qa_docs, CFG)
-    mapped = map_stage(chunks, CFG)
+    mapped = _dag(spark, sf_dir, CFG)["mapped"]
     return mapped.agg(
         F.sum("input_tokens").alias("total_input_tokens"),
         F.sum("output_tokens").alias("total_output_tokens"),
@@ -273,14 +264,7 @@ def pipeline_judge_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _judge_accuracy(spark: SparkSession, sf_dir: str, cfg: MapReduceConfig) -> DataFrame:
-    qa = synthetic_qa(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    qa_docs = join_documents(qa, docs)
-    chunks = chunk_stage(qa_docs, cfg)
-    mapped = map_stage(chunks, cfg)
-    kept = filter_stage(mapped, cfg)
-    reduced = reduce_stage(kept, qa, cfg)
-    answers = answers_with_errors(qa, qa_docs, reduced)
+    answers = _dag(spark, sf_dir, cfg)["answers"]
     # gold = the llm answer for every 3rd doc (known-correct control
     # group), 'gold-other' otherwise — yields a Correct/Incorrect/
     # No-answer mix that exercises the judge's full verdict domain.
@@ -449,12 +433,7 @@ CFG_JSON = MapReduceConfig(
 
 
 def p2_struct_score_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qa = synthetic_qa(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    qa_docs = join_documents(qa, docs)
-    chunks = chunk_stage(qa_docs, CFG_JSON)
-    mapped = map_stage(chunks, CFG_JSON)
-    kept = filter_stage(mapped, CFG_JSON)
+    kept = _dag(spark, sf_dir, CFG_JSON)["kept"]
     return kept.select(
         "qa_id",
         "chunk_index",
@@ -486,22 +465,7 @@ WHERE score > {CFG.score_threshold}
 
 
 def pipeline_e2e_answers_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qa = synthetic_qa(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    qa_docs = join_documents(qa, docs)
-    chunks = chunk_stage(qa_docs, CFG_JSON)
-    mapped = map_stage(chunks, CFG_JSON)
-    kept = filter_stage(mapped, CFG_JSON)
-    reduced = reduce_stage(kept, qa, CFG_JSON)
-    answers = answers_with_errors(qa, qa_docs, reduced)
-    return answers.select(
-        "qa_id",
-        "doc_id",
-        F.coalesce("doc_error", F.lit("ok")).alias("doc_status"),
-        "n_kept",
-        "llm_answer",
-        "llm_reasoning",
-    )
+    return _e2e_answers(spark, sf_dir, CFG_JSON)
 
 
 def _sql_esc(expr: str) -> str:
@@ -581,22 +545,7 @@ CFG_PLAIN = MapReduceConfig(
 
 
 def pipeline_e2e_answers_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qa = synthetic_qa(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    qa_docs = join_documents(qa, docs)
-    chunks = chunk_stage(qa_docs, CFG_PLAIN)
-    mapped = map_stage(chunks, CFG_PLAIN)
-    kept = filter_stage(mapped, CFG_PLAIN)
-    reduced = reduce_stage(kept, qa, CFG_PLAIN)
-    answers = answers_with_errors(qa, qa_docs, reduced)
-    return answers.select(
-        "qa_id",
-        "doc_id",
-        F.coalesce("doc_error", F.lit("ok")).alias("doc_status"),
-        "n_kept",
-        "llm_answer",
-        "llm_reasoning",
-    )
+    return _e2e_answers(spark, sf_dir, CFG_PLAIN)
 
 
 # first md5 BYTE of the prompt, mod 101 — nibble arithmetic
@@ -695,22 +644,7 @@ CFG_BASELINE = MapReduceConfig(
 
 
 def pipeline_e2e_answers_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qa = synthetic_qa(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    qa_docs = join_documents(qa, docs)
-    chunks = chunk_stage(qa_docs, CFG_BASELINE)
-    mapped = map_stage(chunks, CFG_BASELINE)
-    kept = filter_stage(mapped, CFG_BASELINE)
-    reduced = reduce_stage(kept, qa, CFG_BASELINE)
-    answers = answers_with_errors(qa, qa_docs, reduced)
-    return answers.select(
-        "qa_id",
-        "doc_id",
-        F.coalesce("doc_error", F.lit("ok")).alias("doc_status"),
-        "n_kept",
-        "llm_answer",
-        "llm_reasoning",
-    )
+    return _e2e_answers(spark, sf_dir, CFG_BASELINE)
 
 
 _B_MAP_PROMPT = _sql_format(_BASELINE_SET["map"], "question", "chunk_text")
@@ -912,22 +846,7 @@ CFG_E2E_BPE = MapReduceConfig(
 
 
 def pipeline_e2e_answers_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qa = synthetic_qa(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    qa_docs = join_documents(qa, docs)
-    chunks = chunk_stage(qa_docs, CFG_E2E_BPE)
-    mapped = map_stage(chunks, CFG_E2E_BPE)
-    kept = filter_stage(mapped, CFG_E2E_BPE)
-    reduced = reduce_stage(kept, qa, CFG_E2E_BPE)
-    answers = answers_with_errors(qa, qa_docs, reduced)
-    return answers.select(
-        "qa_id",
-        "doc_id",
-        F.coalesce("doc_error", F.lit("ok")).alias("doc_status"),
-        "n_kept",
-        "llm_answer",
-        "llm_reasoning",
-    )
+    return _e2e_answers(spark, sf_dir, CFG_E2E_BPE)
 
 
 def _bpe_e2e_oracle() -> str:

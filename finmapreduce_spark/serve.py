@@ -54,10 +54,7 @@ def answer_single(
     cfg = cfg or MapReduceConfig()
     if approach == "truncation":
         return _answer_truncation(
-            spark, path, question, strategy, max_doc_tokens, pdf_parser,
-            client_factory=cfg.client_factory,
-            response_cache_dir=cfg.response_cache_dir,
-            response_cache_namespace=cfg.response_cache_namespace,
+            spark, path, question, strategy, max_doc_tokens, pdf_parser, cfg
         )
     # serving is a real-client surface: persist LLM stages so paid
     # calls fire exactly once per request (SURVEY §7 M5) — this also
@@ -65,16 +62,7 @@ def answer_single(
     import dataclasses
 
     cfg = dataclasses.replace(cfg, persist_llm_outputs=True)
-    qa_row = load_upload(spark, path, question, pdf_parser=pdf_parser)
-    qa = qa_row.select(
-        "qa_id",
-        F.col("doc_name").alias("doc_id"),
-        "question",
-        F.lit(None).cast("string").alias("answer"),  # no gold in serving
-    )
-    docs = qa_row.select(
-        F.col("doc_name").alias("doc_id"), F.col("content").alias("text")
-    )
+    qa, docs = _upload_frames(spark, path, question, pdf_parser)
     import time
     import uuid
 
@@ -118,16 +106,32 @@ def answer_single(
     }
 
 
+def _upload_frames(
+    spark: SparkSession, path: str, question: str, pdf_parser: str
+) -> tuple:
+    """(qa, docs): one upload + one question as the DAG's two inputs —
+    both projections of the same one-row ``load_upload`` relation."""
+    qa_row = load_upload(spark, path, question, pdf_parser=pdf_parser)
+    qa = qa_row.select(
+        "qa_id",
+        F.col("doc_name").alias("doc_id"),
+        "question",
+        F.lit(None).cast("string").alias("answer"),  # no gold in serving
+    )
+    docs = qa_row.select(
+        F.col("doc_name").alias("doc_id"), F.col("content").alias("text")
+    )
+    return qa, docs
+
+
 def _answer_truncation(
     spark: SparkSession,
     path: str,
     question: str,
     strategy: str,
     max_doc_tokens: int,
-    pdf_parser: str = "auto",
-    client_factory=None,
-    response_cache_dir: str | None = None,
-    response_cache_namespace: str = "",
+    pdf_parser: str,
+    cfg: MapReduceConfig,
 ) -> dict:
     from finmapreduce_spark.llm.runner import mock_client_factory
     from finmapreduce_spark.plans.truncation import (
@@ -135,26 +139,17 @@ def _answer_truncation(
         run_truncation,
     )
 
-    qa_row = load_upload(spark, path, question, pdf_parser=pdf_parser)
-    qa = qa_row.select(
-        "qa_id",
-        F.col("doc_name").alias("doc_id"),
-        "question",
-        F.lit(None).cast("string").alias("answer"),
-    )
-    docs = qa_row.select(
-        F.col("doc_name").alias("doc_id"), F.col("content").alias("text")
-    )
+    qa, docs = _upload_frames(spark, path, question, pdf_parser)
     # the serving cfg's client factory must reach the truncation DAG
     # too — dropping it here would answer live requests with the mock
     tcfg = TruncationConfig(
         max_doc_tokens=max_doc_tokens,
         strategy=strategy,
-        client_factory=client_factory or mock_client_factory,
+        client_factory=cfg.client_factory or mock_client_factory,
         # serving cache parity: repeat questions over the same upload
         # replay for free, same as the mapreduce serving path
-        response_cache_dir=response_cache_dir,
-        response_cache_namespace=response_cache_namespace,
+        response_cache_dir=cfg.response_cache_dir,
+        response_cache_namespace=cfg.response_cache_namespace,
     )
     stages = run_truncation(qa, docs, tcfg)
     rows = stages["answered"].collect()

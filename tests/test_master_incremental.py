@@ -12,12 +12,14 @@ corpus.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from finmapreduce_spark.queries.dedup import (
     _master_cross_edges,
     dedup_master_keep_list,
     dedup_master_keep_list_incremental,
+    dedup_master_keep_list_staged,
     master_history_state,
 )
 
@@ -72,33 +74,65 @@ def test_incremental_keep_list_equals_batch_capstone(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_incremental_releases_history_shingles_before_cc(spark, sf_dir, monkeypatch):
-    """The shingle table master_history_state persists feeds the pair
-    pass only; the incremental keep-list must release it with the
-    other stores, so neither CC phase runs under it."""
+@pytest.mark.parametrize(
+    "keep_list, n_cc",
+    [(dedup_master_keep_list_incremental, 2), (dedup_master_keep_list_staged, 1)],
+    ids=["incremental", "staged"],
+)
+def test_incremental_releases_history_shingles_before_cc(
+    spark, sf_dir, monkeypatch, keep_list, n_cc
+):
+    """The signature state feeds the pair pass only: every frame the
+    incremental and staged keep-lists persist while deriving their
+    stores and building their lanes (shingles, bucket tables,
+    candidates, tiler indexes, signatures) must be released before
+    connected components runs, so no CC phase runs under it."""
+    import threading
+
     from pyspark import StorageLevel
 
     from finmapreduce_spark.queries import dedup
 
     spark.catalog.clearCache()
-    shingled, pinned_at_cc = [], []
-    real_shingles, real_cc = dedup.with_shingles, dedup.connected_components
+    frame_cls = type(spark.range(1))
+    real_persist = frame_cls.persist
+    real_state, real_lanes = dedup.master_history_state, dedup._master_lanes
+    real_cc = dedup.connected_components
+    persisted, pinned_at_cc = [], []
+    # per thread: the staged pool builds two lanes concurrently, and a
+    # sibling's pair-table persist must not count as lane state
+    inside = threading.local()
 
-    def with_shingles(df):
-        out = real_shingles(df)
-        shingled.append(out)
-        return out
+    def persist(self, *a, **kw):
+        if getattr(inside, "depth", 0):
+            persisted.append(self)
+        return real_persist(self, *a, **kw)
+
+    def recording(fn):
+        def wrapped(*a, **kw):
+            inside.depth = getattr(inside, "depth", 0) + 1
+            try:
+                return fn(*a, **kw)
+            finally:
+                inside.depth -= 1
+
+        return wrapped
+
+    def master_lanes(*a, **kw):
+        return [(n, recording(b)) for n, b in recording(real_lanes)(*a, **kw)]
 
     def connected_components(edges, *a, **kw):
         pinned_at_cc.append(
-            [df for df in shingled if df.storageLevel != StorageLevel.NONE]
+            [df for df in persisted if df.storageLevel != StorageLevel.NONE]
         )
         return real_cc(edges, *a, **kw)
 
-    monkeypatch.setattr(dedup, "with_shingles", with_shingles)
+    monkeypatch.setattr(frame_cls, "persist", persist)
+    monkeypatch.setattr(dedup, "master_history_state", recording(real_state))
+    monkeypatch.setattr(dedup, "_master_lanes", master_lanes)
     monkeypatch.setattr(dedup, "connected_components", connected_components)
-    dedup_master_keep_list_incremental(spark, sf_dir).collect()
+    keep_list(spark, sf_dir).collect()
     spark.catalog.clearCache()
-    assert shingled, "the history store was not derived from shingles"
-    # entered twice (history labels, then the merge), both times clean
-    assert pinned_at_cc == [[], []]
+    # shingles + five stores + LSH/semantic candidates + tiler indexes
+    assert len(persisted) >= 8, persisted
+    assert pinned_at_cc == [[]] * n_cc
