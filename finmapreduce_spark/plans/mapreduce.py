@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from finmapreduce_spark.functions.chunking import chunk_plan
+from finmapreduce_spark.functions.render import xml_escape
 from finmapreduce_spark.functions.text import extract_score
 from finmapreduce_spark.llm import runner
 from finmapreduce_spark.llm.runner import (
@@ -260,18 +261,6 @@ def filter_stage(map_out: DataFrame, cfg: MapReduceConfig) -> DataFrame:
     return scored.filter(F.col("score") > cfg.score_threshold)
 
 
-def _xml_escape(col):
-    """Reference _escape_xml (output_formatter.py): &, <, >, ', " in
-    that order — order matters (& first, or entities double-escape)."""
-    out = col
-    for a, b in (
-        ("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"),
-        ("'", "&apos;"), ('"', "&quot;"),
-    ):
-        out = F.replace(out, F.lit(a), F.lit(b))
-    return out
-
-
 def _pyrepr_list(arr):
     """str(list_of_str) as the reference renders terms/evidence
     (json_formatter.py:69-71): "['a', 'b']", "[]" for empty. Elements
@@ -298,16 +287,16 @@ def _chunk_xml(mr, idx):
     return F.concat(
         F.lit("      <chunk_"), i, F.lit(">\n"),
         F.lit("        <summary>"),
-        _xml_escape(F.coalesce(mr.summary, F.lit(""))),
+        xml_escape(F.coalesce(mr.summary, F.lit(""))),
         F.lit("</summary>\n"),
         F.lit("        <terms>"),
-        _xml_escape(_pyrepr_list(F.coalesce(mr.terms, F.array().cast("array<string>")))),
+        xml_escape(_pyrepr_list(F.coalesce(mr.terms, F.array().cast("array<string>")))),
         F.lit("</terms>\n"),
         F.lit("        <evidence>"),
-        _xml_escape(_pyrepr_list(F.coalesce(mr.evidence, F.array().cast("array<string>")))),
+        xml_escape(_pyrepr_list(F.coalesce(mr.evidence, F.array().cast("array<string>")))),
         F.lit("</evidence>\n"),
         F.lit("        <answer>"),
-        _xml_escape(F.coalesce(mr.answer, F.lit(""))),
+        xml_escape(F.coalesce(mr.answer, F.lit(""))),
         F.lit("</answer>\n"),
         F.lit("        <relevance_score>"),
         F.coalesce(mr.relevance_score, F.lit(0)).cast("string"),

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from finmapreduce_spark.operators.multimodal import (
+    DHASH_BANDS,
     decode_and_featurize,
     frame_sample,
 )
@@ -426,47 +427,51 @@ QUERIES.update(
 PHASH_HAMMING_MAX = 3
 
 
-def dedup_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from finmapreduce_spark.operators.multimodal import (
-        DHASH_BANDS,
-        dhash_images,
-    )
-    from finmapreduce_spark.operators.pairgrid import grid_self_pairs
-
-    assert PHASH_HAMMING_MAX <= DHASH_BANDS - 1  # pigeonhole recall 1.0
-    sig = dhash_images(_assets(spark, sf_dir))
-    bands = sig.select(
+def phash_bands(sig: DataFrame) -> DataFrame:
+    """One row per (image, band) of a dhash_images table:
+    (asset_id, b0..b3, k, bv) — the band key (k, bv) the candidate
+    join probes, with the full hash riding along for the verify. The
+    batch pair query and the continuous phash store share it."""
+    hash_cols = [f"b{k}" for k in range(DHASH_BANDS)]
+    return sig.select(
         "asset_id",
-        "b0",
-        "b1",
-        "b2",
-        "b3",
+        *hash_cols,
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(k).alias("k"), F.col(f"b{k}").alias("bv")
-                    )
+                    F.struct(F.lit(k).alias("k"), F.col(f"b{k}").alias("bv"))
                     for k in range(DHASH_BANDS)
                 ]
             )
         ).alias("bd"),
     ).select(
         "asset_id",
-        "b0",
-        "b1",
-        "b2",
-        "b3",
+        *hash_cols,
         F.col("bd.k").alias("k"),
         F.col("bd.bv").alias("bv"),
     )
-    cand = grid_self_pairs(
-        bands, ["k", "bv"], "asset_id", ["b0", "b1", "b2", "b3"]
-    )
-    ham = sum(
-        F.bit_count(F.col(f"b{k}_a").bitwiseXOR(F.col(f"b{k}_b")))
+
+
+def phash_hamming(a: str, b: str):
+    """Hamming distance between two banded hashes whose band columns
+    are named ``a.format(k)`` and ``b.format(k)`` (xor + popcount per
+    band, summed)."""
+    return sum(
+        F.bit_count(F.col(a.format(k)).bitwiseXOR(F.col(b.format(k))))
         for k in range(DHASH_BANDS)
     ).cast("long")
+
+
+def dedup_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from finmapreduce_spark.operators.multimodal import dhash_images
+    from finmapreduce_spark.operators.pairgrid import grid_self_pairs
+
+    assert PHASH_HAMMING_MAX <= DHASH_BANDS - 1  # pigeonhole recall 1.0
+    bands = phash_bands(dhash_images(_assets(spark, sf_dir)))
+    cand = grid_self_pairs(
+        bands, ["k", "bv"], "asset_id", [f"b{k}" for k in range(DHASH_BANDS)]
+    )
+    ham = phash_hamming("b{}_a", "b{}_b")
     return (
         cand.withColumn("hamming", ham)
         .filter(F.col("hamming") <= PHASH_HAMMING_MAX)

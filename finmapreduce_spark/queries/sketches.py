@@ -66,6 +66,50 @@ def _hex3_sql(expr: str, start: int) -> str:
     return f"(({d(start)} * 16 + {d(start + 1)}) * 16 + {d(start + 2)})"
 
 
+def _cms_cell(j, w):
+    """Count-min row ``j``'s counter index for token ``w``: 3 md5 hex
+    digits of 'j:w'. The one cell hash of the batch sketch, its
+    probes and the continuous watchlist store."""
+    return _hex3(F.md5(F.concat_ws(":", j, w)), 1)
+
+
+def _cms_sketch(docs: DataFrame) -> DataFrame:
+    """(j, b, c) count-min cells of a documents frame.
+
+    Explodes (j, b) INT structs computed inside the word-array
+    transform — never word strings (the bloom pre-screen's measured
+    string-explode lesson)."""
+
+    def cells(w):
+        return F.array(
+            *[
+                F.struct(
+                    F.lit(j).alias("j"), _cms_cell(F.lit(j), w).alias("b")
+                )
+                for j in range(CMS_DEPTH)
+            ]
+        )
+
+    return (
+        docs.select(
+            F.explode(F.flatten(F.transform(_words(F.col("text")), cells)))
+            .alias("c")
+        )
+        .select("c.j", "c.b")
+        .groupBy("j", "b")
+        .agg(F.count("*").alias("c"))
+    )
+
+
+def _cms_probes(tokens: DataFrame) -> DataFrame:
+    """``tokens`` (a string column ``w``) with one row per count-min
+    row: its columns plus (j, b), the cell ``w`` reads in row j."""
+    rows = F.explode(F.array(*[F.lit(j) for j in range(CMS_DEPTH)]))
+    return tokens.select("*", rows.alias("j")).withColumn(
+        "b", _cms_cell(F.col("j"), F.col("w"))
+    )
+
+
 def sketch_countmin_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K corpus tokens with their count-min estimates: the sketch
     is d={d} rows × w={w} counters built in ONE bounded groupBy (row
@@ -73,24 +117,6 @@ def sketch_countmin_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-K token's d probe cells against the broadcast sketch and
     takes the min. `overestimates` (est ≥ true) is the CMS guarantee
     — all TRUE by theorem, recomputed independently by the oracle."""
-    # Sketch-build side explodes (j, b) INT structs computed inside
-    # the word-array transform — never word strings (the bloom
-    # pre-screen's measured string-explode lesson); the truth side
-    # keeps the string explode because the report's token column
-    # needs the names.
-    def _cells(w):
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    _hex3(
-                        F.md5(F.concat_ws(":", F.lit(j), w)), 1
-                    ).alias("b"),
-                )
-                for j in range(CMS_DEPTH)
-            ]
-        )
-
     from finmapreduce_spark.operators.parallelism import scan_floor
 
     # guarded scan-parallelism floor: both corpus passes (cells build
@@ -101,24 +127,13 @@ def sketch_countmin_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = scan_floor(
         _docs(spark, sf_dir).select("doc_id", "text"), "doc_id"
     )
-    cells = docs.select(
-        F.explode(
-            F.flatten(F.transform(_words(F.col("text")), _cells))
-        ).alias("c")
-    ).select("c.j", "c.b")
-    sketch = cells.groupBy("j", "b").agg(F.count("*").alias("c"))
+    sketch = _cms_sketch(docs)
+    # the truth side keeps the string explode: the report's token
+    # column needs the names
     tok = docs.select(F.explode(_words(F.col("text"))).alias("w"))
-    rows = F.explode(
-        F.array(*[F.lit(j) for j in range(CMS_DEPTH)])
-    ).alias("j")
     true = tok.groupBy("w").agg(F.count("*").alias("true_count"))
     top = true.orderBy(F.desc("true_count"), "w").limit(CMS_TOP_K)
-    probes = top.select("w", "true_count", rows).select(
-        "w",
-        "true_count",
-        "j",
-        _hex3(F.md5(F.concat_ws(":", F.col("j"), F.col("w"))), 1).alias("b"),
-    )
+    probes = _cms_probes(top)
     return (
         probes.join(F.broadcast(sketch), ["j", "b"])
         .groupBy("w", "true_count")

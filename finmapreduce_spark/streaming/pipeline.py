@@ -14,9 +14,18 @@ Everything here reuses the batch plan objects — one definition of the
 DAG, two execution modes. That is the point of expressing the
 pipeline declaratively: Structured Streaming runs the same logical
 plan incrementally.
+
+Every foreachBatch ``serve_*`` mode runs on ONE epoch driver,
+``_serve_epochs``: it owns the writer, the empty-batch skip, the
+live-store lock check, the cold-start history read, the guarded
+append and the release of every frame the epoch persisted. A mode
+states only how to sign the batch, how to decide, and what to emit
+and append.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,8 +42,6 @@ def _epoch_json(df: DataFrame, out_dir: str, epoch_id: int) -> None:
     overwrite its previous attempt instead. Readers load the whole
     directory; ``epoch_id`` comes back as the partition column.
     """
-    import os
-
     df.write.mode("overwrite").json(os.path.join(out_dir, f"epoch_id={epoch_id}"))
 
 
@@ -72,6 +79,87 @@ def read_request_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# The epoch driver. Each foreachBatch serve_* mode is one call to
+# _serve_epochs with an ``epoch(ep) -> (emit, appends)`` function: sign
+# the micro-batch, decide, and return the frame to emit (None: nothing)
+# and the (frame, store_dir) pairs to append. _serve_epochs runs the rest
+# of the per-epoch protocol, in this order: skip an empty batch, check
+# every declared store is not locked for compaction, run the mode,
+# write ``emit`` to ``out_dir/epoch_id=N``, append each frame under the
+# append-marker guard, and — on success or failure — unpersist every
+# frame the epoch persisted. Releasing here, not with clearCache, keeps
+# a static mode's shared history store cached across epochs.
+# ---------------------------------------------------------------------------
+
+class _Epoch:
+    """One non-empty micro-batch as a serve_* mode sees it."""
+
+    def __init__(self, batch: DataFrame, epoch_id: int, stores: dict):
+        self.batch = batch
+        self.epoch_id = epoch_id
+        self.spark = batch.sparkSession
+        self.stores = stores
+        # frames to unpersist when the epoch ends; helpers that persist
+        # their own intermediates take this list as their ``scratch``
+        self.scratch: list[DataFrame] = []
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        self.scratch.append(df.persist())
+        return df
+
+    def history(self, store_dir: str, like: DataFrame) -> DataFrame:
+        """A declared store's rows visible to this epoch: empty (with
+        ``like``'s schema) before the first append, else everything
+        except this epoch's own crashed-attempt appends, with a SUM
+        store's replayed increments dropped on its dedupe key."""
+        return _history_or_empty(
+            self.spark, store_dir, self.epoch_id, like, self.stores[store_dir]
+        )
+
+
+def _serve_epochs(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    out_dir: str | None,
+    stores: dict[str, list[str] | None],
+    epoch,
+):
+    """The foreachBatch writer every serve_* mode returns (not yet
+    started; trigger availableNow).
+
+    ``stores`` maps each live-store directory the mode reads and
+    appends to its replay dedupe key: a column list for SUM-merged
+    stores (see _prior_history), None for the rest; static modes pass
+    no stores."""
+
+    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        for store_dir in stores:
+            # the append marker and the compaction lock sit BESIDE the
+            # store directory, so its parent must exist
+            parent = os.path.dirname(store_dir.rstrip("/"))
+            os.makedirs(parent or ".", exist_ok=True)
+            _check_store_unlocked(store_dir)
+        ep = _Epoch(batch_df, epoch_id, stores)
+        try:
+            emit, appends = epoch(ep)
+            if emit is not None:
+                _epoch_json(emit, out_dir, epoch_id)
+            for df, store_dir in appends:
+                _guarded_store_append(df, store_dir, epoch_id)
+        finally:
+            for df in ep.scratch:
+                df.unpersist()
+
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+
+
 def serve_mapreduce(
     requests: DataFrame,
     docs: DataFrame,
@@ -90,26 +178,16 @@ def serve_mapreduce(
 
     cfg = cfg or MapReduceConfig()
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        stages = run_mapreduce(batch_df.drop("submitted_at"), docs, cfg)
-        try:
-            _epoch_json(stages["answers"], out_dir, epoch_id)
-        finally:
-            # under persist_llm_outputs (the real-client posture)
-            # each epoch persists mapped/reduced — release them or a
-            # long-running stream accumulates cached frames per epoch
-            # (no-op when the flag is off)
-            stages["mapped"].unpersist()
-            stages["reduced"].unpersist()
+    def epoch(ep: _Epoch):
+        stages = run_mapreduce(ep.batch.drop("submitted_at"), docs, cfg)
+        # under persist_llm_outputs (the real-client posture) each
+        # epoch persists mapped/reduced — _serve_epochs releases them, or
+        # a long-running stream would accumulate cached frames per
+        # epoch (no-op when the flag is off)
+        ep.scratch += [stages["mapped"], stages["reduced"]]
+        return stages["answers"], []
 
-    return (
-        requests.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-
+    return _serve_epochs(requests, checkpoint_dir, out_dir, {}, epoch)
 
 
 def serve_incremental_dedup(
@@ -138,19 +216,11 @@ def serve_incremental_dedup(
         incremental_verdicts,
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        incoming = band_signature_table(batch_df)
-        _epoch_json(
-            incremental_verdicts(incoming, history_buckets), out_dir, epoch_id
-        )
+    def epoch(ep: _Epoch):
+        incoming = band_signature_table(ep.batch)
+        return incremental_verdicts(incoming, history_buckets), []
 
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _serve_epochs(incoming_docs, checkpoint_dir, out_dir, {}, epoch)
 
 
 def serve_incremental_passages(
@@ -178,19 +248,11 @@ def serve_incremental_passages(
         passage_gram_table,
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spans = incremental_passage_spans(
-            passage_gram_table(batch_df), gram_store
-        )
-        _epoch_json(spans, out_dir, epoch_id)
+    def epoch(ep: _Epoch):
+        grams = passage_gram_table(ep.batch)
+        return incremental_passage_spans(grams, gram_store), []
 
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _serve_epochs(incoming_docs, checkpoint_dir, out_dir, {}, epoch)
 
 
 def serve_incremental_substring(
@@ -218,30 +280,18 @@ def serve_incremental_substring(
     families."""
     from finmapreduce_spark.queries.dedup import incremental_substring_pairs
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # per-epoch persists must be released HERE (clearCache would
-        # evict the shared history store) — round-10 review finding
-        scratch: list = []
-        try:
-            pairs = incremental_substring_pairs(
-                batch_df, history_docs, history_fps=history_fps,
-                scratch=scratch,
-            )
-            _epoch_json(pairs, out_dir, epoch_id)
-        finally:
-            for df in scratch:
-                df.unpersist()
+    def epoch(ep: _Epoch):
+        pairs = incremental_substring_pairs(
+            ep.batch, history_docs, history_fps=history_fps,
+            scratch=ep.scratch,
+        )
+        return pairs, []
 
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _serve_epochs(incoming_docs, checkpoint_dir, out_dir, {}, epoch)
 
 
 SUBSTR_MAX_CONTAINMENT = 0.5
+PASSAGE_MAX_COVERAGE = 0.5
 
 
 def serve_incremental_substring_continuous(
@@ -249,7 +299,6 @@ def serve_incremental_substring_continuous(
     store_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    max_containment: float = SUBSTR_MAX_CONTAINMENT,
 ):
     """EXACT-SUBSTRING ingest dedup with a LIVE fingerprint store —
     the winnowing member of the continuous-store family. Each epoch:
@@ -257,7 +306,7 @@ def serve_incremental_substring_continuous(
     probe the store, and score each incoming doc's WINNOW CONTAINMENT
     = fraction of its selected fingerprints already present in
     history (the MOSS-style overlap score; a verbatim copy scores
-    ~1.0, fresh text ~0.0). Docs above ``max_containment`` are
+    ~1.0, fresh text ~0.0). Docs above SUBSTR_MAX_CONTAINMENT are
     rejected (verdict rows append as JSON with their scores); the
     ADMITTED docs' fingerprints append back, so a doc admitted in
     epoch N rejects its verbatim copy in epoch N+1 (cross-epoch pin
@@ -282,56 +331,35 @@ def serve_incremental_substring_continuous(
         substring_fp_table,
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _check_store_unlocked(store_dir)
-        spark = batch_df.sparkSession
-        inc_fps = substring_fp_table(_substring_base(batch_df)).persist()
-        rejected = None
-        try:
-            # no (doc_id, fp) dedup here: the probe only consumes the
-            # DISTINCT fp set, which subsumes it (round-10 review —
-            # the extra dedup was a redundant whole-store shuffle per
-            # epoch; the band twin needs its row-level dedup because
-            # its history rows feed a fan-out join, ours do not)
-            history = _history_or_empty(
-                spark, store_dir, epoch_id, inc_fps
-            )
-            totals = inc_fps.groupBy("doc_id").agg(F.count("*").alias("n_fps"))
-            hits = (
-                inc_fps.join(history.select("fp").distinct(), "fp")
-                .groupBy("doc_id")
-                .agg(F.count("*").alias("n_hit"))
-            )
-            scored = (
-                totals.join(hits, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    "n_fps",
-                    F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-                    F.round(
-                        F.coalesce("n_hit", F.lit(0)) / F.col("n_fps"), 6
-                    ).alias("containment"),
-                )
-            )
-            rejected = scored.filter(
-                F.col("containment") > max_containment
-            ).persist()
-            _epoch_json(rejected, out_dir, epoch_id)
-            admitted_fps = inc_fps.join(
-                rejected.select("doc_id"), "doc_id", "left_anti"
-            )
-            _guarded_store_append(admitted_fps, store_dir, epoch_id)
-        finally:
-            if rejected is not None:
-                rejected.unpersist()
-            inc_fps.unpersist()
+    def epoch(ep: _Epoch):
+        inc_fps = ep.persist(substring_fp_table(_substring_base(ep.batch)))
+        # no (doc_id, fp) dedup here: the probe only consumes the
+        # DISTINCT fp set, which subsumes it (round-10 review —
+        # the extra dedup was a redundant whole-store shuffle per
+        # epoch; the band twin needs its row-level dedup because
+        # its history rows feed a fan-out join, ours do not)
+        history = ep.history(store_dir, inc_fps)
+        totals = inc_fps.groupBy("doc_id").agg(F.count("*").alias("n_fps"))
+        hits = (
+            inc_fps.join(history.select("fp").distinct(), "fp")
+            .groupBy("doc_id")
+            .agg(F.count("*").alias("n_hit"))
+        )
+        n_hit = F.coalesce("n_hit", F.lit(0))
+        scored = totals.join(hits, "doc_id", "left").select(
+            "doc_id",
+            "n_fps",
+            n_hit.alias("n_hit"),
+            F.round(n_hit / F.col("n_fps"), 6).alias("containment"),
+        )
+        rejected = ep.persist(
+            scored.filter(F.col("containment") > SUBSTR_MAX_CONTAINMENT)
+        )
+        admitted = inc_fps.join(rejected.select("doc_id"), "doc_id", "left_anti")
+        return rejected, [(admitted, store_dir)]
 
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return _serve_epochs(
+        incoming_docs, checkpoint_dir, out_dir, {store_dir: None}, epoch
     )
 
 
@@ -340,7 +368,6 @@ def serve_incremental_passages_continuous(
     store_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    max_coverage: float = 0.5,
 ):
     """Continuous ingest PASSAGE dedup with a LIVE gram store — the
     passage-level twin of serve_incremental_dedup_continuous. Each
@@ -348,9 +375,9 @@ def serve_incremental_passages_continuous(
     maximal shared spans (appended as JSON with the epoch id), then
     apply the ADMIT POLICY — union the incoming-side span intervals per
     doc (the same interval sweep as dedup_passage_coverage) and reject
-    docs whose duplicated-word fraction exceeds ``max_coverage``; the
-    admitted docs' per-doc-capped grams append back to the store, so a
-    passage admitted in epoch N is detected verbatim in epoch N+1
+    docs whose duplicated-word fraction exceeds PASSAGE_MAX_COVERAGE;
+    the admitted docs' per-doc-capped grams append back to the store,
+    so a passage admitted in epoch N is detected verbatim in epoch N+1
     (cross-epoch pin in tests).
 
     Append-time caps: only the per-doc occurrence cap can be applied on
@@ -369,59 +396,46 @@ def serve_incremental_passages_continuous(
         passage_gram_table,
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _check_store_unlocked(store_dir)
-        spark = batch_df.sparkSession
-        grams = passage_gram_table(batch_df).persist()
-        spans = None
-        try:
-            # Replay-duplicate and df-drift guards on the probed slice
-            # of the store live inside incremental_passage_spans; the
-            # epoch filter here removes the batch's OWN grams appended
-            # by a crashed attempt of THIS epoch — otherwise every
-            # replayed doc matches itself as a full-length verbatim
-            # span and the epoch rewrite commits 100%-coverage false
-            # rejections. Keyed on epoch_id, not doc_id, so a doc
-            # resubmitted in a later epoch still matches its own
-            # prior-epoch grams (verbatim dup → rejected).
-            history = _history_or_empty(spark, store_dir, epoch_id, grams)
-            spans = incremental_passage_spans(grams, history).persist()
-            _epoch_json(spans, out_dir, epoch_id)
-            iv = spans.select(
-                "doc_id",
-                F.col("a_start").alias("s"),
-                (F.col("a_start") + F.col("n_words") - 1).alias("e"),
+    def epoch(ep: _Epoch):
+        grams = ep.persist(passage_gram_table(ep.batch))
+        # Replay-duplicate and df-drift guards on the probed slice
+        # of the store live inside incremental_passage_spans; the
+        # epoch filter in the history read removes the batch's OWN
+        # grams appended by a crashed attempt of THIS epoch —
+        # otherwise every replayed doc matches itself as a
+        # full-length verbatim span and the epoch rewrite commits
+        # 100%-coverage false rejections. Keyed on epoch_id, not
+        # doc_id, so a doc resubmitted in a later epoch still matches
+        # its own prior-epoch grams (verbatim dup → rejected).
+        history = ep.history(store_dir, grams)
+        spans = ep.persist(incremental_passage_spans(grams, history))
+        iv = spans.select(
+            "doc_id",
+            F.col("a_start").alias("s"),
+            (F.col("a_start") + F.col("n_words") - 1).alias("e"),
+        )
+        totals = ep.batch.select(
+            "doc_id",
+            F.size(_words(F.col("text"))).cast("long").alias("total_words"),
+        )
+        rejected = (
+            interval_union_coverage(iv)
+            .join(totals, "doc_id")
+            .filter(
+                F.col("covered_words") / F.col("total_words")
+                > F.lit(PASSAGE_MAX_COVERAGE)
             )
-            totals = batch_df.select(
-                "doc_id",
-                F.size(_words(F.col("text"))).cast("long").alias("total_words"),
-            )
-            rejected = (
-                interval_union_coverage(iv)
-                .join(totals, "doc_id")
-                .filter(
-                    F.col("covered_words") / F.col("total_words")
-                    > F.lit(max_coverage)
-                )
-                .select("doc_id")
-            )
-            admitted = (
-                _capped_occurrences(grams)
-                .join(rejected, "doc_id", "left_anti")
-                .select("doc_id", F.explode("poss").alias("pos"), "h")
-            )
-            _guarded_store_append(admitted, store_dir, epoch_id)
-        finally:
-            if spans is not None:
-                spans.unpersist()
-            grams.unpersist()
+            .select("doc_id")
+        )
+        admitted = (
+            _capped_occurrences(grams)
+            .join(rejected, "doc_id", "left_anti")
+            .select("doc_id", F.explode("poss").alias("pos"), "h")
+        )
+        return spans, [(admitted, store_dir)]
 
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return _serve_epochs(
+        incoming_docs, checkpoint_dir, out_dir, {store_dir: None}, epoch
     )
 
 
@@ -635,8 +649,6 @@ def _check_store_unlocked(store_dir: str) -> None:
     """Fail the epoch fast if the store is locked for compaction —
     an append racing the compaction swap would be silently stranded
     in the ``.pre-compact`` rollback copy otherwise."""
-    import os
-
     from finmapreduce_spark.sources.sinks import store_lock_path
 
     lock = store_lock_path(store_dir)
@@ -671,7 +683,7 @@ def _history_or_empty(
     store_dir: str,
     epoch_id: int,
     like: DataFrame,
-    dedupe_key: list[str] | None = None,
+    dedupe_key: list[str] | None,
 ) -> DataFrame:
     """Cold-start-safe store read: a store directory that does not
     exist yet reads as an EMPTY history with ``like``'s schema (the
@@ -679,8 +691,6 @@ def _history_or_empty(
     AnalysisException — the gap the ingest CLI exposed. ``like`` must
     be a frame with the store's append schema (every caller appends
     rows shaped like its probe input)."""
-    import os
-
     if not os.path.exists(store_dir):
         return like.limit(0)
     return _prior_history(spark, store_dir, epoch_id, dedupe_key=dedupe_key)
@@ -740,8 +750,9 @@ def serve_incremental_dedup_continuous(
     so a doc admitted in epoch N rejects its near-dup in epoch N+1
     (pinned by test). Epochs are sequential, so the read-modify-append
     cycle is race-free; the checkpoint gives exactly-once epochs, and
-    re-running a replayed epoch re-appends the same admitted rows
-    (dedup by doc_id on read if at-least-once file sinks matter).
+    every append is stamped with its epoch_id, so a replayed epoch
+    excludes its crashed attempt's rows from its own probe (see
+    _prior_history) and re-appends the same admitted rows.
 
     Scope: the batch is probed against the store, not against itself —
     intra-batch duplicates both admit (production pipelines self-dedup
@@ -756,41 +767,26 @@ def serve_incremental_dedup_continuous(
         incremental_verdicts,
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _check_store_unlocked(store_dir)
-        spark = batch_df.sparkSession
-        incoming = band_signature_table(batch_df).persist()
-        verdicts = None
-        try:
-            # Replay hazard, two forms: a replayed epoch may find (a)
-            # duplicate store rows (dedup keeps join fan-out tight)
-            # and (b) ITS OWN admitted signatures from the crashed
-            # attempt — without excluding them every replayed doc
-            # matches itself at jaccard 1.0 and the epoch rewrite
-            # would commit false reject verdicts. The exclusion is
-            # keyed on epoch_id (replay-specific), NOT doc_id: a doc
-            # legitimately resubmitted in a LATER epoch must still
-            # match its prior-epoch rows and be rejected.
-            history = _history_or_empty(
-                spark, store_dir, epoch_id, incoming
-            ).dropDuplicates(["doc_id", "band_id", "key"])
-            verdicts = incremental_verdicts(incoming, history).persist()
-            _epoch_json(verdicts, out_dir, epoch_id)
-            admitted = incoming.join(
-                verdicts.select("doc_id"), "doc_id", "left_anti"
-            )
-            _guarded_store_append(admitted, store_dir, epoch_id)
-        finally:
-            if verdicts is not None:
-                verdicts.unpersist()
-            incoming.unpersist()
+    def epoch(ep: _Epoch):
+        incoming = ep.persist(band_signature_table(ep.batch))
+        # Replay hazard, two forms: a replayed epoch may find (a)
+        # duplicate store rows (dedup keeps join fan-out tight)
+        # and (b) ITS OWN admitted signatures from the crashed
+        # attempt — without excluding them every replayed doc
+        # matches itself at jaccard 1.0 and the epoch rewrite
+        # would commit false reject verdicts. The exclusion is
+        # keyed on epoch_id (replay-specific), NOT doc_id: a doc
+        # legitimately resubmitted in a LATER epoch must still
+        # match its prior-epoch rows and be rejected.
+        history = ep.history(store_dir, incoming).dropDuplicates(
+            ["doc_id", "band_id", "key"]
+        )
+        verdicts = ep.persist(incremental_verdicts(incoming, history))
+        admitted = incoming.join(verdicts.select("doc_id"), "doc_id", "left_anti")
+        return verdicts, [(admitted, store_dir)]
 
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return _serve_epochs(
+        incoming_docs, checkpoint_dir, out_dir, {store_dir: None}, epoch
     )
 
 
@@ -811,8 +807,10 @@ def serve_incremental_semantic_continuous(
     have shifted exact-Jaccard below threshold.
 
     Same replay hardening as the band twin: history drops duplicate
-    rows and anti-joins away the batch's own doc_ids (a crashed
-    attempt's appends must not make replayed docs match themselves).
+    rows and excludes this epoch's own crashed-attempt appends, keyed
+    on epoch_id (a crashed attempt's appends must not make replayed
+    docs match themselves; a doc resubmitted in a later epoch still
+    matches its prior rows).
 
     Scale: per-epoch cost is |delta| × bucket-hit-rate for the probe
     plus one Arrow embedding pass over the delta; the store carries a
@@ -823,32 +821,17 @@ def serve_incremental_semantic_continuous(
         semantic_signature_table,
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _check_store_unlocked(store_dir)
-        spark = batch_df.sparkSession
-        incoming = semantic_signature_table(batch_df).persist()
-        verdicts = None
-        try:
-            history = _history_or_empty(
-                spark, store_dir, epoch_id, incoming
-            ).dropDuplicates(["doc_id", "band_id", "key"])
-            verdicts = incremental_semantic_verdicts(incoming, history).persist()
-            _epoch_json(verdicts, out_dir, epoch_id)
-            admitted = incoming.join(
-                verdicts.select("doc_id"), "doc_id", "left_anti"
-            )
-            _guarded_store_append(admitted, store_dir, epoch_id)
-        finally:
-            if verdicts is not None:
-                verdicts.unpersist()
-            incoming.unpersist()
+    def epoch(ep: _Epoch):
+        incoming = ep.persist(semantic_signature_table(ep.batch))
+        history = ep.history(store_dir, incoming).dropDuplicates(
+            ["doc_id", "band_id", "key"]
+        )
+        verdicts = ep.persist(incremental_semantic_verdicts(incoming, history))
+        admitted = incoming.join(verdicts.select("doc_id"), "doc_id", "left_anti")
+        return verdicts, [(admitted, store_dir)]
 
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return _serve_epochs(
+        incoming_docs, checkpoint_dir, out_dir, {store_dir: None}, epoch
     )
 
 
@@ -874,15 +857,9 @@ def serve_cleaning_gate(
     """
     from finmapreduce_spark.queries.textops import cleaning_stage
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _epoch_json(cleaning_stage(batch_df), out_dir, epoch_id)
-
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return _serve_epochs(
+        incoming_docs, checkpoint_dir, out_dir, {},
+        lambda ep: (cleaning_stage(ep.batch), []),
     )
 
 
@@ -913,7 +890,10 @@ def serve_incremental_ann(
     Ingest is GUARDED: rows failing emb_table's validity predicates
     (NULL/ragged vectors, zero or non-finite norm — one such row would
     otherwise rank first for every query probing its cell, cosine NaN)
-    are dropped before routing, against the index's declared dim.
+    are dropped from the stream against the index's declared dim, so
+    an epoch with no valid row is an empty epoch and writes nothing.
+    The centroid table is read once per serve call: it is frozen for
+    the life of a run.
 
     Scale: per epoch this is one broadcast crossJoin (K rows) + a
     per-vector argmin + a partitioned write of |batch| rows —
@@ -930,29 +910,21 @@ def serve_incremental_ann(
     )
 
     run_tag = uuid.uuid4().hex[:8]
+    spark = incoming_vectors.sparkSession
+    cents = spark.read.parquet(os.path.join(index_root, "centroids"))
+    expected_dim = len(cents.select("cv").first()["cv"])
+    # valid_vectors uses emb_table's norm formula (sequential IEEE
+    # fold), so a vector routes identically batch or stream
+    vecs = valid_vectors(incoming_vectors.select("vec_id", "v"), expected_dim)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        import os
-
-        cents = spark.read.parquet(os.path.join(index_root, "centroids"))
-        expected_dim = len(cents.select("cv").first()["cv"])
-        # valid_vectors uses emb_table's norm formula (sequential IEEE
-        # fold), so a vector routes identically batch or stream
-        vecs = valid_vectors(batch_df.select("vec_id", "v"), expected_dim)
-        if vecs.isEmpty():
-            return
+    def epoch(ep: _Epoch):
         append_ivf_delta(
-            spark, index_root, _assign(vecs, cents), f"{run_tag}-{int(epoch_id)}"
+            ep.spark, index_root, _assign(ep.batch, cents),
+            f"{run_tag}-{int(ep.epoch_id)}",
         )
+        return None, []
 
-    return (
-        incoming_vectors.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _serve_epochs(vecs, checkpoint_dir, None, {}, epoch)
 
 
 def serve_incremental_url_continuous(
@@ -985,66 +957,46 @@ def serve_incremental_url_continuous(
     Scale: per-epoch cost is |delta| canonicalization + one
     uniform-key probe join; the store holds one row per distinct
     canonical URL ever admitted."""
+    from pyspark.sql import Window as W
+
     from finmapreduce_spark.queries.dedup import _doc_urls
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _check_store_unlocked(store_dir)
-        spark = batch_df.sparkSession
-        urls = _doc_urls(batch_df).persist()
-        verdicts = None
-        try:
-            history = _history_or_empty(
-                spark,
-                store_dir,
-                epoch_id,
-                urls.select(
-                    "url_canonical", F.col("doc_id").alias("keeper")
-                ),
+    def epoch(ep: _Epoch):
+        urls = ep.persist(_doc_urls(ep.batch))
+        history = ep.history(
+            store_dir,
+            urls.select("url_canonical", F.col("doc_id").alias("keeper")),
+        )
+        keepers = history.groupBy("url_canonical").agg(
+            F.min("keeper").alias("hist_keeper")
+        )
+        batch_keeper = F.min("doc_id").over(W.partitionBy("url_canonical"))
+        verdicts = ep.persist(
+            urls.withColumn("_bk", batch_keeper)
+            .join(keepers, "url_canonical", "left")
+            .select(
+                "doc_id",
+                "url_canonical",
+                "hist_keeper",
+                (
+                    F.col("hist_keeper").isNotNull()
+                    | (F.col("doc_id") != F.col("_bk"))
+                ).alias("is_duplicate"),
             )
-            keepers = history.groupBy("url_canonical").agg(
-                F.min("keeper").alias("hist_keeper")
+        )
+        admitted = (
+            urls.join(
+                verdicts.filter(F.col("is_duplicate")).select("doc_id"),
+                "doc_id",
+                "left_anti",
             )
-            from pyspark.sql import Window as W
+            .groupBy("url_canonical")
+            .agg(F.min("doc_id").alias("keeper"))
+        )
+        return verdicts, [(admitted, store_dir)]
 
-            batch_keeper = F.min("doc_id").over(
-                W.partitionBy("url_canonical")
-            )
-            verdicts = (
-                urls.withColumn("_bk", batch_keeper)
-                .join(keepers, "url_canonical", "left")
-                .select(
-                    "doc_id",
-                    "url_canonical",
-                    "hist_keeper",
-                    (
-                        F.col("hist_keeper").isNotNull()
-                        | (F.col("doc_id") != F.col("_bk"))
-                    ).alias("is_duplicate"),
-                )
-                .persist()
-            )
-            _epoch_json(verdicts, out_dir, epoch_id)
-            admitted = (
-                urls.join(
-                    verdicts.filter(F.col("is_duplicate")).select("doc_id"),
-                    "doc_id",
-                    "left_anti",
-                )
-                .groupBy("url_canonical")
-                .agg(F.min("doc_id").alias("keeper"))
-            )
-            _guarded_store_append(admitted, store_dir, epoch_id)
-        finally:
-            if verdicts is not None:
-                verdicts.unpersist()
-            urls.unpersist()
-
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return _serve_epochs(
+        incoming_docs, checkpoint_dir, out_dir, {store_dir: None}, epoch
     )
 
 
@@ -1083,54 +1035,35 @@ def serve_dsir_filter_continuous(
         _dsir_score,
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _check_store_unlocked(store_dir)
-        spark = batch_df.sparkSession
-        db = _dsir_doc_buckets(spark, None, docs=batch_df).persist()
+    def epoch(ep: _Epoch):
+        db = ep.persist(_dsir_doc_buckets(ep.spark, None, docs=ep.batch))
         is_t = F.col("lang") == DSIR_TARGET_LANG
-        try:
-            import os
+        increments = db.groupBy("b").agg(
+            F.sum(F.when(is_t, F.col("c")).otherwise(0)).alias("t_add"),
+            F.sum(F.when(~is_t, F.col("c")).otherwise(0)).alias("r_add"),
+        )
+        hist = ep.history(store_dir, increments)
+        tb = hist.groupBy("b").agg(F.sum("t_add").alias("t"))
+        rb = hist.groupBy("b").agg(F.sum("r_add").alias("r"))
+        # a global aggregate over an empty (cold-start) history still
+        # yields its one (0, 0) totals row
+        tot = hist.groupBy().agg(
+            F.coalesce(F.sum("t_add"), F.lit(0)).alias("t_tot"),
+            F.coalesce(F.sum("r_add"), F.lit(0)).alias("r_tot"),
+        )
+        verdicts = _dsir_score(db.filter(~is_t), tb, rb, tot).select(
+            "doc_id",
+            "lang",
+            "n_grams",
+            "logw",
+            (F.col("logw") >= DSIR_KEEP_LOGW).alias("keep"),
+        )
+        return verdicts, [(increments, store_dir)]
 
-            if os.path.exists(store_dir):
-                # sum store: dedup (epoch, b) so a replayed epoch's
-                # re-appended increments cannot double-count
-                hist = _prior_history(
-                    spark, store_dir, epoch_id, dedupe_key=["b"]
-                )
-                tb = hist.groupBy("b").agg(F.sum("t_add").alias("t"))
-                rb = hist.groupBy("b").agg(F.sum("r_add").alias("r"))
-                tot = hist.groupBy().agg(
-                    F.coalesce(F.sum("t_add"), F.lit(0)).alias("t_tot"),
-                    F.coalesce(F.sum("r_add"), F.lit(0)).alias("r_tot"),
-                )
-            else:
-                tb = spark.createDataFrame([], "b int, t long")
-                rb = spark.createDataFrame([], "b int, r long")
-                tot = spark.createDataFrame(
-                    [(0, 0)], "t_tot long, r_tot long"
-                )
-            verdicts = _dsir_score(db.filter(~is_t), tb, rb, tot).select(
-                "doc_id",
-                "lang",
-                "n_grams",
-                "logw",
-                (F.col("logw") >= DSIR_KEEP_LOGW).alias("keep"),
-            )
-            _epoch_json(verdicts, out_dir, epoch_id)
-            increments = db.groupBy("b").agg(
-                F.sum(F.when(is_t, F.col("c")).otherwise(0)).alias("t_add"),
-                F.sum(F.when(~is_t, F.col("c")).otherwise(0)).alias("r_add"),
-            )
-            _guarded_store_append(increments, store_dir, epoch_id)
-        finally:
-            db.unpersist()
-
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    # sum store: dedup (epoch, b) so a replayed epoch's re-appended
+    # increments cannot double-count
+    return _serve_epochs(
+        incoming_docs, checkpoint_dir, out_dir, {store_dir: ["b"]}, epoch
     )
 
 
@@ -1158,46 +1091,26 @@ def serve_hll_distinct_continuous(
     SAME estimate (pinned in tests) — merge-then-estimate equals
     estimate-of-union, the sketch homomorphism."""
     from finmapreduce_spark.queries.sketches import (
-        HLL_M,
         _batch_hll_registers,
         _hll_estimate_from_regs,
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _check_store_unlocked(store_dir)
-        spark = batch_df.sparkSession
-        regs = _batch_hll_registers(batch_df).persist()
-        try:
-            import os
+    def epoch(ep: _Epoch):
+        regs = ep.persist(_batch_hll_registers(ep.batch))
+        merged = (
+            regs.unionByName(ep.history(store_dir, regs).select("b", "reg"))
+            .groupBy("b")
+            .agg(F.max("reg").alias("reg"))
+        )
+        est = _hll_estimate_from_regs(merged).select(
+            F.lit(int(ep.epoch_id)).cast("long").alias("epoch"),
+            F.col("hll_estimate"),
+            F.col("n_registers"),
+        )
+        return est, [(regs, store_dir)]
 
-            if os.path.exists(store_dir):
-                prior = _prior_history(spark, store_dir, epoch_id).select(
-                    "b", "reg"
-                )
-                merged = (
-                    regs.select("b", "reg")
-                    .unionByName(prior)
-                    .groupBy("b")
-                    .agg(F.max("reg").alias("reg"))
-                )
-            else:
-                merged = regs
-            est = _hll_estimate_from_regs(merged).select(
-                F.lit(int(epoch_id)).cast("long").alias("epoch"),
-                F.col("hll_estimate"),
-                F.col("n_registers"),
-            )
-            _epoch_json(est, out_dir, epoch_id)
-            _guarded_store_append(regs.select("b", "reg"), store_dir, epoch_id)
-        finally:
-            regs.unpersist()
-
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return _serve_epochs(
+        incoming_docs, checkpoint_dir, out_dir, {store_dir: None}, epoch
     )
 
 
@@ -1222,90 +1135,43 @@ def serve_cms_watchlist_continuous(
     double-count (cell counts are deterministic recomputations).
     Estimates keep the CMS guarantee over the deduped totals:
     est ≥ true, exactly the batch construction of
-    queries/sketches.py::sketch_countmin_grams."""
-    from finmapreduce_spark.queries.sketches import (
-        CMS_DEPTH,
-        _hex3,
-        _words,
-    )
+    queries/sketches.py::sketch_countmin_grams (same cell build, same
+    probe cells)."""
+    from finmapreduce_spark.queries.sketches import _cms_probes, _cms_sketch
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _check_store_unlocked(store_dir)
-        spark = batch_df.sparkSession
-        ks = F.explode(
-            F.array(*[F.lit(j) for j in range(CMS_DEPTH)])
-        ).alias("j")
-        cells = (
-            batch_df.select(F.explode(_words(F.col("text"))).alias("w"))
-            .select("w", ks)
-            .select(
-                "j",
-                _hex3(
-                    F.md5(F.concat_ws(":", F.col("j"), F.col("w"))), 1
-                ).alias("b"),
+    def epoch(ep: _Epoch):
+        cells = ep.persist(_cms_sketch(ep.batch).withColumnRenamed("c", "c_add"))
+        sketch = (
+            cells.unionByName(
+                ep.history(store_dir, cells).select("j", "b", "c_add")
             )
             .groupBy("j", "b")
-            .agg(F.count("*").alias("c_add"))
-            .persist()
+            .agg(F.sum("c_add").alias("c"))
         )
-        try:
-            import os
-
-            merged = cells.select("j", "b", "c_add")
-            if os.path.exists(store_dir):
-                merged = merged.unionByName(
-                    _prior_history(
-                        spark, store_dir, epoch_id, dedupe_key=["j", "b"]
-                    ).select("j", "b", "c_add")
-                )
-            sketch = merged.groupBy("j", "b").agg(
-                F.sum("c_add").alias("c")
-            )
-            # Probe the NORMALIZED form (same trim+lower as _words on
-            # the corpus side) so a mixed-case or padded watchlist
-            # entry still hits its cells; report under the caller's
-            # original spelling.
-            probes = spark.createDataFrame(
+        # Probe the NORMALIZED form (same trim+lower as _words on
+        # the corpus side) so a mixed-case or padded watchlist
+        # entry still hits its cells; report under the caller's
+        # original spelling.
+        probes = _cms_probes(
+            ep.spark.createDataFrame(
                 [(w, w.strip().lower()) for w in watchlist],
                 "orig string, w string",
-            ).select(
-                "orig",
-                "w",
-                F.explode(
-                    F.array(*[F.lit(j) for j in range(CMS_DEPTH)])
-                ).alias("j"),
-            ).select(
-                "orig",
-                "j",
-                _hex3(
-                    F.md5(F.concat_ws(":", F.col("j"), F.col("w"))), 1
-                ).alias("b"),
             )
-            est = (
-                probes.join(sketch, ["j", "b"], "left")
-                .groupBy("orig")
-                .agg(
-                    F.min(F.coalesce("c", F.lit(0))).alias("cms_estimate")
-                )
-                .select(
-                    F.lit(int(epoch_id)).cast("long").alias("epoch"),
-                    F.col("orig").alias("token"),
-                    "cms_estimate",
-                )
+        )
+        est = (
+            probes.join(sketch, ["j", "b"], "left")
+            .groupBy("orig")
+            .agg(F.min(F.coalesce("c", F.lit(0))).alias("cms_estimate"))
+            .select(
+                F.lit(int(ep.epoch_id)).cast("long").alias("epoch"),
+                F.col("orig").alias("token"),
+                "cms_estimate",
             )
-            _epoch_json(est, out_dir, epoch_id)
-            _guarded_store_append(
-                cells.select("j", "b", "c_add"), store_dir, epoch_id
-            )
-        finally:
-            cells.unpersist()
+        )
+        return est, [(cells, store_dir)]
 
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return _serve_epochs(
+        incoming_docs, checkpoint_dir, out_dir, {store_dir: ["j", "b"]}, epoch
     )
 
 
@@ -1339,54 +1205,35 @@ def serve_doremi_weights_continuous(
         doremi_weights_from_counts,
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _check_store_unlocked(store_dir)
-        spark = batch_df.sparkSession
-        inc = _doremi_bucket_counts(
-            batch_df.filter(F.col("text").isNotNull())
-        ).persist()
-        try:
-            hist = _history_or_empty(
-                spark,
-                store_dir,
-                epoch_id,
-                like=inc.select(
-                    "source", "b", F.col("c").alias("c_add")
-                ),
-                dedupe_key=["source", "b"],
-            )
-            merged = (
-                inc.unionByName(
-                    hist.select("source", "b", F.col("c_add").alias("c"))
-                )
-                .groupBy("source", "b")
-                .agg(F.sum("c").alias("c"))
-            )
-            weights = doremi_weights_from_counts(
-                spark, merged, persist=False
-            ).select(
-                F.lit(int(epoch_id)).cast("long").alias("epoch"),
-                "source",
-                "n_tokens",
-                "excess_r1",
-                "excess_r2",
-                "weight",
-            )
-            _epoch_json(weights, out_dir, epoch_id)
-            _guarded_store_append(
-                inc.select("source", "b", F.col("c").alias("c_add")),
-                store_dir,
-                epoch_id,
-            )
-        finally:
-            inc.unpersist()
+    def epoch(ep: _Epoch):
+        inc = ep.persist(
+            _doremi_bucket_counts(ep.batch.filter(F.col("text").isNotNull()))
+        )
+        increments = inc.select("source", "b", F.col("c").alias("c_add"))
+        hist = ep.history(store_dir, increments)
+        merged = (
+            inc.unionByName(hist.select("source", "b", F.col("c_add").alias("c")))
+            .groupBy("source", "b")
+            .agg(F.sum("c").alias("c"))
+        )
+        weights = doremi_weights_from_counts(
+            ep.spark, merged, persist=False
+        ).select(
+            F.lit(int(ep.epoch_id)).cast("long").alias("epoch"),
+            "source",
+            "n_tokens",
+            "excess_r1",
+            "excess_r2",
+            "weight",
+        )
+        return weights, [(increments, store_dir)]
 
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return _serve_epochs(
+        incoming_docs,
+        checkpoint_dir,
+        out_dir,
+        {store_dir: ["source", "b"]},
+        epoch,
     )
 
 
@@ -1427,79 +1274,47 @@ def serve_quantile_sketch_continuous(
         _qsk_threshold,
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        import os
+    levels_dir = os.path.join(store_dir, "levels")
+    sample_dir = os.path.join(store_dir, "sample")
 
-        # the two component stores live under one parent; the append
-        # markers are store-dir siblings, so the parent must exist
-        os.makedirs(store_dir, exist_ok=True)
-        levels_dir = os.path.join(store_dir, "levels")
-        sample_dir = os.path.join(store_dir, "sample")
-        _check_store_unlocked(levels_dir)
-        _check_store_unlocked(sample_dir)
-        spark = batch_df.sparkSession
-        base = _qsk_base(batch_df).persist()
-        try:
-            lvlc_inc = base.groupBy("lvl").agg(
-                F.count("*").alias("c_add")
-            )
-            merged_counts = lvlc_inc
-            if os.path.exists(levels_dir):
-                merged_counts = merged_counts.unionByName(
-                    _prior_history(
-                        spark, levels_dir, epoch_id, dedupe_key=["lvl"]
-                    ).select("lvl", "c_add")
-                )
-            thr = _qsk_threshold(
-                merged_counts.groupBy("lvl").agg(
-                    F.sum("c_add").alias("c")
-                )
-            )
-            pool = base.select("doc_id", "val", "lvl")
-            if os.path.exists(sample_dir):
-                pool = pool.unionByName(
-                    _prior_history(spark, sample_dir, epoch_id).select(
-                        "doc_id", "val", "lvl"
-                    )
-                )
-            retained = pool.join(
-                F.broadcast(thr), F.col("lvl") >= F.col("L")
-            ).persist()
-            pcts = spark.createDataFrame(
-                [(p,) for p in QSK_PCTS], "percentile double"
-            )
-            est = _qsk_select(
-                retained.select("doc_id", "val"), pcts
-            ).crossJoin(
-                F.broadcast(thr.select(F.col("L").cast("long").alias("level")))
-            ).select(
-                F.lit(int(epoch_id)).cast("long").alias("epoch"),
-                "percentile",
-                "sketch_value",
-                "n_retained",
-                "level",
-            )
-            _epoch_json(est, out_dir, epoch_id)
-            _guarded_store_append(
-                lvlc_inc.select("lvl", "c_add"), levels_dir, epoch_id
-            )
-            _guarded_store_append(
-                base.join(
-                    F.broadcast(thr), F.col("lvl") >= F.col("L")
-                ).select("doc_id", "val", "lvl"),
-                sample_dir,
-                epoch_id,
-            )
-            retained.unpersist()
-        finally:
-            base.unpersist()
+    def epoch(ep: _Epoch):
+        base = ep.persist(_qsk_base(ep.batch))
+        lvlc_inc = base.groupBy("lvl").agg(F.count("*").alias("c_add"))
+        counts = lvlc_inc.unionByName(
+            ep.history(levels_dir, lvlc_inc).select("lvl", "c_add")
+        )
+        thr = _qsk_threshold(
+            counts.groupBy("lvl").agg(F.sum("c_add").alias("c"))
+        )
+        at_level = F.col("lvl") >= F.col("L")
+        rows = base.select("doc_id", "val", "lvl")
+        pool = rows.unionByName(
+            ep.history(sample_dir, rows).select("doc_id", "val", "lvl")
+        )
+        retained = ep.persist(pool.join(F.broadcast(thr), at_level))
+        pcts = ep.spark.createDataFrame(
+            [(p,) for p in QSK_PCTS], "percentile double"
+        )
+        est = _qsk_select(retained.select("doc_id", "val"), pcts).crossJoin(
+            F.broadcast(thr.select(F.col("L").cast("long").alias("level")))
+        ).select(
+            F.lit(int(ep.epoch_id)).cast("long").alias("epoch"),
+            "percentile",
+            "sketch_value",
+            "n_retained",
+            "level",
+        )
+        admitted = rows.join(F.broadcast(thr), at_level).select(
+            "doc_id", "val", "lvl"
+        )
+        return est, [(lvlc_inc, levels_dir), (admitted, sample_dir)]
 
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return _serve_epochs(
+        incoming_docs,
+        checkpoint_dir,
+        out_dir,
+        {levels_dir: ["lvl"], sample_dir: None},
+        epoch,
     )
 
 
@@ -1529,103 +1344,61 @@ def serve_incremental_phash_continuous(
     against the store; the store grows by 4 rows per admitted image
     and compacts like the signature stores."""
     from finmapreduce_spark.operators.multimodal import (
+        DHASH_BANDS,
         dhash_images,
         fake_assets_from_documents,
     )
-    from finmapreduce_spark.queries.multimodal import PHASH_HAMMING_MAX
+    from finmapreduce_spark.queries.multimodal import (
+        PHASH_HAMMING_MAX,
+        phash_bands,
+        phash_hamming,
+    )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _check_store_unlocked(store_dir)
-        spark = batch_df.sparkSession
-        sig = dhash_images(
-            fake_assets_from_documents(batch_df)
-        ).persist()
-        try:
-            bands = sig.select(
-                "asset_id",
-                "b0",
-                "b1",
-                "b2",
-                "b3",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(k).alias("k"),
-                                F.col(f"b{k}").alias("bv"),
-                            )
-                            for k in range(4)
-                        ]
-                    )
-                ).alias("bd"),
-            ).select(
-                "asset_id", "b0", "b1", "b2", "b3",
-                F.col("bd.k").alias("k"), F.col("bd.bv").alias("bv"),
+    def epoch(ep: _Epoch):
+        sig = ep.persist(dhash_images(fake_assets_from_documents(ep.batch)))
+        bands = phash_bands(sig)
+        hist = (
+            ep.history(store_dir, bands)
+            .dropDuplicates(["asset_id", "k", "bv"])
+            .select(
+                F.col("asset_id").alias("hist_asset"),
+                "k",
+                "bv",
+                *[
+                    F.col(f"b{k}").alias(f"hist_b{k}")
+                    for k in range(DHASH_BANDS)
+                ],
             )
-            import os
-
-            ham = sum(
-                F.bit_count(
-                    F.col(f"b{k}").bitwiseXOR(F.col(f"hist_b{k}"))
-                )
-                for k in range(4)
-            ).cast("long")
-            if os.path.exists(store_dir):
-                hist = _prior_history(spark, store_dir, epoch_id)
-                hist = hist.dropDuplicates(["asset_id", "k", "bv"]).select(
-                    F.col("asset_id").alias("hist_asset"),
-                    "k",
-                    "bv",
-                    *[F.col(f"b{k}").alias(f"hist_b{k}") for k in range(4)],
-                )
-                matches = (
-                    bands.join(hist, ["k", "bv"])
-                    .withColumn("hamming", ham)
-                    .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
-                    .groupBy("asset_id")
-                    .agg(
-                        F.min(
-                            F.struct("hamming", "hist_asset")
-                        ).alias("m")
-                    )
-                    .select(
-                        "asset_id",
-                        F.col("m.hist_asset").alias("hist_asset"),
-                        F.col("m.hamming").alias("hamming"),
-                    )
-                )
-            else:
-                matches = (
-                    sig.select("asset_id").limit(0)
-                    .select(
-                        "asset_id",
-                        F.lit(None).cast("long").alias("hist_asset"),
-                        F.lit(None).cast("long").alias("hamming"),
-                    )
-                )
-            verdicts = sig.select("asset_id").join(
-                matches, "asset_id", "left"
-            ).select(
+        )
+        matches = (
+            bands.join(hist, ["k", "bv"])
+            .withColumn("hamming", phash_hamming("b{}", "hist_b{}"))
+            .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
+            .groupBy("asset_id")
+            .agg(F.min(F.struct("hamming", "hist_asset")).alias("m"))
+            .select(
+                "asset_id",
+                F.col("m.hist_asset").alias("hist_asset"),
+                F.col("m.hamming").alias("hamming"),
+            )
+        )
+        verdicts = ep.persist(
+            sig.select("asset_id")
+            .join(matches, "asset_id", "left")
+            .select(
                 F.col("asset_id"),
                 F.col("hist_asset").isNotNull().alias("is_duplicate"),
                 "hist_asset",
                 "hamming",
-            ).persist()
-            _epoch_json(verdicts, out_dir, epoch_id)
-            admitted = bands.join(
-                verdicts.filter(F.col("is_duplicate")).select("asset_id"),
-                "asset_id",
-                "left_anti",
             )
-            _guarded_store_append(admitted, store_dir, epoch_id)
-            verdicts.unpersist()
-        finally:
-            sig.unpersist()
+        )
+        admitted = bands.join(
+            verdicts.filter(F.col("is_duplicate")).select("asset_id"),
+            "asset_id",
+            "left_anti",
+        )
+        return verdicts, [(admitted, store_dir)]
 
-    return (
-        incoming_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return _serve_epochs(
+        incoming_docs, checkpoint_dir, out_dir, {store_dir: None}, epoch
     )

@@ -2050,3 +2050,55 @@ def test_continuous_doremi_weights_match_batch_twin(spark, tmp_path):
     assert w_pre == w_post
     assert {s: r["weight"] for s, r in by_epoch[1].items()} == w_post
     spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize(
+    "mode",
+    [
+        "dedup", "substring", "semantic", "url", "phash",
+        "dsir", "hll", "quantile", "cms", "doremi",
+    ],
+)
+def test_continuous_epoch_releases_frames_when_append_fails(
+    spark, tmp_path, monkeypatch, mode
+):
+    """Every ingest mode releases the frames its epoch persisted even
+    when the store append raises: a long-running ingest must not keep
+    one cached frame per failed epoch."""
+    from pyspark.errors import StreamingQueryException
+
+    from finmapreduce_spark import ingest
+    from finmapreduce_spark.streaming import pipeline as P
+
+    def failing_append(df, store_dir, epoch_id):
+        raise RuntimeError("store append failed")
+
+    monkeypatch.setattr(P, "_guarded_store_append", failing_append)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    # doc_ids ≡ 0 mod 3 carry images (phash); one target-language and
+    # one raw doc (dsir)
+    rows = [
+        {
+            "doc_id": d,
+            "text": " ".join(f"w{d}x{i}" for i in range(80)),
+            "lang": lang,
+            "source": "web",
+        }
+        for d, lang in ((3, "en"), (6, "de"), (9, "en"))
+    ]
+    (landing / "e0.json").write_text(
+        "".join(json.dumps(r) + "\n" for r in rows)
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(StreamingQueryException, match="store append failed"):
+        ingest.run(
+            spark,
+            mode,
+            str(landing),
+            str(tmp_path / "store"),
+            str(tmp_path / "out"),
+            str(tmp_path / "ckpt"),
+            watchlist=["w3x1"],
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
