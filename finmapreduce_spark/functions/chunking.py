@@ -58,26 +58,3 @@ def explode_chunks(
         *[F.col(c) for c in key_cols],
         F.posexplode(chunks).alias("chunk_index", "chunk_text"),
     )
-
-
-def chunk_oracle_sql(
-    table: str,
-    key_col: str,
-    text_col: str,
-    chunk_size: int,
-    chunk_overlap: int,
-) -> str:
-    """DuckDB SQL computing the identical chunking (for oracle tests)."""
-    step = chunk_size - chunk_overlap
-    return f"""
-      SELECT {key_col},
-             CAST(i AS INT) AS chunk_index,
-             substring({text_col}, i * {step} + 1, {chunk_size}) AS chunk_text
-      FROM (
-        SELECT {key_col}, {text_col},
-               CASE WHEN length({text_col}) <= {chunk_size} THEN 1
-                    ELSE CAST(ceil((length({text_col}) - {chunk_size}) / {step}.0) AS BIGINT) + 1
-               END AS n_chunks
-        FROM {table}
-      ), LATERAL unnest(range(0, n_chunks)) AS t(i)
-    """

@@ -1,8 +1,8 @@
-"""F9/F10 — XML escaping and prompt rendering as column expressions.
+"""F9 — XML escaping and chunk rendering as column expressions.
 
 Reference: escape &<>'\" then render per-chunk ``<chunk_i>`` blocks
-(/root/reference/src/formatters/json_formatter.py:55-98) and judge
-``<item>`` blocks (src/evaluation/async_evaluation.py:60-186).
+(reference src/formatters/json_formatter.py:55-98). The judge
+``<item>`` block (F10) is built inline in plans/mapreduce.py::judge_stage.
 
 Pure ``replace``/``concat`` chains — codegen'd, and reproducible in
 ANSI SQL for the oracles. Escape order matters: & first, or already-
@@ -48,16 +48,4 @@ def render_chunk_xml(index: Column, text: Column) -> Column:
         F.lit("<chunk_"), i, F.lit(">\n"),
         xml_escape(text),
         F.lit("\n</chunk_"), i, F.lit(">"),
-    )
-
-
-def render_judge_item(llm_answer: Column, gold: Column) -> Column:
-    """F10: the judge ``<item>`` block (standard formatter shape,
-    async_evaluation.py:60-83)."""
-    return F.concat(
-        F.lit("<item><llm_answer>"),
-        xml_escape(F.coalesce(llm_answer, F.lit(""))),
-        F.lit("</llm_answer>\n<gold>"),
-        xml_escape(F.coalesce(gold, F.lit(""))),
-        F.lit("</gold></item>"),
     )

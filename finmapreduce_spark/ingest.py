@@ -25,13 +25,19 @@ additionally reads `lang`):
 
 Each store has a matching offline compactor in sources/sinks.py; run
 those from a maintenance job, never concurrently with ingest (the
-append-marker/compaction-lock guard fails fast if you do).
+append-marker/compaction-lock guard fails fast if you do). A
+compaction killed between its two renames leaves the old store only
+in its ``.pre-compact`` rollback copy; the next ingest epoch's read
+(or the next compaction) restores it. A hard kill also leaves the
+``.lock`` file beside the store: remove it once no compactor runs.
 """
 
 from __future__ import annotations
 
 import argparse
+import glob
 import json
+import os
 
 
 def _schema(mode: str) -> str:
@@ -83,12 +89,13 @@ def run(
         writer = modes[mode](stream, store, out, checkpoint)
     q = writer.start()
     q.awaitTermination()
-    emitted = spark.read.json(out)
-    n_rows = emitted.count()
-    n_epochs = emitted.select("epoch_id").distinct().count()
+    # every non-empty epoch writes its out/epoch_id=N directory, even
+    # when it emits no row (substring emits only rejections)
+    n_epochs = len(glob.glob(os.path.join(out, "epoch_id=*")))
+    n_rows = spark.read.json(out).count()
     return {
         "mode": mode,
-        "epochs": int(n_epochs),
+        "epochs": n_epochs,
         "rows_emitted": int(n_rows),
         "store": store,
         "out": out,

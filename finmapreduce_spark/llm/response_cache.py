@@ -27,6 +27,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from finmapreduce_spark.sources.sinks import (
+    _check_no_appenders,
+    _StoreLock,
+    recover_swap,
+    store_lock_path,
+    store_writer,
+    swap_in,
+)
+
 CACHE_SCHEMA = "key string, content string, input_tokens long, output_tokens long"
 
 
@@ -47,14 +56,13 @@ def _key(kind: str, prompt_col, namespace: str = ""):
 def _recover_interrupted_compaction(cache_dir: str) -> None:
     """Close the compaction crash windows: (a) killed between the two
     renames — the table sits at ``<cache_dir>.compact-old`` while
-    ``cache_dir`` is gone — restore it instead of silently re-paying
-    every cached prompt; (b) killed after the swap but before the
-    staging carry-over — staged raws stranded under the old dir —
-    move them into the live table before anything deletes them."""
+    ``cache_dir`` is gone — restore it (recover_swap) instead of
+    silently re-paying every cached prompt; (b) killed after the swap
+    but before the staging carry-over — staged raws stranded under the
+    old dir — move them into the live table before anything deletes
+    them. Runs under the writer guard or the compaction lock."""
     old = cache_dir.rstrip("/") + ".compact-old"
-    if not os.path.isdir(cache_dir) and os.path.isdir(old):
-        os.rename(old, cache_dir)
-        return
+    recover_swap(cache_dir, old)
     old_staging = os.path.join(old, "_staging")
     live_staging = os.path.join(cache_dir, "_staging")
     if (
@@ -65,24 +73,25 @@ def _recover_interrupted_compaction(cache_dir: str) -> None:
         os.rename(old_staging, live_staging)
 
 
-def _compact_lock_path(cache_dir: str) -> str:
-    # NEXT TO cache_dir, not inside it — the dir itself is renamed
-    # away mid-compaction, which would take an in-dir lock with it
-    return cache_dir.rstrip("/") + ".compact-lock"
+def _expire_stale_lock(cache_dir: str, stale_lock_s: float) -> None:
+    """A compaction lock older than ``stale_lock_s`` is presumed
+    crashed: rename it aside ATOMICALLY so _StoreLock can be taken —
+    exactly one renamer wins (remove+recreate would let two stealers
+    each delete the other's fresh lock and both run the swap). A lock
+    that is young, gone, or lost to another stealer is left to
+    _StoreLock to report."""
+    import time
+    import uuid
 
-
-def _raise_if_compacting(cache_dir: str) -> None:
-    """Writer-side half of the compaction exclusion: a job must not
-    start staging/appending into a directory inode the compactor is
-    about to rename away (its fresh_raw parquet is lazily re-read
-    downstream — losing the dir loses paid responses)."""
-    lock = _compact_lock_path(cache_dir)
-    if os.path.exists(lock):
-        raise RuntimeError(
-            f"response cache {cache_dir!r} is being compacted "
-            f"(lock file {lock!r} present); retry once compaction "
-            "finishes, or delete the lock if a compactor crashed"
-        )
+    lock = store_lock_path(cache_dir)
+    try:
+        if time.time() - os.path.getmtime(lock) < stale_lock_s:
+            return
+        stolen = f"{lock}.stolen-{uuid.uuid4().hex[:8]}"
+        os.rename(lock, stolen)
+    except OSError:
+        return
+    os.remove(stolen)
 
 
 def _newest_write_age_s(cache_dir: str) -> float | None:
@@ -182,9 +191,7 @@ def run_llm_stage_cached(
     from finmapreduce_spark.llm.runner import run_llm_stage
 
     spark = df.sparkSession
-    _raise_if_compacting(cache_dir)
     keyed = df.withColumn("__key", _key(kind, F.col(prompt_col), namespace))
-    cache = _load_cache(spark, cache_dir)
 
     in_cols = [f.name for f in keyed.schema.fields]
     raw_fields = [
@@ -194,18 +201,6 @@ def run_llm_stage_cached(
         T.StructField("__out_tok", T.LongType(), True),
     ]
     raw_schema = T.StructType(list(keyed.schema.fields) + raw_fields)
-
-    hits = keyed.join(
-        cache.select(
-            F.col("key").alias("__key"),
-            F.col("content").alias("__content"),
-            F.col("input_tokens").alias("__in_tok"),
-            F.col("output_tokens").alias("__out_tok"),
-        ),
-        "__key",
-    ).select(*in_cols, "__content", F.lit(None).cast("string").alias("__error"),
-             "__in_tok", "__out_tok")
-    misses = keyed.join(cache.select(F.col("key").alias("__key")), "__key", "left_anti")
 
     def echo_builder(pdf: pd.DataFrame, responses: list) -> pd.DataFrame:
         out = pdf[in_cols].copy()
@@ -225,15 +220,27 @@ def run_llm_stage_cached(
 
     # The ONLY execution of the paid stage: write raws durably, then
     # read them back for both the cache append and the replay. The
-    # whole PAID (eager) phase holds an append marker so a starting
-    # compactor refuses rather than renaming the directory inode away
-    # mid-call — LLM batches can legitimately go minutes without a
-    # parquet flush, which the compactor's mtime quiesce cannot see.
-    from finmapreduce_spark.sources.sinks import append_marker
-
+    # writer guard spans the cache read and the whole PAID (eager)
+    # phase, so a starting compactor refuses rather than renaming the
+    # directory inode away mid-call — LLM batches can legitimately go
+    # minutes without a parquet flush, which the compactor's mtime
+    # quiesce cannot see.
     staging = os.path.join(cache_dir, "_staging", f"{kind}-{uuid.uuid4().hex}")
-    with append_marker(cache_dir):
-        _raise_if_compacting(cache_dir)  # re-check under the marker
+    with store_writer(cache_dir):
+        cache = _load_cache(spark, cache_dir)
+        hits = keyed.join(
+            cache.select(
+                F.col("key").alias("__key"),
+                F.col("content").alias("__content"),
+                F.col("input_tokens").alias("__in_tok"),
+                F.col("output_tokens").alias("__out_tok"),
+            ),
+            "__key",
+        ).select(*in_cols, "__content", F.lit(None).cast("string").alias("__error"),
+                 "__in_tok", "__out_tok")
+        misses = keyed.join(
+            cache.select(F.col("key").alias("__key")), "__key", "left_anti"
+        )
         run_llm_stage(
             misses,
             prompt_col=prompt_col,
@@ -313,9 +320,10 @@ def compact_response_cache(
     versioned prefix + pointer instead.
 
     The "offline" assumption is ENFORCED, not conventional (ADVICE
-    r05): (a) a lock file at ``<cache_dir>.compact-lock`` excludes
-    concurrent compactors AND makes new cached-stage runs refuse to
-    start (``_raise_if_compacting``), and (b) compaction itself
+    r05): (a) the store compaction lock (sources/sinks.py
+    ``_StoreLock``, ``<cache_dir>.lock``) excludes concurrent
+    compactors AND makes new cached-stage runs refuse to start
+    (their ``store_writer`` guard), and (b) compaction itself
     refuses while ``_staging``/``seg-*`` contain writes newer than
     ``quiesce_s`` — a live job's staged raws are lazily re-read
     downstream, so renaming the directory inode away would lose its
@@ -325,46 +333,8 @@ def compact_response_cache(
 
     Returns {"rows", "files_before", "files_after"}.
     """
-    import time
-
-    import uuid
-
-    lock = _compact_lock_path(cache_dir)
-    try:
-        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        try:
-            age = time.time() - os.path.getmtime(lock)
-        except OSError:
-            age = 0.0  # vanished/unreadable: treat as held, retry later
-        if age < stale_lock_s:
-            raise RuntimeError(
-                f"another compaction holds {lock!r} (age {age:.0f}s); "
-                "retry later or delete the lock if it crashed"
-            )
-        # ATOMIC steal: rename the expired lock aside — exactly one
-        # renamer wins (remove+recreate would let two stealers each
-        # delete the other's fresh lock and both run the swap)
-        stolen = f"{lock}.stolen-{uuid.uuid4().hex[:8]}"
-        try:
-            os.rename(lock, stolen)
-        except OSError:
-            raise RuntimeError(
-                f"lost the steal race for {lock!r}; retry later"
-            ) from None
-        os.remove(stolen)
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            raise RuntimeError(
-                f"another compactor acquired {lock!r} after the steal; "
-                "retry later"
-            ) from None
-    os.write(fd, f"pid={os.getpid()}\n".encode())
-    os.close(fd)
-    try:
-        from finmapreduce_spark.sources.sinks import _check_no_appenders
-
+    _expire_stale_lock(cache_dir, stale_lock_s)
+    with _StoreLock(cache_dir):
         _check_no_appenders(cache_dir)  # a paid eager phase is in flight
         _recover_interrupted_compaction(cache_dir)
         if quiesce_s > 0 and os.path.isdir(cache_dir):
@@ -376,11 +346,6 @@ def compact_response_cache(
                     "suggest a live job; wait or pass quiesce_s=0"
                 )
         return _compact_locked(spark, cache_dir)
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def _compact_locked(spark: SparkSession, cache_dir: str) -> dict:
@@ -392,14 +357,11 @@ def _compact_locked(spark: SparkSession, cache_dir: str) -> dict:
     cache.sortWithinPartitions("key").write.mode("overwrite").parquet(tmp)
     rows = spark.read.parquet(tmp).count()
     old = cache_dir.rstrip("/") + ".compact-old"
-    shutil.rmtree(old, ignore_errors=True)  # stale leftover from a crash
-    # Two renames, not atomic: a crash between them leaves the table
-    # at .compact-old — _recover_interrupted_compaction (run by every
+    # a crash between swap_in's renames leaves the table at
+    # .compact-old — _recover_interrupted_compaction (run by every
     # reader and by this function) renames it back, so the window
     # costs a retry, never the table.
-    if os.path.isdir(cache_dir):
-        os.rename(cache_dir, old)
-    os.rename(tmp, cache_dir)
+    swap_in(cache_dir, tmp, old)
     # PRESERVE _staging across the swap: a job that finished its paid
     # phase (marker released) may still lazily re-read its staged raws
     # downstream — deleting them with the old dir would lose paid

@@ -337,31 +337,6 @@ REDUCE_OUT_SCHEMA = (
 )
 
 
-def judge_row_builder(pdf: pd.DataFrame, responses: list) -> pd.DataFrame:
-    from finmapreduce_spark.llm.client import robust_json_parse
-
-    verdicts, reasonings = [], []
-    for r in responses:
-        if isinstance(r, Exception):
-            verdicts.append("Error")  # reference fallback rows (:297-350)
-            reasonings.append(str(r))
-            continue
-        try:
-            parsed = robust_json_parse(r.content)
-            verdicts.append(parsed.get("judgement", "Error"))
-            reasonings.append(parsed.get("reasoning", ""))
-        except ValueError:
-            verdicts.append("Error")
-            reasonings.append("unparseable judge response")
-    return pd.DataFrame(
-        {
-            "qa_id": pdf["qa_id"].values,
-            "judgment": verdicts,
-            "reasoning": reasonings,
-        }
-    )
-
-
 JUDGE_OUT_SCHEMA = "qa_id long, judgment string, reasoning string"
 
 

@@ -36,7 +36,6 @@ from finmapreduce_spark.llm.runner import (
     JUDGE_OUT_SCHEMA,
     MAP_OUT_SCHEMA,
     REDUCE_OUT_SCHEMA,
-    judge_row_builder,
     map_row_builder,
     mock_client_factory,
     reduce_row_builder,
@@ -129,8 +128,13 @@ class MapReduceConfig:
 
 
 def _llm_stage(df: DataFrame, cfg: MapReduceConfig, **kw) -> DataFrame:
-    """Route through the cross-run response cache when configured."""
+    """Run one paid stage: repartition to ``llm_partitions`` so the
+    global in-flight cap (partitions × concurrency) bounds EVERY paid
+    stage, and route through the cross-run response cache when
+    configured."""
     kw.setdefault("concurrency", cfg.concurrency)
+    if cfg.llm_partitions:
+        df = df.repartition(cfg.llm_partitions)
     if cfg.response_cache_dir:
         from finmapreduce_spark.llm.response_cache import run_llm_stage_cached
 
@@ -211,8 +215,6 @@ def map_stage(chunks: DataFrame, cfg: MapReduceConfig) -> DataFrame:
         "prompt",
         F.format_string(cfg.map_template, F.col("question"), F.col("chunk_text")),
     )
-    if cfg.llm_partitions:
-        with_prompt = with_prompt.repartition(cfg.llm_partitions)
     return _llm_stage(
         with_prompt,
         cfg,
@@ -358,10 +360,6 @@ def reduce_stage(kept: DataFrame, qa: DataFrame, cfg: MapReduceConfig) -> DataFr
         "prompt",
         F.format_string(cfg.reduce_template, F.col("question"), F.col("serialized")),
     )
-    if cfg.llm_partitions:
-        # the global in-flight cap (partitions × concurrency) must
-        # bound EVERY paid stage, not just the map
-        with_q = with_q.repartition(cfg.llm_partitions)
     reduced = _llm_stage(
         with_q,
         cfg,
@@ -566,8 +564,6 @@ def judge_stage(answers: DataFrame, cfg: MapReduceConfig) -> DataFrame:
                 )
         return pd.DataFrame(rows, columns=["qa_id", "judgment", "reasoning"])
 
-    if cfg.llm_partitions:
-        per_batch = per_batch.repartition(cfg.llm_partitions)
     return _llm_stage(
         per_batch,
         cfg,
@@ -601,7 +597,6 @@ def preprocess_questions(
     import pandas as pd
 
     from finmapreduce_spark.llm.client import robust_json_parse
-    from finmapreduce_spark.llm.runner import run_llm_stage
 
     qa_cols = list(qa.columns)
     with_prompt = qa.withColumn(

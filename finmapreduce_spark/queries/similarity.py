@@ -1043,26 +1043,6 @@ def _ivf_segments(root: str) -> list[tuple[int, str, str]]:
     return sorted(out)
 
 
-def _recover_interrupted_ivf_compaction(root: str) -> None:
-    """Close compact_ivf_index's two-rename crash window: a crash
-    between the renames leaves the table at ``vectors.pre-compact``
-    with ``vectors/`` gone — restore it. Readers only recover when no
-    compaction lock is held (mid-compaction the gap is transient and
-    owned by the compactor)."""
-    import os as _os
-
-    from finmapreduce_spark.sources.sinks import store_lock_path
-
-    base = _os.path.join(root, "vectors")
-    old = _os.path.join(root, "vectors.pre-compact")
-    if (
-        not _os.path.isdir(base)
-        and _os.path.isdir(old)
-        and not _os.path.exists(store_lock_path(root))
-    ):
-        _os.rename(old, base)
-
-
 def append_ivf_delta(spark: SparkSession, root: str, assigned_delta: DataFrame,
                      tag) -> str:
     """Per-batch insert: write an already-routed delta batch as its
@@ -1082,9 +1062,9 @@ def append_ivf_delta(spark: SparkSession, root: str, assigned_delta: DataFrame,
     (sources/sinks.py)."""
     import os as _os
 
-    from finmapreduce_spark.sources.sinks import append_marker, store_lock_path
-
     import re as _re
+
+    from finmapreduce_spark.sources.sinks import store_writer
 
     if not _re.fullmatch(r"[A-Za-z0-9._-]+", str(tag)):
         # a tag the segment regex cannot round-trip (empty, slashes,
@@ -1093,11 +1073,7 @@ def append_ivf_delta(spark: SparkSession, root: str, assigned_delta: DataFrame,
         raise ValueError(
             f"invalid IVF delta tag {tag!r}: use [A-Za-z0-9._-]+"
         )
-    with append_marker(root):
-        if _os.path.exists(store_lock_path(root)):
-            raise RuntimeError(
-                f"IVF index {root!r} is being compacted; retry after"
-            )
+    with store_writer(root):
         _raise_if_refresh_interrupted(root)
         segs = _ivf_segments(root)
         same_tag = [s for s in segs if s[1] == str(tag)]
@@ -1116,17 +1092,22 @@ def compact_ivf_index(spark: SparkSession, root: str) -> dict:
     one row either way. Re-partitioned by cid so serving's partition
     pruning sees one clean layout again.
 
-    Crash safety mirrors the response cache: two renames with a
-    ``vectors.pre-compact`` rollback that
-    ``_recover_interrupted_ivf_compaction`` (run by every reader and
-    by this function) restores, consumed segments and the rollback
-    copy deleted only after the swap lands. Offline posture ENFORCED
-    via the shared two-sided guard (lock + append markers)."""
+    Crash safety is the store family's protocol (sources/sinks.py):
+    swap_in's two renames with a ``vectors.pre-compact`` rollback that
+    recover_swap (run by every unlocked reader and by this function)
+    restores, consumed segments and the rollback copy deleted only
+    after the swap lands. Offline posture ENFORCED via the shared
+    two-sided guard (lock + append markers)."""
     import glob as _glob
     import os as _os
     import shutil as _shutil
 
-    from finmapreduce_spark.sources.sinks import _check_no_appenders, _StoreLock
+    from finmapreduce_spark.sources.sinks import (
+        _check_no_appenders,
+        _StoreLock,
+        recover_swap,
+        swap_in,
+    )
 
     with _StoreLock(root):
         _check_no_appenders(root)
@@ -1136,7 +1117,9 @@ def compact_ivf_index(spark: SparkSession, root: str) -> dict:
                 "compacting a mixed cid space would bake stale routing "
                 "— re-run refresh_ivf_index instead"
             )
-        _recover_interrupted_ivf_compaction_locked(root)
+        base = _os.path.join(root, "vectors")
+        old = _os.path.join(root, "vectors.pre-compact")
+        recover_swap(base, old)
         segs = _ivf_segments(root)
         vecs = _ivf_union_with_ord(spark, root, segs)
         rows_before = vecs.count()
@@ -1149,9 +1132,7 @@ def compact_ivf_index(spark: SparkSession, root: str) -> dict:
         _shutil.rmtree(tmp, ignore_errors=True)
         compacted.write.mode("overwrite").partitionBy("cid").parquet(tmp)
         rows_after = spark.read.parquet(tmp).count()
-        base = _os.path.join(root, "vectors")
-        old = _os.path.join(root, "vectors.pre-compact")
-        _two_rename_swap(base, tmp, old)
+        swap_in(base, tmp, old)
         for _, _, p in segs:
             _shutil.rmtree(p)
         _shutil.rmtree(old, ignore_errors=True)  # swap landed; drop rollback
@@ -1165,17 +1146,6 @@ def compact_ivf_index(spark: SparkSession, root: str) -> dict:
             "rows_before": rows_before,
             "rows_after": rows_after,
         }
-
-
-def _recover_interrupted_ivf_compaction_locked(root: str) -> None:
-    """Recovery variant for the lock HOLDER (the reader-side check
-    skips recovery while a lock exists — which is us, here)."""
-    import os as _os
-
-    base = _os.path.join(root, "vectors")
-    old = _os.path.join(root, "vectors.pre-compact")
-    if not _os.path.isdir(base) and _os.path.isdir(old):
-        _os.rename(old, base)
 
 
 def _ivf_union_with_ord(spark: SparkSession, root: str, segs) -> DataFrame:
@@ -1232,19 +1202,6 @@ def _raise_if_refresh_interrupted(root: str) -> None:
         )
 
 
-def _two_rename_swap(final_dir: str, tmp_dir: str, rollback_dir: str) -> None:
-    """The shared swap: park the current dir at ``rollback_dir``,
-    promote ``tmp_dir``. Not atomic — callers pair it with a recovery
-    path (compaction) or the refresh sentinel."""
-    import os as _os
-    import shutil as _shutil
-
-    _shutil.rmtree(rollback_dir, ignore_errors=True)
-    if _os.path.isdir(final_dir):
-        _os.rename(final_dir, rollback_dir)
-    _os.rename(tmp_dir, final_dir)
-
-
 def refresh_ivf_index(spark: SparkSession, root: str) -> dict:
     """The deliberate OFFLINE event incremental maintenance defers:
     RETRAIN centroids on everything ingested so far (latest-wins over
@@ -1271,11 +1228,18 @@ def refresh_ivf_index(spark: SparkSession, root: str) -> dict:
     import os as _os
     import shutil as _shutil
 
-    from finmapreduce_spark.sources.sinks import _check_no_appenders, _StoreLock
+    from finmapreduce_spark.sources.sinks import (
+        _check_no_appenders,
+        _StoreLock,
+        recover_swap,
+        swap_in,
+    )
 
     with _StoreLock(root):
         _check_no_appenders(root)
-        _recover_interrupted_ivf_compaction_locked(root)
+        base = _os.path.join(root, "vectors")
+        old = _os.path.join(root, "vectors.pre-compact")
+        recover_swap(base, old)
         segs = _ivf_segments(root)
         current = (
             _ivf_latest(_ivf_union_with_ord(spark, root, segs))
@@ -1305,9 +1269,7 @@ def refresh_ivf_index(spark: SparkSession, root: str) -> dict:
         # --- mutation begins: sentinel up until every step lands ---
         fd = _os.open(_refresh_sentinel(root), _os.O_CREAT | _os.O_WRONLY)
         _os.close(fd)
-        base = _os.path.join(root, "vectors")
-        old = _os.path.join(root, "vectors.pre-compact")
-        _two_rename_swap(base, tmp, old)
+        swap_in(base, tmp, old)
         # segments die IMMEDIATELY after the vectors swap (they are
         # folded into the new base, and their cids belong to the OLD
         # centroid space — leaving them any longer than necessary
@@ -1316,7 +1278,7 @@ def refresh_ivf_index(spark: SparkSession, root: str) -> dict:
             _shutil.rmtree(p)
         cdir = _os.path.join(root, "centroids")
         old_c = _os.path.join(root, "centroids.pre-refresh")
-        _two_rename_swap(cdir, tmp_c, old_c)
+        swap_in(cdir, tmp_c, old_c)
         _shutil.rmtree(old, ignore_errors=True)
         _shutil.rmtree(old_c, ignore_errors=True)
         _os.remove(_refresh_sentinel(root))
@@ -1339,8 +1301,15 @@ def read_ivf_vectors(spark: SparkSession, root: str) -> DataFrame:
     cache's reader."""
     import os as _os
 
+    from finmapreduce_spark.sources.sinks import recover_swap, store_lock_path
+
     _raise_if_refresh_interrupted(root)
-    _recover_interrupted_ivf_compaction(root)
+    if not _os.path.exists(store_lock_path(root)):
+        # mid-compaction the gap is transient and owned by the compactor
+        recover_swap(
+            _os.path.join(root, "vectors"),
+            _os.path.join(root, "vectors.pre-compact"),
+        )
     segs = _ivf_segments(root)
     if not segs:
         return spark.read.parquet(_os.path.join(root, "vectors"))

@@ -158,9 +158,3 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every synthetic table as a temp view for spark.sql."""
-    for t in TABLES:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)

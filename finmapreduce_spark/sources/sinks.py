@@ -1,10 +1,11 @@
-"""Sinks (SURVEY §2.1 S11–S13).
+"""Sinks (SURVEY §2.1 S11; S13, the prompt log, is not carried).
 
 - S11 results sink: timestamped JSON results directory + driver-side
   summary (reference base_pipeline.py:477-505 writes one big JSON; the
   Spark version writes the row data distributed and keeps only the
   small aggregate summary on the driver).
-- S13 prompt log: optional JSON debug sink (async_llm_client.py:240-262).
+- The offline-rewrite protocol every store compactor shares (below
+  save_events_zorder) and the epoch-append store compactors.
 """
 
 from __future__ import annotations
@@ -48,14 +49,6 @@ def save_results(
         json.dump(summary, f, indent=2, default=str)
     answers.unpersist()
     return out_dir
-
-
-def log_prompts(df: DataFrame, prompt_col: str, log_dir: str) -> None:
-    """S13: one JSON per prompt, for debugging paid-call content."""
-    df.select(
-        F.monotonically_increasing_id().alias("prompt_id"),
-        F.col(prompt_col).alias("prompt"),
-    ).write.mode("append").json(log_dir)
 
 
 def save_corpus(
@@ -234,19 +227,35 @@ def save_events_zorder(
             spark.conf.set(conf_key, prev)
 
 
+# ---------------------------------------------------------------------------
+# The offline-rewrite protocol shared by every compactor: the nine
+# epoch-append stores below, the LLM response cache
+# (llm/response_cache.py) and the IVF index (queries/similarity.py).
+#   1. the compactor takes _StoreLock and refuses while any append
+#      marker is up (_check_no_appenders);
+#   2. writers run inside store_writer: marker up, then the lock check;
+#   3. the rewrite lands beside the live directory and swap_in promotes
+#      it with two renames, parking the old one at a rollback path;
+#   4. recover_swap undoes a swap cut between its renames. Compactors
+#      run it under their lock, epoch writers inside store_writer
+#      (neither can overlap a running swap), plain readers only when no
+#      lock is held.
+# ---------------------------------------------------------------------------
+
+
 def store_lock_path(store_dir: str) -> str:
     """Lock file marking the store as under compaction. It sits BESIDE
     the store directory (a lock inside would travel with the swap's
-    renames) and is honored by the continuous-ingest appenders
-    (streaming/pipeline.py), which fail fast instead of racing the
-    rewrite — closing the append-between-list-and-swap TOCTOU window
-    rather than merely narrowing it."""
+    renames) and is honored by every store_writer, which fails fast
+    instead of racing the rewrite."""
     return store_dir.rstrip("/") + ".lock"
 
 
 class _StoreLock:
     """Exclusive compaction lock via O_CREAT|O_EXCL — atomic on POSIX
-    local and NFS; on object stores swap this for a conditional-put."""
+    local and NFS; on object stores swap this for a conditional-put.
+    A crashed compactor leaves the lock behind; nothing steals it here
+    (the response cache expires its own stale locks first)."""
 
     def __init__(self, store_dir: str):
         self.path = store_lock_path(store_dir)
@@ -256,7 +265,7 @@ class _StoreLock:
             fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         except FileExistsError:
             raise RuntimeError(
-                f"{self.path} exists — another compaction is running "
+                f"another compaction holds the lock {self.path} "
                 "(or crashed; remove the lock after checking)"
             ) from None
         os.write(fd, str(os.getpid()).encode())
@@ -303,6 +312,28 @@ class append_marker:
         return False
 
 
+class store_writer(append_marker):
+    """The one writer guard: the append marker goes up, THEN the
+    compaction lock is checked — so either this writer sees the lock
+    and fails fast, or a starting compactor sees the marker and
+    refuses. Inside it no compaction can be running."""
+
+    def __init__(self, store_dir: str):
+        super().__init__(store_dir)
+        self.store_dir = store_dir
+
+    def __enter__(self):
+        super().__enter__()
+        lock = store_lock_path(self.store_dir)
+        if os.path.exists(lock):
+            super().__exit__()
+            raise RuntimeError(
+                f"{self.store_dir} is locked for compaction ({lock}); "
+                "retry once it is compacted"
+            )
+        return self
+
+
 def _check_no_appenders(store_dir: str) -> None:
     """Compactor side of the two-sided guard: refuse to compact while
     any append marker exists (an in-flight epoch passed its lock
@@ -317,6 +348,31 @@ def _check_no_appenders(store_dir: str) -> None:
             "quiescent; remove stale markers only after checking the "
             "appender crashed"
         )
+
+
+def swap_in(live: str, tmp: str, rollback: str) -> None:
+    """Promote ``tmp`` to ``live`` with two renames, parking the
+    current ``live`` at ``rollback``. Not atomic: a crash between the
+    renames leaves only ``rollback``, which recover_swap restores.
+    Callers recover first, so a ``rollback`` found here is stale."""
+    import shutil
+
+    shutil.rmtree(rollback, ignore_errors=True)
+    if os.path.isdir(live):
+        os.rename(live, rollback)
+    os.rename(tmp, live)
+
+
+def recover_swap(live: str, rollback: str) -> None:
+    """Undo a swap_in cut between its renames: ``live`` is gone and
+    ``rollback`` holds the only copy — rename it back. Run it only
+    where no swap can be in progress (see the protocol note above)."""
+    if not os.path.isdir(live) and os.path.isdir(rollback):
+        os.rename(rollback, live)
+
+
+def _rollback_dir(store_dir: str) -> str:
+    return store_dir.rstrip("/") + ".pre-compact"
 
 
 def _swap_in_compacted(store_dir: str, tmp_dir: str, seen: set) -> None:
@@ -341,10 +397,7 @@ def _swap_in_compacted(store_dir: str, tmp_dir: str, seen: set) -> None:
             "(concurrent appender?) — swap aborted; re-run while the "
             "store is quiescent"
         )
-    old_dir = store_dir.rstrip("/") + ".pre-compact"
-    shutil.rmtree(old_dir, ignore_errors=True)
-    os.rename(store_dir, old_dir)
-    os.rename(tmp_dir, store_dir)
+    swap_in(store_dir, tmp_dir, _rollback_dir(store_dir))
 
 
 def compact_signature_store(
@@ -394,14 +447,15 @@ def _compact_store(
     ``rewrite(df) -> df`` applies the store-specific dedup/caps to the
     epoch-stripped merged frame; the skeleton owns locking, the
     in-lock file listing, the probe-key-sorted rewrite (tight
-    row-group min/max for the store's point-probe joins), the atomic
-    two-rename swap with the concurrent-append guard, and the
-    before/after stats."""
+    row-group min/max for the store's point-probe joins), the
+    two-rename swap with the concurrent-append guard, the recovery of
+    a swap a crash cut short, and the before/after stats."""
     import glob
     import shutil
 
     with _StoreLock(store_dir):
         _check_no_appenders(store_dir)
+        recover_swap(store_dir, _rollback_dir(store_dir))
         # list INSIDE the lock: a file appended between an outside
         # listing and the locked read would be included in the rewrite
         # yet flagged as 'gained' by the swap guard
@@ -517,15 +571,24 @@ def compact_fp_store(
     )
 
 
+# Replay keys of the SUM-merged stores: a crashed-then-replayed epoch
+# re-appends identical increments, kept once per (epoch, key) by the
+# live read (_prior_history) and by the compaction rewrite alike.
+DSIR_REPLAY_KEY = ["b"]
+DOREMI_REPLAY_KEY = ["source", "b"]
+CMS_REPLAY_KEY = ["j", "b"]
+QUANTILE_LEVELS_REPLAY_KEY = ["lvl"]
+
+
 def _dedupe_stamped_sum_rows(df, key_cols):
-    """Replay-dedupe for SUM-store compaction rewrites: one row per
-    (epoch, key) among STAMPED rows (a crashed-then-replayed epoch
-    re-appends identical increments), while SEALED rows (epoch_id
-    NULL — seeds, prior compaction output) pass through UNTOUCHED.
-    The naive dropDuplicates(["epoch_id", *key]) treats NULL epochs
-    as equal and would collapse a legitimate multi-row-per-key seed
-    into one row, silently undercounting — the r13 advice fix applied
-    to _prior_history, mirrored here for the offline rewrite path."""
+    """Replay-dedupe for SUM stores, on the live read and in the
+    compaction rewrite: one row per (epoch, key) among STAMPED rows (a
+    crashed-then-replayed epoch re-appends identical increments),
+    while SEALED rows (epoch_id NULL — seeds, prior compaction output)
+    pass through UNTOUCHED. The naive dropDuplicates(["epoch_id",
+    *key]) treats NULL epochs as equal and would collapse a legitimate
+    multi-row-per-key seed into one row, silently undercounting.
+    Drops the epoch_id stamp."""
     if "epoch_id" not in df.columns:
         return df
     sealed = df.filter(F.col("epoch_id").isNull()).drop("epoch_id")
@@ -549,11 +612,11 @@ def compact_dsir_store(
     are deterministic recomputations, so one row per (epoch, b) is
     exact, and summing without the dedup would double-count a
     crashed-then-replayed epoch (the same hazard the live read guards
-    with _prior_history(dedupe_key=['b'])). Output: ≤K rows, one
-    pre-summed (b, t_add, r_add) per bucket, SEALED."""
+    with _prior_history(dedupe_key=DSIR_REPLAY_KEY)). Output: ≤K rows,
+    one pre-summed (b, t_add, r_add) per bucket, SEALED."""
 
     def rewrite(df):
-        df = _dedupe_stamped_sum_rows(df, ["b"])
+        df = _dedupe_stamped_sum_rows(df, DSIR_REPLAY_KEY)
         return df.groupBy("b").agg(
             F.sum("t_add").alias("t_add"),
             F.sum("r_add").alias("r_add"),
@@ -576,7 +639,7 @@ def compact_doremi_store(
     ≤|D|×K sealed rows."""
 
     def rewrite(df):
-        df = _dedupe_stamped_sum_rows(df, ["source", "b"])
+        df = _dedupe_stamped_sum_rows(df, DOREMI_REPLAY_KEY)
         return df.groupBy("source", "b").agg(
             F.sum("c_add").alias("c_add")
         )
@@ -598,7 +661,7 @@ def compact_cms_store(
     (_dedupe_stamped_sum_rows) — then pre-sums to ≤d×w sealed rows."""
 
     def rewrite(df):
-        df = _dedupe_stamped_sum_rows(df, ["j", "b"])
+        df = _dedupe_stamped_sum_rows(df, CMS_REPLAY_KEY)
         return df.groupBy("j", "b").agg(F.sum("c_add").alias("c_add"))
 
     return _compact_store(
@@ -666,7 +729,7 @@ def compact_quantile_store(
     from finmapreduce_spark.queries.sketches import _qsk_threshold
 
     def rewrite_levels(df):
-        df = _dedupe_stamped_sum_rows(df, ["lvl"])
+        df = _dedupe_stamped_sum_rows(df, QUANTILE_LEVELS_REPLAY_KEY)
         return df.groupBy("lvl").agg(F.sum("c_add").alias("c_add"))
 
     lstats = _compact_store(

@@ -17,8 +17,9 @@ plan incrementally.
 
 Every foreachBatch ``serve_*`` mode runs on ONE epoch driver,
 ``_serve_epochs``: it owns the writer, the empty-batch skip, the
-live-store lock check, the cold-start history read, the guarded
-append and the release of every frame the epoch persisted. A mode
+live-store writer guard, the cold-start history read (which also
+recovers a store whose compaction was cut between its two renames),
+the append and the release of every frame the epoch persisted. A mode
 states only how to sign the batch, how to decide, and what to emit
 and append.
 """
@@ -26,10 +27,23 @@ and append.
 from __future__ import annotations
 
 import os
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from finmapreduce_spark.sources.sinks import (
+    CMS_REPLAY_KEY,
+    DOREMI_REPLAY_KEY,
+    DSIR_REPLAY_KEY,
+    QUANTILE_LEVELS_REPLAY_KEY,
+    _dedupe_stamped_sum_rows,
+    _rollback_dir,
+    recover_swap,
+    store_writer,
+)
+
 
 def _epoch_json(df: DataFrame, out_dir: str, epoch_id: int) -> None:
     """Idempotent per-epoch JSON sink for foreachBatch writers.
@@ -84,12 +98,13 @@ def read_request_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
 # _serve_epochs with an ``epoch(ep) -> (emit, appends)`` function: sign
 # the micro-batch, decide, and return the frame to emit (None: nothing)
 # and the (frame, store_dir) pairs to append. _serve_epochs runs the rest
-# of the per-epoch protocol, in this order: skip an empty batch, check
-# every declared store is not locked for compaction, run the mode,
-# write ``emit`` to ``out_dir/epoch_id=N``, append each frame under the
-# append-marker guard, and — on success or failure — unpersist every
-# frame the epoch persisted. Releasing here, not with clearCache, keeps
-# a static mode's shared history store cached across epochs.
+# of the per-epoch protocol, in this order: skip an empty batch, enter
+# every declared store's writer guard (fails fast on a compaction
+# lock; a compactor starting mid-epoch refuses), run the mode, write
+# ``emit`` to ``out_dir/epoch_id=N``, append each frame, and — on
+# success or failure — unpersist every frame the epoch persisted.
+# Releasing here, not with clearCache, keeps a static mode's shared
+# history store cached across epochs.
 # ---------------------------------------------------------------------------
 
 class _Epoch:
@@ -136,22 +151,23 @@ def _serve_epochs(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        for store_dir in stores:
-            # the append marker and the compaction lock sit BESIDE the
-            # store directory, so its parent must exist
-            parent = os.path.dirname(store_dir.rstrip("/"))
-            os.makedirs(parent or ".", exist_ok=True)
-            _check_store_unlocked(store_dir)
         ep = _Epoch(batch_df, epoch_id, stores)
-        try:
-            emit, appends = epoch(ep)
-            if emit is not None:
-                _epoch_json(emit, out_dir, epoch_id)
-            for df, store_dir in appends:
-                _guarded_store_append(df, store_dir, epoch_id)
-        finally:
-            for df in ep.scratch:
-                df.unpersist()
+        with ExitStack() as guards:
+            for store_dir in stores:
+                # the append marker and the compaction lock sit BESIDE
+                # the store directory, so its parent must exist
+                parent = os.path.dirname(store_dir.rstrip("/"))
+                os.makedirs(parent or ".", exist_ok=True)
+                guards.enter_context(store_writer(store_dir))
+            try:
+                emit, appends = epoch(ep)
+                if emit is not None:
+                    _epoch_json(emit, out_dir, epoch_id)
+                for df, store_dir in appends:
+                    _guarded_store_append(df, store_dir, epoch_id)
+            finally:
+                for df in ep.scratch:
+                    df.unpersist()
 
     return (
         stream.writeStream.foreachBatch(process_batch)
@@ -642,40 +658,17 @@ def run_stream_to_memory(
 # FRESH checkpoint (epoch ids restart at 0) at an existing store.
 # ---------------------------------------------------------------------------
 
-SEALED_EPOCH = -1
-
-
-def _check_store_unlocked(store_dir: str) -> None:
-    """Fail the epoch fast if the store is locked for compaction —
-    an append racing the compaction swap would be silently stranded
-    in the ``.pre-compact`` rollback copy otherwise."""
-    from finmapreduce_spark.sources.sinks import store_lock_path
-
-    lock = store_lock_path(store_dir)
-    if os.path.exists(lock):
-        raise RuntimeError(
-            f"store {store_dir} is locked for compaction ({lock}); "
-            "pause ingest until compaction finishes"
-        )
-
-
 def stamp_store_epoch(df: DataFrame, epoch_id: int) -> DataFrame:
     """Stamp store rows with the epoch that appends them."""
     return df.withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
 
 
 def _guarded_store_append(df: DataFrame, store_dir: str, epoch_id: int) -> None:
-    """Append admitted rows under the two-sided store guard: the
-    append marker goes up FIRST, then the compaction lock is
-    re-checked inside the marker window — so either this append is
-    visible to a starting compaction (marker or file) or this epoch
-    sees the lock and fails fast. Closes the append-after-re-list
-    TOCTOU the epoch-start check alone only narrowed."""
-    from finmapreduce_spark.sources.sinks import append_marker
-
-    with append_marker(store_dir):
-        _check_store_unlocked(store_dir)
-        stamp_store_epoch(df, epoch_id).write.mode("append").parquet(store_dir)
+    """Append epoch-stamped rows to a live store. Called only inside
+    the store's writer guard, which _serve_epochs holds for the whole
+    epoch: either a starting compaction sees this epoch's marker and
+    refuses, or the epoch saw the lock and failed before reading."""
+    stamp_store_epoch(df, epoch_id).write.mode("append").parquet(store_dir)
 
 
 def _history_or_empty(
@@ -690,7 +683,10 @@ def _history_or_empty(
     first epoch of a fresh ingest admits everything) instead of an
     AnalysisException — the gap the ingest CLI exposed. ``like`` must
     be a frame with the store's append schema (every caller appends
-    rows shaped like its probe input)."""
+    rows shaped like its probe input). Runs inside the store's writer
+    guard, so no compaction is mid-swap: a store whose compaction died
+    between its two renames is restored from ``.pre-compact`` first."""
+    recover_swap(store_dir, _rollback_dir(store_dir))
     if not os.path.exists(store_dir):
         return like.limit(0)
     return _prior_history(spark, store_dir, epoch_id, dedupe_key=dedupe_key)
@@ -704,38 +700,26 @@ def _prior_history(
 ) -> DataFrame:
     """Store rows visible to this epoch's probe: everything except this
     epoch's own (crashed-attempt) appends. Unstamped rows (seeds,
-    compacted rewrites) read as SEALED via mergeSchema + coalesce.
+    compacted rewrites) read as SEALED: mergeSchema gives them a NULL
+    epoch_id.
 
-    ``dedupe_key`` drops per-epoch duplicate appends on
-    (epoch, *dedupe_key) BEFORE the epoch stamp is discarded — required
-    by SUM-merged stores (the DSIR increment store): min/max stores are
-    replay-idempotent for free, but a crashed-then-replayed epoch's
+    ``dedupe_key`` is a SUM-merged store's replay key: min/max stores
+    are replay-idempotent for free, but a crashed-then-replayed epoch's
     re-appended increment rows would DOUBLE-COUNT under sum. The rows
-    are deterministic recomputations, so keeping one per
-    (epoch, key) restores exactness. Sealed rows are exempt from the
-    dedupe: only stamped appends can be crash-replayed, and a sealed
-    multi-row-per-key seed is legitimate mass in a sum store."""
+    are deterministic recomputations, so _dedupe_stamped_sum_rows — the
+    same rule the compaction rewrite applies — keeps one per
+    (epoch, key) and leaves sealed rows untouched."""
     raw = spark.read.option("mergeSchema", "true").parquet(store_dir)
-    if "epoch_id" in raw.columns:
-        stamped = raw.withColumn(
-            "__e", F.coalesce(F.col("epoch_id"), F.lit(SEALED_EPOCH))
-        )
-        stamped = stamped.filter(F.col("__e") != F.lit(int(epoch_id)))
-        if dedupe_key:
-            # Replay-dedupe applies only to STAMPED epochs (the crashed
-            # re-append hazard). Sealed rows (seeds, compacted rewrites)
-            # pass through untouched: in a SUM-merged store a multi-row
-            # seed per key is legitimate mass, and collapsing it to one
-            # pseudo-epoch row would silently undercount.
-            sealed = stamped.filter(F.col("__e") == F.lit(SEALED_EPOCH))
-            live = stamped.filter(
-                F.col("__e") != F.lit(SEALED_EPOCH)
-            ).dropDuplicates(["__e", *dedupe_key])
-            stamped = live.unionByName(sealed)
-        raw = stamped.drop("epoch_id", "__e")
-    # No epoch_id column at all ⇒ every row is sealed (seed/compaction
-    # output, never a crashed re-append) ⇒ no replay hazard, no dedupe.
-    return raw
+    if "epoch_id" not in raw.columns:
+        # every row is sealed (seed/compaction output, never a crashed
+        # re-append) ⇒ no replay hazard, no dedupe
+        return raw
+    raw = raw.filter(
+        F.col("epoch_id").isNull() | (F.col("epoch_id") != F.lit(int(epoch_id)))
+    )
+    if dedupe_key:
+        return _dedupe_stamped_sum_rows(raw, dedupe_key)
+    return raw.drop("epoch_id")
 
 
 def serve_incremental_dedup_continuous(
@@ -1063,7 +1047,7 @@ def serve_dsir_filter_continuous(
     # sum store: dedup (epoch, b) so a replayed epoch's re-appended
     # increments cannot double-count
     return _serve_epochs(
-        incoming_docs, checkpoint_dir, out_dir, {store_dir: ["b"]}, epoch
+        incoming_docs, checkpoint_dir, out_dir, {store_dir: DSIR_REPLAY_KEY}, epoch
     )
 
 
@@ -1171,7 +1155,7 @@ def serve_cms_watchlist_continuous(
         return est, [(cells, store_dir)]
 
     return _serve_epochs(
-        incoming_docs, checkpoint_dir, out_dir, {store_dir: ["j", "b"]}, epoch
+        incoming_docs, checkpoint_dir, out_dir, {store_dir: CMS_REPLAY_KEY}, epoch
     )
 
 
@@ -1232,7 +1216,7 @@ def serve_doremi_weights_continuous(
         incoming_docs,
         checkpoint_dir,
         out_dir,
-        {store_dir: ["source", "b"]},
+        {store_dir: DOREMI_REPLAY_KEY},
         epoch,
     )
 
@@ -1313,7 +1297,7 @@ def serve_quantile_sketch_continuous(
         incoming_docs,
         checkpoint_dir,
         out_dir,
-        {levels_dir: ["lvl"], sample_dir: None},
+        {levels_dir: QUANTILE_LEVELS_REPLAY_KEY, sample_dir: None},
         epoch,
     )
 

@@ -561,6 +561,35 @@ def test_ingest_cli_drives_continuous_dedup(spark, tmp_path, capsys):
     spark.catalog.clearCache()
 
 
+def test_ingest_cli_counts_epochs_that_emit_no_rows(spark, tmp_path):
+    """Substring mode emits only rejections, so an epoch that admits
+    its one fresh doc emits no row — it still counts as an epoch."""
+    import json as _json
+
+    from finmapreduce_spark.ingest import main
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    text = " ".join(f"fresh{i}" for i in range(80))
+    (landing / "e0.json").write_text(
+        _json.dumps({"doc_id": 1, "text": text}) + "\n"
+    )
+    summary = main(
+        [
+            "--mode", "substring",
+            "--landing", str(landing),
+            "--store", str(tmp_path / "store"),
+            "--out", str(tmp_path / "out"),
+            "--checkpoint", str(tmp_path / "ckpt"),
+        ],
+        spark=spark,
+    )
+    assert summary["epochs"] == 1
+    assert summary["rows_emitted"] == 0
+    assert spark.read.parquet(str(tmp_path / "store")).count() > 0
+    spark.catalog.clearCache()
+
+
 # slow (≈30 s): CLI twin of the continuous-DoReMi loop; the streaming
 # twin and the batch oracle cover the arithmetic by default.
 @pytest.mark.slow

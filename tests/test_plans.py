@@ -1362,3 +1362,22 @@ def test_scan_floor_still_widens_file_scans(spark, sf_dir):
     df = scan_floor(scan, "doc_id")
     assert "hashpartitioning(doc_id" in plan_of(df)
     assert df.rdd.getNumPartitions() == target
+
+
+def test_preprocess_questions_honors_llm_partitions(spark):
+    """The request cap bounds every paid stage, question improvement
+    included: with llm_partitions=3 the improve stage reads a 3-way
+    round-robin exchange, as map, reduce and judge do."""
+    from finmapreduce_spark.plans.mapreduce import (
+        MapReduceConfig,
+        preprocess_questions,
+    )
+
+    qa = spark.createDataFrame(
+        [(i, 0, f"question {i}?", "gold") for i in range(6)],
+        "qa_id long, doc_id long, question string, answer string",
+    )
+    out = preprocess_questions(
+        qa, "Improve: %s%s", MapReduceConfig(llm_partitions=3)
+    )
+    assert "RoundRobinPartitioning(3)" in plan_of(out)

@@ -271,9 +271,9 @@ def test_compaction_lock_excludes_writers_and_compactors(spark, sf_dir, tmp_path
     import os
     import time
 
-    from finmapreduce_spark.llm.response_cache import (
-        _compact_lock_path,
-        compact_response_cache,
+    from finmapreduce_spark.llm.response_cache import compact_response_cache
+    from finmapreduce_spark.sources.sinks import (
+        store_lock_path as _compact_lock_path,
     )
 
     cache_dir = str(tmp_path / "lock_cache")

@@ -972,6 +972,88 @@ def test_compaction_refuses_while_append_in_flight(spark, tmp_path):
     assert out["rows_after"] == 5
 
 
+@pytest.mark.parametrize(
+    "compactor", ["compact_signature_store", "compact_dsir_store"]
+)
+def test_compaction_crash_between_renames_loses_no_rows(
+    spark, tmp_path, monkeypatch, compactor
+):
+    """A compaction killed between its swap's two renames leaves the
+    store only in its ``.pre-compact`` rollback copy. The next epoch
+    read restores it, the compactor re-runs to the same result as an
+    uncrashed one, and a later append + compaction keeps every
+    original row (the stale rollback must never be deleted as if the
+    swap had landed). Covers a set store and a SUM store."""
+    import os
+
+    from finmapreduce_spark.sources import sinks
+    from finmapreduce_spark.streaming.pipeline import (
+        _history_or_empty,
+        stamp_store_epoch,
+    )
+
+    compact = getattr(sinks, compactor)
+    if compactor == "compact_signature_store":
+        schema, key = "doc_id long, band_id int, key string", None
+
+        def batch(e):
+            return [(e * 10 + i, i % 3, f"k{e}-{i}") for i in range(10)]
+    else:
+        schema, key = "b int, t_add long, r_add long", ["b"]
+
+        def batch(e):
+            return [(e * 10 + i, 1, i % 2) for i in range(10)]
+
+    def append(store, epochs):
+        for e in epochs:
+            stamp_store_epoch(
+                spark.createDataFrame(batch(e), schema), e
+            ).write.mode("append").parquet(store)
+
+    like = spark.createDataFrame([], schema)
+
+    def rows(store):  # what a later epoch's history read sees
+        return sorted(
+            map(tuple, _history_or_empty(spark, store, 99, like, key).collect())
+        )
+
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    append(crashed, range(3))
+    append(clean, range(3))
+    before = rows(crashed)
+    assert len(before) == 30
+
+    real_rename = os.rename
+
+    def killed_on_second_rename(src, dst):
+        if src.endswith(".compacting"):
+            raise OSError("killed between the swap's renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", killed_on_second_rename)
+    with pytest.raises(OSError, match="killed"):
+        compact(spark, crashed)
+    monkeypatch.undo()
+    assert not os.path.exists(crashed)
+    assert os.path.isdir(crashed + ".pre-compact")
+    lock = sinks.store_lock_path(crashed)
+    if os.path.exists(lock):  # a hard kill leaves it; the operator clears it
+        os.remove(lock)
+
+    assert rows(crashed) == before
+    assert (
+        compact(spark, crashed)["rows_after"]
+        == compact(spark, clean)["rows_after"]
+    )
+    for store in (crashed, clean):
+        append(store, [3])
+        compact(spark, store)
+    after = rows(crashed)
+    assert set(before) <= set(after)
+    assert after == rows(clean)
+    spark.catalog.clearCache()
+
+
 def test_serve_mapreduce_response_cache_across_epochs(spark, sf_dir, tmpdir):
     """Streaming + response cache: a SECOND epoch carrying the same
     question pays ZERO new LLM calls — the foreachBatch DAG's map,
