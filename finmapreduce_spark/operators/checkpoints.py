@@ -20,13 +20,18 @@ The session factory enables
 checkpoint files are deleted by the ContextCleaner once the driver
 drops the RDD handle — the same lifecycle the loops already manage for
 local blocks (each round releases the previous round's snapshot).
+
+Persisted intermediates have one owner too: :func:`scratch` opens a
+block that releases every frame :func:`keep` persists inside it.
 """
 
 from __future__ import annotations
 
 import gc
 import os
+import threading
 import warnings
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -43,8 +48,45 @@ def checkpoint_dir() -> str | None:
     return os.environ.get(CHECKPOINT_DIR_ENV) or None
 
 
-def _persistent_rdd_ids(sc) -> set[int]:
-    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+_blocks = threading.local()
+
+
+@contextmanager
+def scratch():
+    """A block that owns every frame :func:`keep` persists in this
+    thread while it is open (in the innermost open block, when blocks
+    nest), and unpersists each one, blocking, at exit — on success
+    and on error. Yields the owned list: frames persisted elsewhere
+    (another thread, before the block) are handed in by appending.
+
+    Only frames whose last reader runs inside the block belong here;
+    a lazy plan returned past the exit re-derives a released frame
+    from lineage. Checkpoints (:func:`iter_checkpoint`) have no
+    lineage to fall back on and are never owned — their loops
+    release them with :func:`release_iter_checkpoint`."""
+    owned: list[DataFrame] = []
+    stack = _blocks.__dict__.setdefault("stack", [])
+    stack.append(owned)
+    try:
+        yield owned
+    finally:
+        stack.pop()
+        for df in owned:
+            df.unpersist(True)
+
+
+def keep(df: DataFrame) -> DataFrame:
+    """``df.persist()``, owned by this thread's innermost open
+    :func:`scratch` block. With no block open it is a plain persist:
+    the cache is the caller's, released with
+    ``spark.catalog.clearCache()`` — the catalog-wide contract that
+    catalog callers such as ``bench.py`` and ``tools/compare.py``
+    rely on."""
+    df.persist()
+    stack = getattr(_blocks, "stack", None)
+    if stack:
+        stack[-1].append(df)
+    return df
 
 
 def iter_checkpoint(df: DataFrame) -> DataFrame:
@@ -56,21 +98,20 @@ def iter_checkpoint(df: DataFrame) -> DataFrame:
     into that directory, surviving executor loss.  The checkpoint dir
     is installed on the SparkContext on first use.
 
-    In local mode the returned DataFrame carries the ids of the
-    persistent RDDs the checkpoint created, so
+    In local mode the returned DataFrame carries the id of the RDD
+    the checkpoint pinned — the ``LogicalRDD`` its plan reads — so
     :func:`release_iter_checkpoint` can free those blocks
-    synchronously once the loop rebinds past the snapshot.  The id
-    capture diffs the context's persistent-RDD registry around the
-    checkpoint call, which is only attribution-safe when no OTHER
-    thread persists RDDs concurrently — true for every single-threaded
-    iterative loop here.
+    synchronously once the loop rebinds past the snapshot. A frame
+    cached lazily upstream and first computed by the checkpoint's
+    job is not the checkpoint's: it stays cached for its owner.
     """
     ckdir = checkpoint_dir()
     sc = df.sparkSession.sparkContext
     if not ckdir:
-        before = _persistent_rdd_ids(sc)
         out = df.localCheckpoint()
-        out._fmr_ckpt_rdd_ids = frozenset(_persistent_rdd_ids(sc) - before)
+        out._fmr_ckpt_rdd_ids = frozenset(
+            {out._jdf.queryExecution().analyzed().rdd().id()}
+        )
         return out
     # setCheckpointDir is idempotent for the same path; only install
     # when unset so an operator-provided dir (e.g. set by a notebook)

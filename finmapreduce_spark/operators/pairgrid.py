@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from finmapreduce_spark.operators.checkpoints import keep
+
 DEFAULT_BLOCK = 64  # local-fixture sizing; production ~1024
 
 
@@ -39,7 +41,6 @@ def grid_self_pairs(
     payload_cols: list[str],
     block: int = DEFAULT_BLOCK,
     dedupe: bool = True,
-    scratch: list | None = None,
 ) -> DataFrame:
     """Ordered within-bucket pairs (``id_a < id_b``), grid-tiled.
 
@@ -53,16 +54,12 @@ def grid_self_pairs(
     counting aggregates (e.g. "distinct shared grams per doc pair")
     can run directly on it without a dropDuplicates shuffle.
 
-    The intermediate bucket table is persisted (both join sides read
-    it; without the cache the upstream pipeline runs once per side).
-    Lifecycle is caller-owned per the catalog-wide contract —
-    ``spark.catalog.clearCache()`` when done — unless ``scratch`` is
-    given, in which case every frame THIS call persists is appended
-    to it so a long-lived library caller can unpersist after
-    materializing (the incremental-substring pattern).
+    The intermediate bucket table is kept (operators.checkpoints.keep:
+    both join sides read it; without the cache the upstream pipeline
+    runs once per side).
     """
     wk = W.partitionBy(*bucket_cols)
-    indexed = (
+    indexed = keep(
         buckets.withColumn(
             "__idx", F.row_number().over(wk.orderBy(id_col)) - 1
         )
@@ -79,10 +76,7 @@ def grid_self_pairs(
         .withColumn("__nb", F.ceil(F.col("__cnt") / block).cast("int"))
         .drop("__cnt")
         .withColumn("__blk", (F.col("__idx") / block).cast("int"))
-        .persist()
     )
-    if scratch is not None:
-        scratch.append(indexed)
     carry = [id_col, *payload_cols, *bucket_cols]
     left = indexed.select(
         *carry,
@@ -155,7 +149,6 @@ def grid_cross_pairs(
     left_payload: list[str] | None = None,
     right_payload: list[str] | None = None,
     block: int = DEFAULT_BLOCK,
-    scratch: list | None = None,
 ) -> DataFrame:
     """Rectangular twin of grid_self_pairs: ALL (left-row, right-row)
     pairs sharing a bucket, tiled so one hot bucket key (a gram/band
@@ -175,9 +168,8 @@ def grid_cross_pairs(
 
     Output columns: ``{left_id}`` and ``{right_id}`` (names must
     differ) + payload columns, each taken verbatim from its side.
-    Both indexed sides are persisted (each feeds its own replication
-    AND the opposite side's block-count aggregate); lifecycle is
-    caller-owned (clearCache) unless ``scratch`` collects them.
+    Both indexed sides are kept (each feeds its own replication AND
+    the opposite side's block-count aggregate).
     """
     left_payload = left_payload or []
     right_payload = right_payload or []
@@ -195,32 +187,12 @@ def grid_cross_pairs(
             "combined (left_id, right_id, *left_payload, "
             "*right_payload) names are unique"
         )
-    li = left.withColumn(
-        "__blk",
-        (
-            (
-                F.row_number().over(
-                    W.partitionBy(*bucket_cols).orderBy(left_id)
-                )
-                - 1
-            )
-            / block
-        ).cast("int"),
-    ).persist()
-    ri = right.withColumn(
-        "__blk",
-        (
-            (
-                F.row_number().over(
-                    W.partitionBy(*bucket_cols).orderBy(right_id)
-                )
-                - 1
-            )
-            / block
-        ).cast("int"),
-    ).persist()
-    if scratch is not None:
-        scratch.extend([li, ri])
+
+    def indexed(side: DataFrame, id_col: str) -> DataFrame:
+        idx = F.row_number().over(W.partitionBy(*bucket_cols).orderBy(id_col)) - 1
+        return keep(side.withColumn("__blk", (idx / block).cast("int")))
+
+    li, ri = indexed(left, left_id), indexed(right, right_id)
     nb_l = li.groupBy(*bucket_cols).agg(
         (F.max("__blk") + 1).alias("__nbl")
     )

@@ -41,6 +41,7 @@ from finmapreduce_spark.llm.runner import (
     reduce_row_builder,
     run_llm_stage,
 )
+from finmapreduce_spark.operators.checkpoints import keep
 
 
 @dataclass
@@ -123,7 +124,8 @@ class MapReduceConfig:
     # the sink and the judge) or (b) lineage recompute after executor
     # loss would otherwise re-fire requests (SURVEY §4/§7 M5). Off by
     # default for fixture-scale tests; ANY real-client run should set
-    # it.
+    # it. The two frames are kept (operators.checkpoints.keep): an
+    # open scratch block of the caller releases them.
     persist_llm_outputs: bool = False
 
 
@@ -645,11 +647,11 @@ def run_mapreduce(
     chunks = chunk_stage(qa_docs, cfg)
     mapped = map_stage(chunks, cfg)
     if cfg.persist_llm_outputs:
-        mapped = mapped.persist()
+        mapped = keep(mapped)
     kept = filter_stage(mapped, cfg)
     reduced = reduce_stage(kept, qa, cfg)
     if cfg.persist_llm_outputs:
-        reduced = reduced.persist()
+        reduced = keep(reduced)
     answers = answers_with_errors(
         qa, qa_docs, reduced,
         # error digest re-reads mapped — only safe when persisted

@@ -27,7 +27,9 @@ from pyspark.sql import functions as F
 
 from finmapreduce_spark.operators.checkpoints import (
     iter_checkpoint,
+    keep,
     release_iter_checkpoint,
+    scratch,
 )
 from finmapreduce_spark.queries import QuerySpec
 from finmapreduce_spark.session import read_table
@@ -243,7 +245,7 @@ def _lsh_band_buckets(
     side (measured ~2.5 s of the 6.8 s at sf0.1). MEMORY_AND_DISK
     default: at cluster scale the bucket table spills rather than
     OOMs; it is |docs|×2 rows of long-arrays, far smaller than the
-    corpus. Lifecycle is caller-owned (clearCache), as catalog-wide.
+    corpus. Kept (operators.checkpoints.keep).
     """
     docs = (
         shingled
@@ -256,7 +258,7 @@ def _lsh_band_buckets(
         *_minhash_cols(F.col("shingles")),
     )
     band0, band1 = _band_exprs()
-    return (
+    return keep(
         sig.select(
             "doc_id",
             F.col("sh_hashed").alias("shingles"),
@@ -268,7 +270,6 @@ def _lsh_band_buckets(
             ).alias("b"),
         )
         .select("doc_id", "shingles", "b.band_id", "b.key")
-        .persist()
     )
 
 
@@ -374,14 +375,13 @@ def dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 LSH_GRID_BLOCK = 64
 
 
-def _lsh_grid_cand(buckets: DataFrame, scratch: list | None = None) -> DataFrame:
+def _lsh_grid_cand(buckets: DataFrame) -> DataFrame:
     """(doc_a, doc_b): the band-bucket self-join through the shared
     grid tiler — the LSH lane's one candidate build. The tiler moves
     bare ids; shingle arrays attach once at the verify (guide §2.3/§8
     — they no longer ride the in-bucket index window, the two
     replicated explode sides, the cell sort-merge sorts, or the
-    candidate dedup exchange). ``scratch`` collects the tiler's
-    persisted index table."""
+    candidate dedup exchange)."""
     from finmapreduce_spark.operators.pairgrid import grid_self_pairs
 
     return grid_self_pairs(
@@ -390,7 +390,6 @@ def _lsh_grid_cand(buckets: DataFrame, scratch: list | None = None) -> DataFrame
         "doc_id",
         [],
         block=LSH_GRID_BLOCK,
-        scratch=scratch,
     ).select(
         F.col("doc_id_a").alias("doc_a"),
         F.col("doc_id_b").alias("doc_b"),
@@ -666,12 +665,8 @@ def _simhash_pair_bands(
     # persist: BOTH sides of the self-join read this table — without
     # the cache the whole scan→shingle→md5→vote pipeline runs once
     # per side (measured 6.2 s → 2.2 s at sf0.1). On a cluster this
-    # is the signature table you'd write to storage anyway. Lifecycle
-    # is caller-owned (same contract as the trainers' feature
-    # tables): the cache lives behind the returned lazy plan, so the
-    # caller clears it via spark.catalog.clearCache() when done —
-    # bench.py does after every query.
-    return (
+    # is the signature table you'd write to storage anyway.
+    return keep(
         sig.select(
             "doc_id",
             "sim",
@@ -690,7 +685,6 @@ def _simhash_pair_bands(
             ).alias("b"),
         )
         .select("doc_id", "sim", F.col("b.k").alias("k"), F.col("b.bv").alias("bv"))
-        .persist()
     )
 
 
@@ -716,22 +710,18 @@ def dedup_simhash_pairs_grid(
     spark: SparkSession,
     sf_dir: str,
     bands: DataFrame | None = None,
-    scratch: list | None = None,
 ) -> DataFrame:
     """Hot-bucket-safe twin of ``dedup_simhash_pairs``: the (k, bv)
     band self-join goes through the shared grid tiler
     (operators/pairgrid.py) so a band value shared by a boilerplate
     cluster cannot funnel its pair product through one task. Same
     pairs, same oracle. ``bands``: a prebuilt signature store (the
-    master keep-list's, from master_history_state); ``scratch``
-    collects the tiler's persisted index table."""
+    master keep-list's, from master_history_state)."""
     from finmapreduce_spark.operators.pairgrid import grid_self_pairs
 
     if bands is None:
         bands = _simhash_pair_bands(spark, sf_dir)
-    cand = grid_self_pairs(
-        bands, ["k", "bv"], "doc_id", ["sim"], scratch=scratch
-    ).select(
+    cand = grid_self_pairs(bands, ["k", "bv"], "doc_id", ["sim"]).select(
         F.col("doc_id_a").alias("doc_a"),
         F.col("doc_id_b").alias("doc_b"),
         F.col("sim_a"),
@@ -1156,10 +1146,13 @@ def _cc_star(edges: DataFrame) -> DataFrame:
     else:
         raise RuntimeError(f"components did not converge in {MAX_CC_ITERS} iters")
     # converged stars: doc_a hangs off root doc_b; roots label themselves.
-    # Checkpoint the node list NOW, while the caller's edge input
-    # is still persisted — otherwise the returned plan re-derives the
-    # node ids from the raw edge pipeline (for the LSH graph that
-    # means re-running shingling+minhash+band join at collect time).
+    # Checkpoint the node list NOW, while connected_components still
+    # keeps ``edges`` cached: the node ids are read from that cache,
+    # and the returned plan reads checkpoints only — left lazy, it
+    # would re-derive them from the raw edge pipeline at collect time
+    # (for the LSH graph: shingling + minhash + band join). The round
+    # checkpoints above never own that cache (iter_checkpoint claims
+    # only its own RDD), so releasing them leaves it in place.
     nodes = iter_checkpoint(
         edges.select(F.col("doc_a").alias("doc_id"))
         .union(edges.select(F.col("doc_b").alias("doc_id")))
@@ -1195,20 +1188,15 @@ def connected_components(edges: DataFrame, algorithm: str | None = None) -> Data
         # each evaluate the input subtree — the symmetric-closure
         # build used to run the caller's (often expensive) pair
         # pipeline once per branch before anything was cached.
-        edges = edges.persist()
-        try:
-            return _cc_star(edges)
-        finally:
-            edges.unpersist()
+        with scratch():
+            return _cc_star(keep(edges))
     # minlabel propagates along directed doc_a -> doc_b rows, so it
     # genuinely needs both directions materialized.
     sym = edges.union(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).persist()
-    try:
-        return _cc_minlabel(sym)
-    finally:
-        sym.unpersist()
+    )
+    with scratch():
+        return _cc_minlabel(keep(sym))
 
 
 def dedup_cluster_canonical(
@@ -1533,7 +1521,6 @@ def incremental_verdicts(
     incoming: DataFrame,
     history: DataFrame,
     tiled: bool = False,
-    scratch: list | None = None,
 ) -> DataFrame:
     """Join incoming band keys against the history signature store,
     verify candidates with exact Jaccard, emit per-doc reject
@@ -1565,7 +1552,6 @@ def incremental_verdicts(
                 "hist_id",
                 left_payload=["sh"],
                 right_payload=["sh_hist"],
-                scratch=scratch,
             )
             .select(
                 "doc_id",
@@ -1690,64 +1676,62 @@ def pick_lsh_bands(
     """
     if configs is None:
         configs = [(1, 8), (2, 4), (4, 2), (8, 1)]
-    docs = with_shingles(_docs(spark, sf_dir))
-    sig = docs.select(
-        "doc_id",
-        F.transform("shingles", lambda s: F.xxhash64(s)).alias("sh"),
-        *_minhash_cols(F.col("shingles")),
-    ).persist()
-    a = sig.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sig.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter / (F.size("sh_a") + F.size("sh_b") - inter)
-    truth = (
-        a.join(b, F.col("doc_a") < F.col("doc_b"))
-        .where(jac >= F.lit(JACCARD_THRESHOLD))
-        .select("doc_a", "doc_b")
-        .persist()
-    )
-    n_truth = truth.count()
-    curve = {}
-    chosen = configs[-1]
-    for nb, nr in configs:
-        bands = [
-            F.struct(
-                F.lit(i).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[F.col(f"mh_{j}") for j in range(i * nr, (i + 1) * nr)],
-                    )
-                ).alias("key"),
-            )
-            for i in range(nb)
-        ]
-        buckets = sig.select(
-            "doc_id", F.explode(F.array(*bands)).alias("bb")
-        ).select("doc_id", "bb.band_id", "bb.key")
-        cand = (
-            buckets.alias("l")
-            .join(
-                buckets.alias("r"),
-                (F.col("l.band_id") == F.col("r.band_id"))
-                & (F.col("l.key") == F.col("r.key"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
-            )
-            .select(
-                F.col("l.doc_id").alias("doc_a"),
-                F.col("r.doc_id").alias("doc_b"),
-            )
-            .dropDuplicates()
+    with scratch():
+        docs = with_shingles(_docs(spark, sf_dir))
+        sig = keep(docs.select(
+            "doc_id",
+            F.transform("shingles", lambda s: F.xxhash64(s)).alias("sh"),
+            *_minhash_cols(F.col("shingles")),
+        ))
+        a = sig.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+        b = sig.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        jac = inter / (F.size("sh_a") + F.size("sh_b") - inter)
+        truth = keep(
+            a.join(b, F.col("doc_a") < F.col("doc_b"))
+            .where(jac >= F.lit(JACCARD_THRESHOLD))
+            .select("doc_a", "doc_b")
         )
-        n_cand = cand.count()
-        hits = cand.join(truth, ["doc_a", "doc_b"]).count()
-        recall = hits / n_truth if n_truth else 1.0
-        curve[f"{nb}x{nr}"] = {"recall": round(recall, 6), "candidates": n_cand}
-        if recall >= target_recall:
-            chosen = (nb, nr)
-            break
-    sig.unpersist()
-    truth.unpersist()
+        n_truth = truth.count()
+        curve = {}
+        chosen = configs[-1]
+        for nb, nr in configs:
+            bands = [
+                F.struct(
+                    F.lit(i).alias("band_id"),
+                    F.md5(
+                        F.concat_ws(
+                            "|",
+                            *[F.col(f"mh_{j}") for j in range(i * nr, (i + 1) * nr)],
+                        )
+                    ).alias("key"),
+                )
+                for i in range(nb)
+            ]
+            buckets = sig.select(
+                "doc_id", F.explode(F.array(*bands)).alias("bb")
+            ).select("doc_id", "bb.band_id", "bb.key")
+            cand = (
+                buckets.alias("l")
+                .join(
+                    buckets.alias("r"),
+                    (F.col("l.band_id") == F.col("r.band_id"))
+                    & (F.col("l.key") == F.col("r.key"))
+                    & (F.col("l.doc_id") < F.col("r.doc_id")),
+                )
+                .select(
+                    F.col("l.doc_id").alias("doc_a"),
+                    F.col("r.doc_id").alias("doc_b"),
+                )
+                .dropDuplicates()
+            )
+            n_cand = cand.count()
+            hits = cand.join(truth, ["doc_a", "doc_b"]).count()
+            recall = hits / n_truth if n_truth else 1.0
+            curve[f"{nb}x{nr}"] = {"recall": round(recall, 6), "candidates": n_cand}
+            if recall >= target_recall:
+                chosen = (nb, nr)
+                break
     return {
         "bands": chosen[0],
         "rows": chosen[1],
@@ -3022,7 +3006,6 @@ def _substring_candidate_slice(
     docs: DataFrame,
     min_len: int = SUBSTR_L,
     k: int = SUBSTR_K,
-    scratch: list | None = None,
     fps: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared winnow front-end: → (base, candidate_docs) where base is
@@ -3030,26 +3013,17 @@ def _substring_candidate_slice(
     holding a fingerprint seen in >=2 docs. By the window guarantee
     every doc participating in a cross-doc verbatim match of length
     >= min_len is in the slice — downstream exact stages may confine
-    themselves to it.
-
-    ``scratch``: if given, frames THIS call persists are appended so a
-    long-lived library caller can unpersist after materializing
-    (the incremental_substring_pairs lifecycle); batch/catalog callers
-    may ignore it per the catalog-wide clearCache contract."""
+    themselves to it."""
     base = _substring_base(docs)
-    # persisted: the winnow transform is the expensive map; without
-    # the cache the fp-count aggregate, the candidate semi-join, and
-    # BOTH sides of the gram self-join each recompute it (4 parquet
-    # scans, measured 16.7 s → 5.5 s warm at sf0.1). Lifecycle is
-    # caller-owned per the catalog-wide contract (clearCache when
-    # done — same as pairgrid) unless scratch collects it.
+    # kept: the winnow transform is the expensive map; without the
+    # cache the fp-count aggregate, the candidate semi-join, and BOTH
+    # sides of the gram self-join each recompute it (4 parquet scans,
+    # measured 16.7 s → 5.5 s warm at sf0.1).
     # ``fps``: a prebuilt (persisted) substring_fp_table over the same
     # docs — the incremental capstone's signature store, reused here
     # so the winnow map runs once per corpus slice, not per consumer.
     if fps is None:
-        fps = substring_fp_table(base, min_len, k).persist()
-        if scratch is not None:
-            scratch.append(fps)
+        fps = keep(substring_fp_table(base, min_len, k))
     # fingerprints seen in >=2 docs -> candidate doc ids (rows are
     # unique per (doc, fp) via array_distinct, so count(*) = doc count)
     shared_fp = (
@@ -3082,7 +3056,6 @@ def exact_substring_pairs(
     min_len: int = SUBSTR_L,
     k: int = SUBSTR_K,
     block: int | None = SUBSTR_GRID_BLOCK,
-    scratch: list | None = None,
     fps: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, n_shared_grams): all unordered doc pairs sharing
@@ -3100,9 +3073,7 @@ def exact_substring_pairs(
     the distinct shared-gram count — the same oracle certifies both).
     ``block=None`` selects the plain self-join (the un-tiled twin the
     skew study compares against)."""
-    _, cd = _substring_candidate_slice(
-        docs, min_len, k, scratch=scratch, fps=fps
-    )
+    _, cd = _substring_candidate_slice(docs, min_len, k, fps=fps)
     if block is not None:
         from finmapreduce_spark.operators.pairgrid import grid_self_pairs
 
@@ -3113,16 +3084,13 @@ def exact_substring_pairs(
             [],
             block=block,
             dedupe=False,
-            scratch=scratch,
         ).select(
             F.col("doc_id_a").alias("doc_a"),
             F.col("doc_id_b").alias("doc_b"),
         )
     else:
-        # plain twin: persisted because both self-join sides read it
-        grams = _l_grams(cd, min_len).persist()
-        if scratch is not None:
-            scratch.append(grams)
+        # plain twin: kept because both self-join sides read it
+        grams = keep(_l_grams(cd, min_len))
         ga, gb = grams.alias("ga"), grams.alias("gb")
         pairs = ga.join(
             gb,
@@ -3167,7 +3135,6 @@ def substring_duplication_coverage(
     docs: DataFrame,
     min_len: int = SUBSTR_L,
     k: int = SUBSTR_K,
-    scratch: list | None = None,
 ) -> DataFrame:
     """Per-doc substring-duplication coverage — the Lee-2021 trim/drop
     signal: what fraction of each document's characters lies inside a
@@ -3182,10 +3149,11 @@ def substring_duplication_coverage(
     positions per doc — no interval materialization. (No pair join
     here — the shared-gram reduction is a groupBy + semi-join, linear
     in gram rows, so no grid tiling is needed.)"""
-    base, cd = _substring_candidate_slice(docs, min_len, k, scratch=scratch)
+    base, cd = _substring_candidate_slice(docs, min_len, k)
     ct = F.col("t")
     cn = F.length(ct)
-    gpos = (
+    # kept: read by the shared-gram agg AND the position join
+    gpos = keep(
         cd.select(
             "doc_id",
             F.posexplode(
@@ -3199,10 +3167,7 @@ def substring_duplication_coverage(
             ).alias("p0", "gram"),
         )
         .select("doc_id", (F.col("p0") + 1).alias("pos"), "gram")
-        .persist()  # read by the shared-gram agg AND the position join
     )
-    if scratch is not None:
-        scratch.append(gpos)
     shared = (
         gpos.select("doc_id", "gram")
         .distinct()
@@ -3301,7 +3266,6 @@ def exact_substring_spans(
     docs: DataFrame,
     min_len: int = SUBSTR_L,
     k: int = SUBSTR_K,
-    scratch: list | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, a_start, b_start, span_len): the MAXIMAL
     verbatim spans (>= min_len chars) each unordered doc pair shares —
@@ -3327,7 +3291,7 @@ def exact_substring_spans(
     oracle certifies it)."""
     from finmapreduce_spark.operators.pairgrid import grid_self_pairs
 
-    _, cd = _substring_candidate_slice(docs, min_len, k, scratch=scratch)
+    _, cd = _substring_candidate_slice(docs, min_len, k)
     ct = F.col("t")
     cn = F.length(ct)
     gp = cd.select(
@@ -3349,7 +3313,6 @@ def exact_substring_spans(
         ["pos"],
         block=SUBSTR_GRID_BLOCK,
         dedupe=False,
-        scratch=scratch,
     ).select(
         F.col("doc_id_a").alias("doc_a"),
         F.col("doc_id_b").alias("doc_b"),
@@ -3469,49 +3432,47 @@ def dedup_master_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume-sized; CC is the O(log n)-round star algorithm. This is
     the plan shape a production curation run actually executes."""
     docs = _docs(spark, sf_dir)
-    state = master_history_state(spark, sf_dir, docs)
-    labels = connected_components(_master_edge_union(spark, sf_dir, docs, state))
+    # The block owns the signature stores and the lanes' frames; the
+    # returned plan reads only ``docs`` and CC's checkpoints.
+    with scratch():
+        state = master_history_state(spark, sf_dir, docs)
+        labels = connected_components(
+            _master_edge_union(spark, sf_dir, docs, state)
+        )
     losers = labels.filter(F.col("doc_id") != F.col("label")).select("doc_id")
     return docs.select("doc_id", "lang").join(losers, "doc_id", "left_anti")
 
 
 def _master_lanes(
-    spark: SparkSession,
-    sf_dir: str,
-    docs: DataFrame,
-    state: dict,
-    scratch: list | None = None,
+    spark: SparkSession, sf_dir: str, docs: DataFrame, state: dict
 ) -> list:
     """The capstone's five edge lanes as ``[(name, build)]``, in the
     fixed order lsh, semantic, simhash, exact, substring — the ONE
     definition the inline, staged and incremental keep-lists compose.
-    ``build(lane_scratch)`` returns the lane's (doc_a, doc_b, ...)
-    pair table over ``docs``, reading its signatures from ``state``
-    (master_history_state over the same ``docs``); ``lane_scratch``
-    collects the frames that lane alone persists (the grid tilers'
-    index tables), so a staged caller can release one lane's state
-    while its sibling is still in flight.
+    ``build()`` returns the lane's (doc_a, doc_b, ...) pair table over
+    ``docs``, reading its signatures from ``state``
+    (master_history_state over the same ``docs``). The frames a build
+    keeps (the grid tilers' index tables) belong to the scratch block
+    open in the thread that calls it, so a staged caller can release
+    one lane's state while its sibling is still in flight.
 
     The MinHash-LSH and semantic lanes share ONE grid-tiled candidate
     build: their band keys are identical by shared definition
     (_semantic_buckets is the LSH bucket table without the payload),
-    so the two lanes differ only in the verify gate. It is persisted
-    (both verifies read it) and appended to ``scratch`` after its
-    tiler index — last, so a staged caller can materialize it up
-    front."""
+    so the two lanes differ only in the verify gate. It is kept (both
+    verifies read it) by this call, after its tiler index — last, so
+    a staged caller can materialize it up front."""
     lsh_b, emb = state["lsh_buckets"], state["embeddings"]
-    cand = _lsh_grid_cand(lsh_b, scratch).persist()
-    if scratch is not None:
-        scratch.append(cand)
+    cand = keep(_lsh_grid_cand(lsh_b))
     return [
-        ("lsh", lambda s: _jaccard_verify(
+        ("lsh", lambda: _jaccard_verify(
             _attach_shingle_sets(cand, lsh_b, lsh_b))),
-        ("semantic", lambda s: _cosine_verify(cand, emb, emb)),
-        ("simhash", lambda s: dedup_simhash_pairs_grid(
-            spark, sf_dir, bands=state["simhash_bands"], scratch=s)),
-        ("exact", lambda s: _exact_pairs(state["hashed"], state["keepers"])),
-        ("substring", lambda s: exact_substring_pairs(
-            docs, fps=state["substring_fps"], scratch=s)),
+        ("semantic", lambda: _cosine_verify(cand, emb, emb)),
+        ("simhash", lambda: dedup_simhash_pairs_grid(
+            spark, sf_dir, bands=state["simhash_bands"])),
+        ("exact", lambda: _exact_pairs(state["hashed"], state["keepers"])),
+        ("substring", lambda: exact_substring_pairs(
+            docs, fps=state["substring_fps"])),
     ]
 
 
@@ -3530,20 +3491,15 @@ def _master_edge_union(
     sf_dir: str,
     docs: DataFrame,
     state: dict,
-    scratch: list | None = None,
 ) -> DataFrame:
     """The capstone's five-signal edge union over ``docs``: the lane
-    table (_master_lanes) unioned and deduped in one lazy plan.
-
-    ``scratch``: collects every frame the lanes persist beyond the
-    ``state`` tables themselves (the shared candidates and the grid
-    tilers' index tables), so a caller that materializes the union
-    once can release this call's entire footprint mid-query (the
-    incremental keep-list does, before its CC phases)."""
-    lanes = _master_lanes(spark, sf_dir, docs, state, scratch)
+    table (_master_lanes) unioned and deduped in one lazy plan. The
+    frames the lanes keep (the shared candidates and the grid tilers'
+    index tables) belong to the caller's scratch block."""
+    lanes = _master_lanes(spark, sf_dir, docs, state)
     return reduce(
         lambda a, b: a.unionByName(b),
-        [build(scratch).select("doc_a", "doc_b") for _, build in lanes],
+        [build().select("doc_a", "doc_b") for _, build in lanes],
     ).distinct()
 
 
@@ -3619,73 +3575,75 @@ def dedup_master_keep_list_staged(spark: SparkSession, sf_dir: str) -> DataFrame
     from concurrent.futures import ThreadPoolExecutor
 
     docs = _docs(spark, sf_dir)
-    # ONE signature store shared by every lane, exactly as the inline
-    # composition (round-15: the first staged version rebuilt the
-    # shingle pipeline per lane — the single largest cost of the
-    # staged composition at sf0.1). ``shared`` holds the shingle
-    # cache, the LSH/semantic candidate table and its tiler index.
-    shared: list = []
-    state = master_history_state(spark, sf_dir, docs, scratch=shared)
-    lanes = _master_lanes(spark, sf_dir, docs, state, shared)
-    # The shared candidates (appended last) are built once, up front,
-    # with the shingle cache and tiler index beneath them: left lazy,
-    # the two lanes that read them would both block on their first
-    # build, each under its own lane label.
-    spark.sparkContext.setJobDescription("keep-list stage: shared candidates")
-    shared[-1].count()
-    spark.sparkContext.setJobDescription(None)
 
     def run_lane(item):
-        """Build + materialize one lane, then release ITS OWN scratch
-        (blocking). The pair table is handle-owned, so release needs
-        no checkpoint-id attribution and stays safe under the
-        concurrent-lane scheduling below. Job descriptions are
-        thread-local, so each in-flight lane is labelled in the UI."""
+        """Build + materialize one lane in its own scratch block, which
+        releases the lane's own frames (blocking) once its pair table
+        is counted. Each lane runs in its own pool thread, so it never
+        releases a sibling's frames. The pair table outlives the block:
+        it is a plain ``persist()``, not kept, and is handed to the CC
+        block below. Job descriptions are thread-local, so each
+        in-flight lane is labelled in the UI."""
         name, build = item
         spark.sparkContext.setJobDescription(f"keep-list stage: {name}")
-        scratch: list = []
-        out = build(scratch).select("doc_a", "doc_b").persist()
-        out.count()
-        for fr in scratch:
-            fr.unpersist(True)
+        with scratch():
+            out = build().select("doc_a", "doc_b").persist()
+            out.count()
         spark.sparkContext.setJobDescription(None)
         return out
 
-    # Lanes run AT MOST TWO in flight (guide §2.6 "overlap independent
-    # jobs": FIFO scheduling back-fills the current lane's straggler
-    # tail with the next lane's tasks — round-16: the strictly
-    # sequential form serialized five materialization barriers, ~4 s
-    # of idle tail at sf0.1 and the same idle fraction on a cluster).
-    # Peak scratch becomes max(adjacent lane pair) instead of
-    # max(lane) — still far under the sum(lanes) that ENOSPC'd the
-    # r14 100× inline composition; the pool size is the §2.6
-    # recommendation, not a core-count tunable. Two groups: the three
-    # shingle-signature lanes, then exact + substring (raw-text
-    # signatures). The first group's signature state is released
-    # before the scratch-heaviest lane (substring) starts.
-    first_done = (
-        *shared,
-        *(state[k] for k in ("lsh_buckets", "embeddings", "simhash_bands")),
-    )
     staged = []
-    for group, done in ((lanes[:3], first_done), (lanes[3:], state.values())):
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            staged += pool.map(run_lane, group)
-        for fr in done:
-            fr.unpersist(True)
-        _gc.collect()
-        spark.sparkContext._jvm.System.gc()
-    edges = reduce(lambda a, b: a.unionByName(b), staged).distinct()
-    labels = connected_components(edges)
-    losers = labels.filter(F.col("doc_id") != F.col("label")).select("doc_id")
-    out = docs.select("doc_id", "lang").join(losers, "doc_id", "left_anti")
+    with scratch() as shared:
+        # ONE signature store shared by every lane, exactly as the
+        # inline composition (round-15: the first staged version
+        # rebuilt the shingle pipeline per lane — the single largest
+        # cost of the staged composition at sf0.1). The block owns the
+        # shingle cache, the stores, the LSH/semantic candidate table
+        # and its tiler index.
+        state = master_history_state(spark, sf_dir, docs)
+        lanes = _master_lanes(spark, sf_dir, docs, state)
+        # The shared candidates (kept last) are built once, up front,
+        # with the shingle cache and tiler index beneath them: left
+        # lazy, the two lanes that read them would both block on their
+        # first build, each under its own lane label.
+        spark.sparkContext.setJobDescription(
+            "keep-list stage: shared candidates"
+        )
+        shared[-1].count()
+        spark.sparkContext.setJobDescription(None)
+        # Lanes run AT MOST TWO in flight (guide §2.6 "overlap
+        # independent jobs": FIFO scheduling back-fills the current
+        # lane's straggler tail with the next lane's tasks — round-16:
+        # the strictly sequential form serialized five materialization
+        # barriers, ~4 s of idle tail at sf0.1 and the same idle
+        # fraction on a cluster). Peak scratch becomes max(adjacent
+        # lane pair) instead of max(lane) — still far under the
+        # sum(lanes) that ENOSPC'd the r14 100× inline composition;
+        # the pool size is the §2.6 recommendation, not a core-count
+        # tunable. Two groups: the three shingle-signature lanes, then
+        # exact + substring (raw-text signatures). Everything but the
+        # second group's stores is released before the scratch-heaviest
+        # lane (substring) starts; the block releases the rest.
+        later = [state[k] for k in ("hashed", "keepers", "substring_fps")]
+        first_done = [fr for fr in shared if all(fr is not x for x in later)]
+        for group, done in ((lanes[:3], first_done), (lanes[3:], shared)):
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                staged += pool.map(run_lane, group)
+            for fr in done:
+                fr.unpersist(True)
+            _gc.collect()
+            spark.sparkContext._jvm.System.gc()
     # CC's output is checkpoint-backed; the pair-table caches feed
     # nothing in the returned plan. Lineage is intact (persist, not
-    # checkpoint), so this release is safe even against a late
+    # checkpoint), so their release is safe even against a late
     # re-read.
-    for df in staged:
-        df.unpersist()
-    return out
+    with scratch() as pair_tables:
+        pair_tables += staged
+        labels = connected_components(
+            reduce(lambda a, b: a.unionByName(b), staged).distinct()
+        )
+    losers = labels.filter(F.col("doc_id") != F.col("label")).select("doc_id")
+    return docs.select("doc_id", "lang").join(losers, "doc_id", "left_anti")
 
 
 QUERIES.update(
@@ -3698,8 +3656,7 @@ QUERIES.update(
 
 
 def master_history_state(
-    spark: SparkSession, sf_dir: str, hist: DataFrame,
-    scratch: list | None = None,
+    spark: SparkSession, sf_dir: str, hist: DataFrame
 ) -> dict:
     """The per-lane signature stores every master keep-list lane reads
     — and the PERSISTABLE "previous run" state the incremental
@@ -3719,30 +3676,25 @@ def master_history_state(
     it reads ``lsh_buckets`` (round-16, guide §1.2 "don't compute
     things twice").
 
-    Every table is persisted: the stores are derived once from ONE
+    Every table is kept: the stores are derived once from ONE
     shingle pipeline and read by several consumers (both sides of a
     pair join, the cross probe) — round-15 measurement: deriving the
     signatures once here instead of once per consumer (shingle
     pipeline ×3, minhash/simhash votes ×2, embedding UDF ×2, winnow
-    map ×2) was the single largest cost of the incremental lane.
-    Lifecycle is caller-owned (clearCache), catalog-wide.
-
-    ``scratch``: if given, the persisted shingle table the stores are
-    derived from (not itself a store) is appended to it, so a caller
-    that releases its state before later phases releases this too."""
-    sh_hist = with_shingles(hist).persist()
-    if scratch is not None:
-        scratch.append(sh_hist)
+    map ×2) was the single largest cost of the incremental lane. So is
+    the shingle table the stores derive from (not itself a store), so
+    the caller's scratch block releases it with them."""
+    sh_hist = keep(with_shingles(hist))
     hashed, keepers = _content_hash_keepers(hist)
     return {
-        "hashed": hashed.persist(),
-        "keepers": keepers.persist(),
+        "hashed": keep(hashed),
+        "keepers": keep(keepers),
         "lsh_buckets": _lsh_band_buckets(spark, sf_dir, shingled=sh_hist),
         "simhash_bands": _simhash_pair_bands(
             spark, sf_dir, shingled=sh_hist
         ),
-        "embeddings": _hashing_bow_embeddings(sh_hist).persist(),
-        "substring_fps": substring_fp_table(_substring_base(hist)).persist(),
+        "embeddings": keep(_hashing_bow_embeddings(sh_hist)),
+        "substring_fps": keep(substring_fp_table(_substring_base(hist))),
     }
 
 
@@ -3876,26 +3828,18 @@ def dedup_master_keep_list_incremental(
     over contracted nodes equals its true min doc_id. The iterative
     work is proportional to the NEW edge volume — the star rounds
     never re-walk the history graph."""
-    from finmapreduce_spark.operators.checkpoints import (
-        iter_checkpoint,
-        release_iter_checkpoint,
-    )
-
     docs = _docs(spark, sf_dir)
     # The staged predecessor, derived inside the timed query: one
-    # signature store + one pair pass over the whole corpus.
-    scratch: list = []
-    state = master_history_state(spark, sf_dir, docs, scratch=scratch)
-    all_edges = iter_checkpoint(
-        _master_edge_union(spark, sf_dir, docs, state=state, scratch=scratch)
-    )
-    # The stores fed the pair pass only — release them (blocking)
-    # before the CC phases so label work never runs under the
-    # signature tables' memory pressure (the staged lane's scratch
-    # discipline; all_edges is an eager checkpoint, nothing re-reads
-    # the released lineage).
-    for fr in (*state.values(), *scratch):
-        fr.unpersist(True)
+    # signature store + one pair pass over the whole corpus. The
+    # stores fed the pair pass only — the block releases them before
+    # the CC phases so label work never runs under the signature
+    # tables' memory pressure (all_edges is an eager checkpoint,
+    # nothing re-reads the released lineage).
+    with scratch():
+        state = master_history_state(spark, sf_dir, docs)
+        all_edges = iter_checkpoint(
+            _master_edge_union(spark, sf_dir, docs, state=state)
+        )
     is_delta_a = F.pmod(F.col("doc_a"), F.lit(INGEST_MOD)) == 0
     is_delta_b = F.pmod(F.col("doc_b"), F.lit(INGEST_MOD)) == 0
     # the "previous run": labels over the history-internal subgraph
@@ -3952,7 +3896,6 @@ def incremental_substring_pairs(
     min_len: int = SUBSTR_L,
     k: int = SUBSTR_K,
     history_fps: DataFrame | None = None,
-    scratch: list | None = None,
     incoming_fps: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, hist_id, n_shared_grams): which incoming docs share a
@@ -3971,33 +3914,21 @@ def incremental_substring_pairs(
     (streaming/pipeline.py::serve_incremental_substring) builds it
     once and probes it every epoch.
 
-    ``scratch``: if given, every DataFrame THIS call persists is
-    appended to it so a long-lived caller (a per-epoch foreachBatch)
-    can unpersist after materializing — clearCache() is not an option
-    there because it would evict the shared store (round-10 review:
-    without this, each micro-batch leaked its delta fp table and hit
-    join until storage OOM). Batch/catalog callers may ignore it per
-    the catalog-wide clearCache contract."""
+    Every frame this call persists is kept (operators.checkpoints.keep),
+    so a per-epoch caller releases it without clearCache, which would
+    evict the shared store (round-10 review: each micro-batch used to
+    leak its delta fp table and hit join until storage OOM)."""
     bi = _substring_base(incoming)
     bh = _substring_base(history)
-    created = scratch if scratch is not None else []
     # ``incoming_fps``: prebuilt delta fp store (the keep-list cross
     # probe's master_history_state over the delta) — skips
     # re-winnowing the delta here.
-    if incoming_fps is not None:
-        fi = incoming_fps
-    else:
-        fi = substring_fp_table(bi, min_len, k).persist()
-        created.append(fi)
-    if history_fps is not None:
-        fh = history_fps
-    else:
-        fh = substring_fp_table(bh, min_len, k).persist()
-        created.append(fh)
-    hits = fi.join(
-        fh.select(F.col("doc_id").alias("hist_id"), "fp"), "fp"
-    ).persist()
-    created.append(hits)
+    fi, fh = incoming_fps, history_fps
+    if fi is None:
+        fi = keep(substring_fp_table(bi, min_len, k))
+    if fh is None:
+        fh = keep(substring_fp_table(bh, min_len, k))
+    hits = keep(fi.join(fh.select(F.col("doc_id").alias("hist_id"), "fp"), "fp"))
     inc_ids = hits.select("doc_id").distinct()
     hist_ids = hits.select(F.col("hist_id").alias("doc_id")).distinct()
     # no forced broadcast hints: on a boilerplate-heavy ingest the
@@ -4023,7 +3954,6 @@ def incremental_substring_pairs(
         "doc_id",
         "hist_id",
         block=SUBSTR_GRID_BLOCK,
-        scratch=created,
     )
     return pairs.groupBy("doc_id", "hist_id").agg(
         F.count("*").cast("long").alias("n_shared_grams")
@@ -4274,13 +4204,12 @@ def substring_trim(
     docs: DataFrame,
     min_len: int = SUBSTR_L,
     k: int = SUBSTR_K,
-    scratch: list | None = None,
 ) -> DataFrame:
     """(doc_id, n_chars, n_removed, n_cut_spans, text_trimmed):
     every doc's text with its duplicated-span copies cut out
     (doc_b side of exact_substring_spans), full corpus — docs with
     no spans pass through unchanged."""
-    spans = exact_substring_spans(docs, min_len, k, scratch=scratch)
+    spans = exact_substring_spans(docs, min_len, k)
     # DISTINCT before the merge window: a union is insensitive to
     # duplicate intervals (the same [s, e) arrives once per partner
     # doc — ~100 copies on a boilerplate corpus), and dropping them

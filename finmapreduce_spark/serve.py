@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from finmapreduce_spark.operators.checkpoints import scratch
 from finmapreduce_spark.plans.mapreduce import MapReduceConfig, run_mapreduce
 from finmapreduce_spark.sources.readers import load_upload
 
@@ -67,19 +68,16 @@ def answer_single(
     import uuid
 
     t0 = time.time()
-    stages = run_mapreduce(qa, docs, cfg)
-    try:
+    # the block releases the request's kept LLM stages: they must not
+    # accumulate across a long-lived server EVEN when the request
+    # fails mid-action (the HTTP layer catches and keeps serving)
+    with scratch():
+        stages = run_mapreduce(qa, docs, cfg)
         row = stages["answers"].collect()[0].asDict()
         # one map row per chunk, read from the persisted map output
         # that answering just materialized — counting ``chunks`` would
         # re-run the doc join and the tokenizer
         n_chunks = stages["mapped"].count()
-    finally:
-        # per-request persists must not accumulate across a
-        # long-lived server EVEN when the request fails mid-action
-        # (the HTTP layer catches and keeps serving)
-        stages["mapped"].unpersist()
-        stages["reduced"].unpersist()
     total_time = round(time.time() - t0, 3)
     # Reference AnswerResponse structure (endpoints.py:279-293:
     # token_stats / timing_stats / chunk_stats / request_id) alongside

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from finmapreduce_spark.operators.checkpoints import keep, scratch
 from finmapreduce_spark.sources.sinks import (
     CMS_REPLAY_KEY,
     DOREMI_REPLAY_KEY,
@@ -102,9 +103,10 @@ def read_request_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
 # every declared store's writer guard (fails fast on a compaction
 # lock; a compactor starting mid-epoch refuses), run the mode, write
 # ``emit`` to ``out_dir/epoch_id=N``, append each frame, and — on
-# success or failure — unpersist every frame the epoch persisted.
-# Releasing here, not with clearCache, keeps a static mode's shared
-# history store cached across epochs.
+# success or failure — release every frame the epoch kept: each epoch
+# runs in one scratch block (operators/checkpoints.py), and mode code
+# persists through ``keep``. Releasing here, not with clearCache,
+# keeps a static mode's shared history store cached across epochs.
 # ---------------------------------------------------------------------------
 
 class _Epoch:
@@ -115,13 +117,6 @@ class _Epoch:
         self.epoch_id = epoch_id
         self.spark = batch.sparkSession
         self.stores = stores
-        # frames to unpersist when the epoch ends; helpers that persist
-        # their own intermediates take this list as their ``scratch``
-        self.scratch: list[DataFrame] = []
-
-    def persist(self, df: DataFrame) -> DataFrame:
-        self.scratch.append(df.persist())
-        return df
 
     def history(self, store_dir: str, like: DataFrame) -> DataFrame:
         """A declared store's rows visible to this epoch: empty (with
@@ -159,15 +154,12 @@ def _serve_epochs(
                 parent = os.path.dirname(store_dir.rstrip("/"))
                 os.makedirs(parent or ".", exist_ok=True)
                 guards.enter_context(store_writer(store_dir))
-            try:
+            with scratch():
                 emit, appends = epoch(ep)
                 if emit is not None:
                     _epoch_json(emit, out_dir, epoch_id)
                 for df, store_dir in appends:
                     _guarded_store_append(df, store_dir, epoch_id)
-            finally:
-                for df in ep.scratch:
-                    df.unpersist()
 
     return (
         stream.writeStream.foreachBatch(process_batch)
@@ -195,12 +187,10 @@ def serve_mapreduce(
     cfg = cfg or MapReduceConfig()
 
     def epoch(ep: _Epoch):
-        stages = run_mapreduce(ep.batch.drop("submitted_at"), docs, cfg)
         # under persist_llm_outputs (the real-client posture) each
-        # epoch persists mapped/reduced — _serve_epochs releases them, or
-        # a long-running stream would accumulate cached frames per
-        # epoch (no-op when the flag is off)
-        ep.scratch += [stages["mapped"], stages["reduced"]]
+        # epoch keeps mapped/reduced — _serve_epochs releases them, or
+        # a long-running stream would accumulate cached frames
+        stages = run_mapreduce(ep.batch.drop("submitted_at"), docs, cfg)
         return stages["answers"], []
 
     return _serve_epochs(requests, checkpoint_dir, out_dir, {}, epoch)
@@ -298,8 +288,7 @@ def serve_incremental_substring(
 
     def epoch(ep: _Epoch):
         pairs = incremental_substring_pairs(
-            ep.batch, history_docs, history_fps=history_fps,
-            scratch=ep.scratch,
+            ep.batch, history_docs, history_fps=history_fps
         )
         return pairs, []
 
@@ -348,7 +337,7 @@ def serve_incremental_substring_continuous(
     )
 
     def epoch(ep: _Epoch):
-        inc_fps = ep.persist(substring_fp_table(_substring_base(ep.batch)))
+        inc_fps = keep(substring_fp_table(_substring_base(ep.batch)))
         # no (doc_id, fp) dedup here: the probe only consumes the
         # DISTINCT fp set, which subsumes it (round-10 review —
         # the extra dedup was a redundant whole-store shuffle per
@@ -368,7 +357,7 @@ def serve_incremental_substring_continuous(
             n_hit.alias("n_hit"),
             F.round(n_hit / F.col("n_fps"), 6).alias("containment"),
         )
-        rejected = ep.persist(
+        rejected = keep(
             scored.filter(F.col("containment") > SUBSTR_MAX_CONTAINMENT)
         )
         admitted = inc_fps.join(rejected.select("doc_id"), "doc_id", "left_anti")
@@ -413,7 +402,7 @@ def serve_incremental_passages_continuous(
     )
 
     def epoch(ep: _Epoch):
-        grams = ep.persist(passage_gram_table(ep.batch))
+        grams = keep(passage_gram_table(ep.batch))
         # Replay-duplicate and df-drift guards on the probed slice
         # of the store live inside incremental_passage_spans; the
         # epoch filter in the history read removes the batch's OWN
@@ -424,7 +413,7 @@ def serve_incremental_passages_continuous(
         # doc_id, so a doc resubmitted in a later epoch still matches
         # its own prior-epoch grams (verbatim dup → rejected).
         history = ep.history(store_dir, grams)
-        spans = ep.persist(incremental_passage_spans(grams, history))
+        spans = keep(incremental_passage_spans(grams, history))
         iv = spans.select(
             "doc_id",
             F.col("a_start").alias("s"),
@@ -752,7 +741,7 @@ def serve_incremental_dedup_continuous(
     )
 
     def epoch(ep: _Epoch):
-        incoming = ep.persist(band_signature_table(ep.batch))
+        incoming = keep(band_signature_table(ep.batch))
         # Replay hazard, two forms: a replayed epoch may find (a)
         # duplicate store rows (dedup keeps join fan-out tight)
         # and (b) ITS OWN admitted signatures from the crashed
@@ -765,7 +754,7 @@ def serve_incremental_dedup_continuous(
         history = ep.history(store_dir, incoming).dropDuplicates(
             ["doc_id", "band_id", "key"]
         )
-        verdicts = ep.persist(incremental_verdicts(incoming, history))
+        verdicts = keep(incremental_verdicts(incoming, history))
         admitted = incoming.join(verdicts.select("doc_id"), "doc_id", "left_anti")
         return verdicts, [(admitted, store_dir)]
 
@@ -806,11 +795,11 @@ def serve_incremental_semantic_continuous(
     )
 
     def epoch(ep: _Epoch):
-        incoming = ep.persist(semantic_signature_table(ep.batch))
+        incoming = keep(semantic_signature_table(ep.batch))
         history = ep.history(store_dir, incoming).dropDuplicates(
             ["doc_id", "band_id", "key"]
         )
-        verdicts = ep.persist(incremental_semantic_verdicts(incoming, history))
+        verdicts = keep(incremental_semantic_verdicts(incoming, history))
         admitted = incoming.join(verdicts.select("doc_id"), "doc_id", "left_anti")
         return verdicts, [(admitted, store_dir)]
 
@@ -946,7 +935,7 @@ def serve_incremental_url_continuous(
     from finmapreduce_spark.queries.dedup import _doc_urls
 
     def epoch(ep: _Epoch):
-        urls = ep.persist(_doc_urls(ep.batch))
+        urls = keep(_doc_urls(ep.batch))
         history = ep.history(
             store_dir,
             urls.select("url_canonical", F.col("doc_id").alias("keeper")),
@@ -955,7 +944,7 @@ def serve_incremental_url_continuous(
             F.min("keeper").alias("hist_keeper")
         )
         batch_keeper = F.min("doc_id").over(W.partitionBy("url_canonical"))
-        verdicts = ep.persist(
+        verdicts = keep(
             urls.withColumn("_bk", batch_keeper)
             .join(keepers, "url_canonical", "left")
             .select(
@@ -1020,7 +1009,7 @@ def serve_dsir_filter_continuous(
     )
 
     def epoch(ep: _Epoch):
-        db = ep.persist(_dsir_doc_buckets(ep.spark, None, docs=ep.batch))
+        db = keep(_dsir_doc_buckets(ep.spark, None, docs=ep.batch))
         is_t = F.col("lang") == DSIR_TARGET_LANG
         increments = db.groupBy("b").agg(
             F.sum(F.when(is_t, F.col("c")).otherwise(0)).alias("t_add"),
@@ -1080,7 +1069,7 @@ def serve_hll_distinct_continuous(
     )
 
     def epoch(ep: _Epoch):
-        regs = ep.persist(_batch_hll_registers(ep.batch))
+        regs = keep(_batch_hll_registers(ep.batch))
         merged = (
             regs.unionByName(ep.history(store_dir, regs).select("b", "reg"))
             .groupBy("b")
@@ -1124,7 +1113,7 @@ def serve_cms_watchlist_continuous(
     from finmapreduce_spark.queries.sketches import _cms_probes, _cms_sketch
 
     def epoch(ep: _Epoch):
-        cells = ep.persist(_cms_sketch(ep.batch).withColumnRenamed("c", "c_add"))
+        cells = keep(_cms_sketch(ep.batch).withColumnRenamed("c", "c_add"))
         sketch = (
             cells.unionByName(
                 ep.history(store_dir, cells).select("j", "b", "c_add")
@@ -1190,7 +1179,7 @@ def serve_doremi_weights_continuous(
     )
 
     def epoch(ep: _Epoch):
-        inc = ep.persist(
+        inc = keep(
             _doremi_bucket_counts(ep.batch.filter(F.col("text").isNotNull()))
         )
         increments = inc.select("source", "b", F.col("c").alias("c_add"))
@@ -1262,7 +1251,7 @@ def serve_quantile_sketch_continuous(
     sample_dir = os.path.join(store_dir, "sample")
 
     def epoch(ep: _Epoch):
-        base = ep.persist(_qsk_base(ep.batch))
+        base = keep(_qsk_base(ep.batch))
         lvlc_inc = base.groupBy("lvl").agg(F.count("*").alias("c_add"))
         counts = lvlc_inc.unionByName(
             ep.history(levels_dir, lvlc_inc).select("lvl", "c_add")
@@ -1275,7 +1264,7 @@ def serve_quantile_sketch_continuous(
         pool = rows.unionByName(
             ep.history(sample_dir, rows).select("doc_id", "val", "lvl")
         )
-        retained = ep.persist(pool.join(F.broadcast(thr), at_level))
+        retained = keep(pool.join(F.broadcast(thr), at_level))
         pcts = ep.spark.createDataFrame(
             [(p,) for p in QSK_PCTS], "percentile double"
         )
@@ -1339,7 +1328,7 @@ def serve_incremental_phash_continuous(
     )
 
     def epoch(ep: _Epoch):
-        sig = ep.persist(dhash_images(fake_assets_from_documents(ep.batch)))
+        sig = keep(dhash_images(fake_assets_from_documents(ep.batch)))
         bands = phash_bands(sig)
         hist = (
             ep.history(store_dir, bands)
@@ -1366,7 +1355,7 @@ def serve_incremental_phash_continuous(
                 F.col("m.hamming").alias("hamming"),
             )
         )
-        verdicts = ep.persist(
+        verdicts = keep(
             sig.select("asset_id")
             .join(matches, "asset_id", "left")
             .select(

@@ -143,3 +143,75 @@ def test_cc_star_retains_bounded_snapshots(spark, monkeypatch):
     assert out.count() == 7
     # retained: the converged edge set + the node-list checkpoint
     assert len(_live_ids(spark) - before) <= 2
+
+
+def test_release_leaves_upstream_cache_to_its_owner(spark, monkeypatch):
+    """A frame persisted lazily upstream and first computed by a
+    checkpoint's job is not the checkpoint's: releasing the
+    checkpoint must leave it pinned and cached for its owner."""
+    from pyspark import StorageLevel
+
+    from finmapreduce_spark.operators.checkpoints import (
+        release_iter_checkpoint,
+    )
+
+    monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
+    before = _live_ids(spark)
+    a = spark.range(1000).withColumn("x7", F.col("id") % 7).persist()
+    try:
+        out = iter_checkpoint(a.groupBy("x7").count())
+        cache_ids = _live_ids(spark) - before - out._fmr_ckpt_rdd_ids
+        assert cache_ids, "the checkpoint claimed the upstream cache"
+        assert release_iter_checkpoint(out) == 1
+        assert cache_ids <= _live_ids(spark), "upstream cache unpinned"
+        assert a.is_cached and a.storageLevel != StorageLevel.NONE
+    finally:
+        a.unpersist(True)
+
+
+def test_scratch_block_releases_what_keep_persists(spark):
+    """``keep`` inside a block belongs to the innermost open block and
+    is released at its exit, on error too; outside any block it is a
+    plain persist left to its caller."""
+    import pytest
+
+    from finmapreduce_spark.operators.checkpoints import keep, scratch
+
+    free = keep(spark.range(5).withColumn("k", F.lit("free")))
+    with scratch() as outer:
+        a = keep(spark.range(5).withColumn("k", F.lit("outer")))
+        with pytest.raises(RuntimeError):
+            with scratch() as inner:
+                b = keep(spark.range(5).withColumn("k", F.lit("inner")))
+                raise RuntimeError("mid-block failure")
+        assert inner == [b] and not b.is_cached
+        assert outer == [a] and a.is_cached
+    assert not a.is_cached
+    assert free.is_cached
+    free.unpersist(True)
+
+
+def test_scratch_blocks_are_per_thread(spark):
+    """Blocks open at the same time in several threads each own only
+    their own thread's keeps — the staged keep-list's concurrent
+    lanes must never release a sibling's frames."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from finmapreduce_spark.operators.checkpoints import keep, scratch
+
+    n = 8
+    all_open = threading.Barrier(n, timeout=60)
+
+    def lane(i):
+        with scratch() as owned:
+            all_open.wait()
+            mine = [
+                keep(spark.range(3).withColumn("lane", F.lit(f"{i}/{j}")))
+                for j in range(3)
+            ]
+            all_open.wait()
+            return [id(df) for df in owned] == [id(df) for df in mine]
+
+    with ThreadPoolExecutor(max_workers=n) as pool:
+        assert all(pool.map(lane, range(n)))

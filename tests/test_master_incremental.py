@@ -136,3 +136,41 @@ def test_incremental_releases_history_shingles_before_cc(
     # shingles + five stores + LSH/semantic candidates + tiler indexes
     assert len(persisted) >= 8, persisted
     assert pinned_at_cc == [[]] * n_cc
+
+
+@pytest.mark.parametrize(
+    "keep_list",
+    [
+        dedup_master_keep_list,
+        dedup_master_keep_list_staged,
+        dedup_master_keep_list_incremental,
+    ],
+    ids=["inline", "staged", "incremental"],
+)
+def test_keep_list_releases_every_persist(spark, sf_dir, duck, monkeypatch, keep_list):
+    """Each composition owns what it persists: once it returns, no
+    frame it persisted (in any thread) is still cached — the result
+    reads only ``docs`` and CC's checkpoints — and the result is the
+    capstone oracle's."""
+    from pyspark import StorageLevel
+
+    from finmapreduce_spark.queries.dedup import DEDUP_MASTER_KEEP_ORACLE
+    from tests.oracle_utils import assert_matches_oracle
+
+    spark.catalog.clearCache()
+    frame_cls = type(spark.range(1))
+    real_persist = frame_cls.persist
+    persisted = []
+
+    def persist(self, *a, **kw):
+        persisted.append(self)
+        return real_persist(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "persist", persist)
+    out = keep_list(spark, sf_dir)
+    monkeypatch.undo()
+    assert len(persisted) >= 8, persisted
+    cached = [df for df in persisted if df.storageLevel != StorageLevel.NONE]
+    assert cached == [], f"{len(cached)} of {len(persisted)} frames still cached"
+    assert_matches_oracle(out, duck, DEDUP_MASTER_KEEP_ORACLE)
+    spark.catalog.clearCache()

@@ -288,9 +288,10 @@ def test_substring_grid_equals_plain_on_hot_gram_corpus(spark, sf_dir, tmp_path)
 
 def test_substring_batch_scratch_releases_persists(spark, sf_dir):
     """Batch substring operators must route every internal persist
-    through the caller's scratch list so a long-lived library caller
+    through the caller's scratch block so a long-lived library caller
     can release them without clearCache (round-10 advice: the
     streaming path needed exactly this fix for its per-epoch leak)."""
+    from finmapreduce_spark.operators.checkpoints import scratch
     from finmapreduce_spark.queries.dedup import (
         _docs,
         exact_substring_pairs,
@@ -315,13 +316,12 @@ def test_substring_batch_scratch_releases_persists(spark, sf_dir):
         exact_substring_spans,
         substring_duplication_coverage,
     ):
-        scratch = []
-        op(docs, scratch=scratch).count()
-        assert scratch, f"{op.__name__} persisted nothing into scratch"
-        for df in scratch:
-            assert df.is_cached
-            df.unpersist()
-        # nothing NEW pinned beyond what scratch handed back
+        with scratch() as owned:
+            op(docs).count()
+            assert owned, f"{op.__name__} persisted nothing into scratch"
+            for df in owned:
+                assert df.is_cached
+        # nothing NEW pinned once the block released what it owned
         assert pinned_ids() - before == set()
 
 
