@@ -28,43 +28,47 @@ import os
 
 
 def run(spark, sf_dir: str, out: str) -> dict:
+    """Write the four artifacts under ``out`` and return the summary.
+    One scratch block owns every frame the pipeline keeps: they are
+    released, blocking, once the writes and the summary collects are
+    done (the keep-list's CC checkpoints are not frames; their loop
+    owns them)."""
+    from pyspark.sql import functions as F
+
+    from finmapreduce_spark.operators.checkpoints import scratch
     from finmapreduce_spark.queries.training import (
         curation_pipeline_frames,
     )
 
-    fr = curation_pipeline_frames(spark, sf_dir)
     os.makedirs(out, exist_ok=True)
-    fr["survivors"].write.mode("overwrite").parquet(
-        os.path.join(out, "keep_list.parquet")
-    )
-    fr["selected"].write.mode("overwrite").parquet(
-        os.path.join(out, "selected.parquet")
-    )
-    fr["layout"].write.mode("overwrite").parquet(
-        os.path.join(out, "layout.parquet")
-    )
-    fr["sharded"].write.mode("overwrite").parquet(
-        os.path.join(out, "shards.parquet")
-    )
-    funnel = {
-        k: int(v) for k, v in fr["funnel"].collect()[0].asDict().items()
-    }
-    from pyspark.sql import functions as F
-
-    cells = [
-        r.asDict()
-        for r in (
-            fr["layout"]
-            .join(fr["sharded"], "doc_id")
-            .groupBy("shard", "stage")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_tokens").cast("long").alias("cell_tokens"),
+    with scratch():
+        fr = curation_pipeline_frames(spark, sf_dir)
+        for key, name in (
+            ("survivors", "keep_list"),
+            ("selected", "selected"),
+            ("layout", "layout"),
+            ("sharded", "shards"),
+        ):
+            fr[key].write.mode("overwrite").parquet(
+                os.path.join(out, f"{name}.parquet")
             )
-            .orderBy("shard", "stage")
-            .collect()
-        )
-    ]
+        funnel = {
+            k: int(v) for k, v in fr["funnel"].collect()[0].asDict().items()
+        }
+        cells = [
+            r.asDict()
+            for r in (
+                fr["layout"]
+                .join(fr["sharded"], "doc_id")
+                .groupBy("shard", "stage")
+                .agg(
+                    F.count("*").alias("n_docs"),
+                    F.sum("n_tokens").cast("long").alias("cell_tokens"),
+                )
+                .orderBy("shard", "stage")
+                .collect()
+            )
+        ]
     return {"funnel": funnel, "cells": cells, "out": out}
 
 

@@ -31,6 +31,7 @@ from finmapreduce_spark.operators.checkpoints import (
     release_iter_checkpoint,
     scratch,
 )
+from finmapreduce_spark.operators.pairgrid import grid_cross_pairs, grid_self_pairs
 from finmapreduce_spark.queries import QuerySpec
 from finmapreduce_spark.session import read_table
 
@@ -223,9 +224,9 @@ def _lsh_band_buckets(
     spark: SparkSession, sf_dir: str, shingled: DataFrame | None = None
 ) -> DataFrame:
     """The shared band-bucket table (doc_id, hashed shingles, band_id,
-    key) behind BOTH pair builders — one definition, so a banding or
-    shingle-hashing change cannot silently diverge the plain and grid
-    variants out of their shared oracle.
+    key) behind the LSH lane, its keep-list lane and the streaming
+    store — one definition, so a banding or shingle-hashing change
+    cannot silently diverge them out of their shared oracle.
 
     ``shingled``: an already-built (and persisted) with_shingles frame
     to reuse — master_history_state builds the scan→split→shingle
@@ -319,84 +320,62 @@ def _jaccard_verify(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _bucket_pairs(
-    left: DataFrame, right: DataFrame, keys: list[str], payload: tuple = ()
-) -> DataFrame:
-    """(doc_a, doc_b, {payload}_a, {payload}_b): one row per doc pair
-    sharing all ``keys`` in some bucket (deduped across buckets) — the
-    plain, un-tiled band join. ``left is right`` is a self-join and
-    keeps doc_a < doc_b; two different tables are a probe (the
-    incremental capstone's delta × history) and keep every hit."""
-    l, r = left.alias("l"), right.alias("r")
-    cond = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
-    if left is right:
-        cond.append(F.col("l.doc_id") < F.col("r.doc_id"))
-    return (
-        l.join(r, reduce(lambda x, y: x & y, cond))
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            *[F.col(f"l.{c}").alias(f"{c}_a") for c in payload],
-            *[F.col(f"r.{c}").alias(f"{c}_b") for c in payload],
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-
-def dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate pairs via band-bucket equi-join (the shuffle key is
-    the bucket — at 100 TB this is the only join that runs, never the
-    n² cross), verified with exact Jaccard over distinct shingles.
-    The bucket join moves ids only; shingle arrays attach once at the
-    verify (_attach_shingle_sets).
-    """
-    buckets = _lsh_band_buckets(spark, sf_dir)
-    cand = _bucket_pairs(buckets, buckets, ["band_id", "key"])
-    return _jaccard_verify(_attach_shingle_sets(cand, buckets, buckets))
-
-
-# ---------------------------------------------------------------------------
-# Hot-bucket-safe variant: grid-decomposed pair generation. The plain
-# band self-join shuffles on (band_id, key), so a bucket of H docs
-# (boilerplate duplicated site-wide, a template page, an empty-doc
-# cluster) funnels all H²/2 candidate verifies through ONE task. The
-# grid splits each bucket's pair triangle into B×B cells: docs get an
-# in-bucket index (one window sort, O(H log H) — rows, not pairs),
-# the left side replicates each doc to its row of cells, the right
-# side to its column, and the join key becomes (band, key, cell).
-# Per-task work is bounded by B² verifies regardless of bucket size;
-# replication factor is ceil(H/B) per hot-bucket row — the standard
-# triangle-tiling trade (same shape as dedup_embedding_cosine's grid).
-# Pair SEMANTICS are identical, so the same DuckDB oracle certifies
-# both variants. B here is sized for the local fixture; production
-# tunes B so B² verifies ≈ one task's budget (e.g. 1024).
-# ---------------------------------------------------------------------------
-
-LSH_GRID_BLOCK = 64
-
-
 def _lsh_grid_cand(buckets: DataFrame) -> DataFrame:
-    """(doc_a, doc_b): the band-bucket self-join through the shared
-    grid tiler — the LSH lane's one candidate build. The tiler moves
-    bare ids; shingle arrays attach once at the verify (guide §2.3/§8
-    — they no longer ride the in-bucket index window, the two
-    replicated explode sides, the cell sort-merge sorts, or the
+    """(doc_a, doc_b): the MinHash band-bucket self-join — the LSH and
+    semantic lanes' one candidate build, through the pairgrid tiler
+    (operators/pairgrid.py), so a bucket shared by a boilerplate
+    cluster cannot funnel its pair product through one task. The
+    tiler moves bare ids; shingle arrays attach once at the verify
+    (guide §2.3/§8 — they do not ride the in-bucket index window, the
+    two replicated explode sides, the cell sort-merge sorts, or the
     candidate dedup exchange)."""
-    from finmapreduce_spark.operators.pairgrid import grid_self_pairs
-
     return grid_self_pairs(
         buckets.select("doc_id", "band_id", "key"),
         ["band_id", "key"],
         "doc_id",
         [],
-        block=LSH_GRID_BLOCK,
     ).select(
         F.col("doc_id_a").alias("doc_a"),
         F.col("doc_id_b").alias("doc_b"),
     )
 
 
-def dedup_lsh_pairs_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _band_probe(
+    delta: DataFrame, store: DataFrame, keys: list[str], payload: tuple = ()
+) -> DataFrame:
+    """(doc_a, doc_b, {payload}_a, {payload}_b): one row per (delta
+    doc, store doc) pair sharing all ``keys`` in some bucket (deduped
+    across buckets) — the delta × store band probe of the incremental
+    lanes, through the rectangular pairgrid tiler, so a bucket hot on
+    both sides (a boilerplate template arriving in a boilerplate-heavy
+    corpus) cannot funnel its pair product through one task."""
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            *keys,
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in payload],
+        )
+
+    return grid_cross_pairs(
+        side(delta, "a"),
+        side(store, "b"),
+        keys,
+        "doc_a",
+        "doc_b",
+        left_payload=[f"{c}_a" for c in payload],
+        right_payload=[f"{c}_b" for c in payload],
+    ).dropDuplicates(["doc_a", "doc_b"])
+
+
+def dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Candidate pairs via the band-bucket self-join (the shuffle key
+    is the bucket and its pairgrid cell — at 100 TB this is the only
+    join that runs, never the n² cross), verified with exact Jaccard
+    over distinct shingles. The bucket join moves ids only; shingle
+    arrays attach once at the verify (_attach_shingle_sets). Registered
+    as dedup_lsh_pairs and dedup_lsh_pairs_grid.
+    """
     buckets = _lsh_band_buckets(spark, sf_dir)
     return _jaccard_verify(
         _attach_shingle_sets(_lsh_grid_cand(buckets), buckets, buckets)
@@ -700,25 +679,18 @@ def _hamming_verify(cand: DataFrame) -> DataFrame:
     )
 
 
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bands = _simhash_pair_bands(spark, sf_dir)
-    # deduped: a pair matching in >1 band must count once
-    return _hamming_verify(_bucket_pairs(bands, bands, ["k", "bv"], ("sim",)))
-
-
-def dedup_simhash_pairs_grid(
+def dedup_simhash_pairs(
     spark: SparkSession,
     sf_dir: str,
     bands: DataFrame | None = None,
 ) -> DataFrame:
-    """Hot-bucket-safe twin of ``dedup_simhash_pairs``: the (k, bv)
-    band self-join goes through the shared grid tiler
-    (operators/pairgrid.py) so a band value shared by a boilerplate
-    cluster cannot funnel its pair product through one task. Same
-    pairs, same oracle. ``bands``: a prebuilt signature store (the
-    master keep-list's, from master_history_state)."""
-    from finmapreduce_spark.operators.pairgrid import grid_self_pairs
-
+    """SimHash near-dup pairs: the (k, bv) band self-join through the
+    pairgrid tiler (operators/pairgrid.py), so a band value shared by
+    a boilerplate cluster cannot funnel its pair product through one
+    task; a pair matching in >1 band counts once. Registered as
+    dedup_simhash_pairs and dedup_simhash_pairs_grid. ``bands``: a
+    prebuilt signature store (the master keep-list's, from
+    master_history_state)."""
     if bands is None:
         bands = _simhash_pair_bands(spark, sf_dir)
     cand = grid_self_pairs(bands, ["k", "bv"], "doc_id", ["sim"]).select(
@@ -989,8 +961,8 @@ WHERE round(list_inner_product(a.v, b.v) / (a.norm * b.norm), 6) >= {COSINE_THRE
 
 MAX_CC_ITERS = 20
 
-# Flag (also settable via FMR_CC_ALGORITHM): "star" (default) is the
-# alternating large-star/small-star algorithm (Kiveris et al.,
+# Flag: "star" (default) is the alternating large-star/small-star
+# algorithm (Kiveris et al.,
 # "Connected Components in MapReduce and Beyond", SoCC'14) —
 # O(log n) rounds regardless of graph diameter, and measured faster
 # than minlabel even on the shallow near-dup graphs (SCALE.md: its
@@ -1169,13 +1141,8 @@ def connected_components(edges: DataFrame, algorithm: str | None = None) -> Data
     """(doc_a, doc_b) edge list → (doc_id, label) with label = min
     doc_id of the component. ``algorithm``: "star" (the default —
     O(log n) rounds independent of diameter) or "minlabel" (the
-    equivalence reference); FMR_CC_ALGORITHM overrides when the arg
-    is None."""
-    import os
-
-    algorithm = algorithm or os.environ.get(
-        "FMR_CC_ALGORITHM", DEFAULT_CC_ALGORITHM
-    )
+    equivalence reference)."""
+    algorithm = algorithm or DEFAULT_CC_ALGORITHM
     if algorithm not in CC_ALGORITHMS:
         raise ValueError(f"unknown CC algorithm {algorithm!r}; known: {CC_ALGORITHMS}")
     if algorithm == "star":
@@ -1205,15 +1172,14 @@ def dedup_cluster_canonical(
     """Connected components over the verified near-dup pairs;
     canonical = min doc_id per component. Default algorithm is the
     O(log n)-round large-star/small-star ("star"); "minlabel"
-    (diameter-bound label propagation) is selectable via the arg or
-    FMR_CC_ALGORITHM as the equivalence reference. Both reach the
-    same unique fixpoint (equivalence-tested).
+    (diameter-bound label propagation) is selectable via the arg as
+    the equivalence reference. Both reach the same unique fixpoint
+    (equivalence-tested).
     """
-    # Edge source: the grid pair builder — pair-identical to the plain
-    # band join (same oracle certifies both) but hot-bucket-safe, so a
+    # Edge source: the tiled LSH pair builder — hot-bucket-safe, so a
     # boilerplate cluster inflates edge VOLUME without funneling the
     # pair build through one task (SCALE.md hot-band-bucket stress).
-    pairs = dedup_lsh_pairs_grid(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = dedup_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     labels = connected_components(pairs, algorithm)
     return labels.select(
         "doc_id",
@@ -1378,6 +1344,47 @@ def ml_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 ML_LSH_RECALL_FLOOR = 0.5  # 4 OR'd hash tables; guards a banding collapse
 
 
+def _exact_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, jaccard): every unordered doc pair whose exact
+    shingle-set Jaccard is >= JACCARD_THRESHOLD — the exhaustive
+    reference the MinHash recall gates (dedup_ml_minhash_lsh,
+    dedup_lsh_recall) measure against. An inverted-index self-join on
+    the shingle (exact: any pair with J > 0 shares a shingle), a count
+    of shared shingles per pair, and the two set sizes. It stays a
+    plain join: it is the truth the tiled banding is measured
+    against, and an offline gate (at 100 TB it runs on a sampled
+    slice, the argument ann_recall_at_k makes)."""
+    # kept: feeds the inverted-index self-join AND the size map
+    docs = keep(with_shingles(_docs(spark, sf_dir)))
+    ex = docs.select("doc_id", F.explode("shingles").alias("s"))
+    inter = (
+        ex.alias("a")
+        .join(
+            ex.alias("b"),
+            (F.col("a.s") == F.col("b.s"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .agg(F.count("*").alias("i"))
+    )
+    sizes = docs.select("doc_id", F.size("shingles").alias("sz"))
+    jac = F.col("i") / (F.col("sz_a") + F.col("sz_b") - F.col("i"))
+    return (
+        inter.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
+        .withColumnRenamed("sz", "sz_a")
+        .join(
+            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
+                "sz", "sz_b"
+            ),
+            "doc_b",
+        )
+        .filter(jac >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    )
+
+
 def dedup_ml_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-certification of the spark.ml MinHashLSH path against the
     exhaustive exact-Jaccard ground truth (VERDICT r10 #2 — this used
@@ -1401,34 +1408,8 @@ def dedup_ml_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     it runs on a sampled slice (dedup_lsh_recall's argument); the ml
     path being certified is the part that runs on the full corpus."""
     ml = ml_minhash_pairs(spark, sf_dir)
-    # persisted: feeds the inverted-index self-join AND the size map
-    docs = with_shingles(_docs(spark, sf_dir)).persist()
-    ex = docs.select("doc_id", F.explode("shingles").alias("s"))
-    inter = (
-        ex.alias("a")
-        .join(
-            ex.alias("b"),
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("i"))
-    )
-    sizes = docs.select("doc_id", F.size("shingles").alias("sz"))
-    jac = F.col("i") / (F.col("sz_a") + F.col("sz_b") - F.col("i"))
-    truth = (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("sz", "sz_a")
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "sz", "sz_b"
-            ),
-            "doc_b",
-        )
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("true_jaccard"))
+    truth = _exact_jaccard_truth(spark, sf_dir).withColumnRenamed(
+        "jaccard", "true_jaccard"
     )
     both = truth.join(ml, ["doc_a", "doc_b"], "full_outer")
     is_true = F.col("true_jaccard").isNotNull()
@@ -1517,71 +1498,18 @@ def band_signature_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ).select("doc_id", "sh", "b.band_id", "b.key")
 
 
-def incremental_verdicts(
-    incoming: DataFrame,
-    history: DataFrame,
-    tiled: bool = False,
-) -> DataFrame:
-    """Join incoming band keys against the history signature store,
-    verify candidates with exact Jaccard, emit per-doc reject
-    verdicts. Both inputs carry the band_signature_table schema.
-
-    ``tiled=True`` routes the probe through the rectangular pairgrid
-    tiler (grid_cross_pairs) — the guard for a band bucket hot on
-    BOTH the delta and the store (a boilerplate template arriving in
-    a boilerplate-heavy corpus). Default stays the plain probe: band
-    keys are hashed half-signatures and skew far less than verbatim
-    grams, so the tiler's replication constant is usually not worth
-    paying (round-11 note in SCALE.md); the option exists for
-    workloads that measure a two-sided hot bucket. Verdicts are
-    identical either way (twin-pinned on the hot-bucket corpus)."""
-    if tiled:
-        from finmapreduce_spark.operators.pairgrid import grid_cross_pairs
-
-        cand = (
-            grid_cross_pairs(
-                incoming.select("doc_id", "sh", "band_id", "key"),
-                history.select(
-                    F.col("doc_id").alias("hist_id"),
-                    F.col("sh").alias("sh_hist"),
-                    "band_id",
-                    "key",
-                ),
-                ["band_id", "key"],
-                "doc_id",
-                "hist_id",
-                left_payload=["sh"],
-                right_payload=["sh_hist"],
-            )
-            .select(
-                "doc_id",
-                "hist_id",
-                F.col("sh").alias("sh_i"),
-                F.col("sh_hist").alias("sh_h"),
-            )
-            .dropDuplicates(["doc_id", "hist_id"])
-        )
-    else:
-        cand = (
-            incoming.alias("i")
-            .join(
-                history.alias("h"),
-                (F.col("i.band_id") == F.col("h.band_id"))
-                & (F.col("i.key") == F.col("h.key")),
-            )
-            .select(
-                F.col("i.doc_id").alias("doc_id"),
-                F.col("h.doc_id").alias("hist_id"),
-                F.col("i.sh").alias("sh_i"),
-                F.col("h.sh").alias("sh_h"),
-            )
-            .dropDuplicates(["doc_id", "hist_id"])
-        )
-    inter = F.size(F.array_intersect("sh_i", "sh_h"))
-    jac = inter / (F.size("sh_i") + F.size("sh_h") - inter)
+def incremental_verdicts(incoming: DataFrame, history: DataFrame) -> DataFrame:
+    """Probe incoming band keys against the history signature store
+    (_band_probe: the rectangular pairgrid tiler, the guard for a band
+    bucket hot on BOTH the delta and the store), verify candidates
+    with exact Jaccard, emit per-doc reject verdicts. Both inputs
+    carry the band_signature_table schema."""
+    cand = _band_probe(incoming, history, ["band_id", "key"], ("sh",))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = inter / (F.size("sh_a") + F.size("sh_b") - inter)
     verdicts = (
         cand.withColumn("jaccard", F.round(jac, 6))
-        .groupBy("doc_id")
+        .groupBy(F.col("doc_a").alias("doc_id"))
         .agg(
             F.max("jaccard").alias("max_jaccard"),
             F.count("*").alias("n_candidates"),
@@ -1599,7 +1527,7 @@ def dedup_incremental_vs_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Which incoming docs are near-dups of the existing corpus.
 
     Split: doc_id % {m} == 0 is the incoming batch, the rest is
-    history. Incoming band keys equi-join the history band table
+    history. Incoming band keys probe the history band table
     (in production a persisted parquet keyed by band — only the
     delta recomputes signatures); candidates verify with exact
     Jaccard on hashed shingles; max Jaccard per incoming doc is the
@@ -1708,22 +1636,11 @@ def pick_lsh_bands(
                 )
                 for i in range(nb)
             ]
-            buckets = sig.select(
-                "doc_id", F.explode(F.array(*bands)).alias("bb")
-            ).select("doc_id", "bb.band_id", "bb.key")
-            cand = (
-                buckets.alias("l")
-                .join(
-                    buckets.alias("r"),
-                    (F.col("l.band_id") == F.col("r.band_id"))
-                    & (F.col("l.key") == F.col("r.key"))
-                    & (F.col("l.doc_id") < F.col("r.doc_id")),
-                )
-                .select(
-                    F.col("l.doc_id").alias("doc_a"),
-                    F.col("r.doc_id").alias("doc_b"),
-                )
-                .dropDuplicates()
+            # the production paths' pair build, so the curve measures
+            # the candidate set a chosen layout would really produce
+            cand = _lsh_grid_cand(
+                sig.select("doc_id", F.explode(F.array(*bands)).alias("bb"))
+                .select("doc_id", "bb.band_id", "bb.key")
             )
             n_cand = cand.count()
             hits = cand.join(truth, ["doc_a", "doc_b"]).count()
@@ -2286,19 +2203,17 @@ def _cosine_verify(
 def dedup_semantic_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band-bucket candidates ∘ hashing-BoW cosine gate.
 
-    Scale: candidate generation is the same banded equi-join as
-    dedup_lsh_pairs (the only join that runs at 100 TB); embedding is
-    one narrow Arrow map over the corpus, persisted so the pair join's
-    two sides don't re-run the UDF. The embedding's integer-valued
-    components keep the cosine FP-exact, so the DuckDB oracle
-    reconstructs the whole DAG — candidates AND model output —
+    Scale: candidate generation is dedup_lsh_pairs' tiled band
+    self-join (_lsh_grid_cand, the only join that runs at 100 TB);
+    embedding is one narrow Arrow map over the corpus, persisted so
+    the verify's two sides don't re-run the UDF. The embedding's
+    integer-valued components keep the cosine FP-exact, so the DuckDB
+    oracle reconstructs the whole DAG — candidates AND model output —
     relationally."""
     docs = with_shingles(_docs(spark, sf_dir))
     buckets = _semantic_buckets(docs)
     emb = _hashing_bow_embeddings(docs).persist()
-    return _cosine_verify(
-        _bucket_pairs(buckets, buckets, ["band_id", "key"]), emb, emb
-    )
+    return _cosine_verify(_lsh_grid_cand(buckets), emb, emb)
 
 
 DEDUP_SEMANTIC_ORACLE = f"""
@@ -2390,36 +2305,21 @@ def semantic_signature_table(docs: DataFrame, text_col: str = "text") -> DataFra
 def incremental_semantic_verdicts(
     incoming: DataFrame, history: DataFrame
 ) -> DataFrame:
-    """Join incoming band keys against the history semantic store,
-    verify candidates with embedding cosine, emit per-doc reject
-    verdicts. Both inputs carry the semantic_signature_table schema."""
-    cand = (
-        incoming.alias("i")
-        .join(
-            history.alias("h"),
-            (F.col("i.band_id") == F.col("h.band_id"))
-            & (F.col("i.key") == F.col("h.key")),
-        )
-        .select(
-            F.col("i.doc_id").alias("doc_id"),
-            F.col("h.doc_id").alias("hist_id"),
-            F.col("i.e").alias("e_i"),
-            F.col("i.nm").alias("nm_i"),
-            F.col("h.e").alias("e_h"),
-            F.col("h.nm").alias("nm_h"),
-        )
-        .dropDuplicates(["doc_id", "hist_id"])
-    )
+    """Probe incoming band keys against the history semantic store
+    (_band_probe, the LSH lane's tiled probe), verify candidates with
+    embedding cosine, emit per-doc reject verdicts. Both inputs carry
+    the semantic_signature_table schema."""
+    cand = _band_probe(incoming, history, ["band_id", "key"], ("e", "nm"))
     cos = F.round(
         F.when(
-            F.col("nm_i") * F.col("nm_h") > 0,
-            _dot(F.col("e_i"), F.col("e_h")) / (F.col("nm_i") * F.col("nm_h")),
+            F.col("nm_a") * F.col("nm_b") > 0,
+            _dot(F.col("e_a"), F.col("e_b")) / (F.col("nm_a") * F.col("nm_b")),
         ).otherwise(F.lit(0.0)),
         6,
     )
     verdicts = (
         cand.withColumn("cosine", cos)
-        .groupBy("doc_id")
+        .groupBy(F.col("doc_a").alias("doc_id"))
         .agg(
             F.max("cosine").alias("max_cosine"),
             F.count("*").alias("n_candidates"),
@@ -2510,13 +2410,13 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "dedup_minhash_signature": QuerySpec(dedup_minhash_signature, DEDUP_MINHASH_ORACLE),
     "dedup_lsh_pairs": QuerySpec(dedup_lsh_pairs, DEDUP_LSH_ORACLE),
-    "dedup_lsh_pairs_grid": QuerySpec(dedup_lsh_pairs_grid, DEDUP_LSH_ORACLE),
+    "dedup_lsh_pairs_grid": QuerySpec(dedup_lsh_pairs, DEDUP_LSH_ORACLE),
     "dedup_simhash": QuerySpec(dedup_simhash, DEDUP_SIMHASH_ORACLE),
     "dedup_simhash_pairs": QuerySpec(
         dedup_simhash_pairs, DEDUP_SIMHASH_PAIRS_ORACLE
     ),
     "dedup_simhash_pairs_grid": QuerySpec(
-        dedup_simhash_pairs_grid, DEDUP_SIMHASH_PAIRS_ORACLE
+        dedup_simhash_pairs, DEDUP_SIMHASH_PAIRS_ORACLE
     ),
     "dedup_ngram_jaccard": QuerySpec(dedup_ngram_jaccard, DEDUP_NGRAM_ORACLE),
     "dedup_embedding_cosine": QuerySpec(dedup_embedding_cosine, DEDUP_COSINE_ORACLE),
@@ -2560,60 +2460,17 @@ QUERIES: dict[str, QuerySpec] = {
 # ---------------------------------------------------------------------------
 
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = with_shingles(_docs(spark, sf_dir)).persist()
-    ex = docs.select("doc_id", F.explode("shingles").alias("s"))
-    inter = (
-        ex.alias("a")
-        .join(
-            ex.alias("b"),
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("i"))
+    # kept: each side feeds both its count aggregate and the hits
+    # semi-join — without the cache the exhaustive inverted-index join
+    # (the expensive part) runs twice
+    true_pairs = keep(
+        _exact_jaccard_truth(spark, sf_dir).select("doc_a", "doc_b")
     )
-    sizes = docs.select("doc_id", F.size("shingles").alias("sz"))
-    # persisted: each side feeds both its count aggregate and the
-    # hits semi-join — without the persist the exhaustive
-    # inverted-index join (the expensive part) runs twice
-    true_pairs = (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("sz", "sz_a")
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "sz", "sz_b"
-            ),
-            "doc_b",
-        )
-        .filter(
-            F.col("i") / (F.col("sz_a") + F.col("sz_b") - F.col("i"))
-            >= JACCARD_THRESHOLD
-        )
-        .select("doc_a", "doc_b")
-        .persist()
-    )
-    # the SAME banding the production dedup/streaming paths use —
-    # band_signature_table is the single definition, so this gate
-    # always measures the blocking scheme that actually runs
-    buckets = band_signature_table(_docs(spark, sf_dir)).select(
-        "doc_id", "band_id", "key"
-    )
-    cand = (
-        buckets.alias("l")
-        .join(
-            buckets.alias("r"),
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .persist()
-    )
+    # the SAME banding and pair build the production dedup/streaming
+    # paths use — band_signature_table and the pairgrid tiler are the
+    # single definitions, so this gate always measures the blocking
+    # scheme that actually runs
+    cand = keep(_lsh_grid_cand(band_signature_table(_docs(spark, sf_dir))))
     hits = true_pairs.join(cand, ["doc_a", "doc_b"], "left_semi")
     return (
         true_pairs.agg(F.count("*").alias("n_true"))
@@ -3048,14 +2905,10 @@ def _substring_candidate_slice(
     return base, base.join(cand_ids, "doc_id", "left_semi")
 
 
-SUBSTR_GRID_BLOCK = 64  # local-fixture sizing; production ~1024
-
-
 def exact_substring_pairs(
     docs: DataFrame,
     min_len: int = SUBSTR_L,
     k: int = SUBSTR_K,
-    block: int | None = SUBSTR_GRID_BLOCK,
     fps: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, n_shared_grams): all unordered doc pairs sharing
@@ -3067,39 +2920,16 @@ def exact_substring_pairs(
     band/shingle key, and the ONE place in this family where a hot
     gram (a license header or nav bar planted in H candidate docs)
     would funnel H²/2 pair rows through a single task. So it routes
-    through the shared pairgrid tiler (``block``-sized cells; each
-    row pair meets in exactly one cell, so the per-gram pair MULTISET
-    is identical to the plain join and per-pair count(*) still equals
-    the distinct shared-gram count — the same oracle certifies both).
-    ``block=None`` selects the plain self-join (the un-tiled twin the
-    skew study compares against)."""
+    through the shared pairgrid tiler: each row pair meets in exactly
+    one cell, so per-pair count(*) over the undeduped cell output is
+    the distinct shared-gram count."""
     _, cd = _substring_candidate_slice(docs, min_len, k, fps=fps)
-    if block is not None:
-        from finmapreduce_spark.operators.pairgrid import grid_self_pairs
-
-        pairs = grid_self_pairs(
-            _l_grams(cd, min_len),
-            ["gram"],
-            "doc_id",
-            [],
-            block=block,
-            dedupe=False,
-        ).select(
-            F.col("doc_id_a").alias("doc_a"),
-            F.col("doc_id_b").alias("doc_b"),
-        )
-    else:
-        # plain twin: kept because both self-join sides read it
-        grams = keep(_l_grams(cd, min_len))
-        ga, gb = grams.alias("ga"), grams.alias("gb")
-        pairs = ga.join(
-            gb,
-            (F.col("ga.gram") == F.col("gb.gram"))
-            & (F.col("ga.doc_id") < F.col("gb.doc_id")),
-        ).select(
-            F.col("ga.doc_id").alias("doc_a"),
-            F.col("gb.doc_id").alias("doc_b"),
-        )
+    pairs = grid_self_pairs(
+        _l_grams(cd, min_len), ["gram"], "doc_id", [], dedupe=False
+    ).select(
+        F.col("doc_id_a").alias("doc_a"),
+        F.col("doc_id_b").alias("doc_b"),
+    )
     return pairs.groupBy("doc_a", "doc_b").agg(
         F.count("*").cast("long").alias("n_shared_grams")
     )
@@ -3287,10 +3117,7 @@ def exact_substring_spans(
     exact_substring_pairs', so it routes through the same pairgrid
     tiler (pos as payload; dedupe off — every positional alignment is
     a distinct row, and each left/right row pair meets in exactly one
-    cell, so the output multiset equals the plain join's and the same
-    oracle certifies it)."""
-    from finmapreduce_spark.operators.pairgrid import grid_self_pairs
-
+    cell, so every alignment is reported once)."""
     _, cd = _substring_candidate_slice(docs, min_len, k)
     ct = F.col("t")
     cn = F.length(ct)
@@ -3311,7 +3138,6 @@ def exact_substring_spans(
         ["gram"],
         "doc_id",
         ["pos"],
-        block=SUBSTR_GRID_BLOCK,
         dedupe=False,
     ).select(
         F.col("doc_id_a").alias("doc_a"),
@@ -3468,7 +3294,7 @@ def _master_lanes(
         ("lsh", lambda: _jaccard_verify(
             _attach_shingle_sets(cand, lsh_b, lsh_b))),
         ("semantic", lambda: _cosine_verify(cand, emb, emb)),
-        ("simhash", lambda: dedup_simhash_pairs_grid(
+        ("simhash", lambda: dedup_simhash_pairs(
             spark, sf_dir, bands=state["simhash_bands"])),
         ("exact", lambda: _exact_pairs(state["hashed"], state["keepers"])),
         ("substring", lambda: exact_substring_pairs(
@@ -3712,8 +3538,8 @@ def _master_cross_edges(
     + gram verify), so probing the delta's signature tables against
     the history's finds exactly the cross pairs the full-corpus lane
     join would — the decomposition the incremental capstone rests on.
-    The probes are the plain band joins of the batch lanes with one
-    table per side; the verifies are the batch lanes' own checks.
+    The band probes go through the rectangular pairgrid tiler
+    (_band_probe); the verifies are the batch lanes' own checks.
 
     ``state``: prebuilt history stores (master_history_state) — the
     production path, where history signatures were persisted by the
@@ -3722,11 +3548,11 @@ def _master_cross_edges(
     The delta's stores always come from master_history_state over
     ``delta``.
 
-    Scale: every probe is the banded/fingerprint equi-join of its
-    batch lane with the DELTA on the build-friendly side — per-ingest
-    cost is |delta| signature work × bucket-hit-rate, never a corpus
-    self-join; the substring probe routes through the rectangular
-    pairgrid tiler exactly like the streaming store twin. (The gram
+    Scale: every probe keys on its batch lane's band/fingerprint —
+    per-ingest cost is |delta| signature work × bucket-hit-rate, never
+    a corpus self-join; the band probes and the substring gram verify
+    route through the rectangular pairgrid tiler exactly like the
+    streaming store twins. (The gram
     VERIFY reads the text of fp-hit docs on both sides — hit-rate
     bounded, and the only part of the probe that touches history
     text.)"""
@@ -3736,8 +3562,8 @@ def _master_cross_edges(
     ld, lh = dstate["lsh_buckets"], state["lsh_buckets"]
     # The semantic band keys are the LSH lane's by shared definition
     # (see master_history_state), so one probe feeds both verifies.
-    cand = _bucket_pairs(ld, lh, ["band_id", "key"])
-    sim_cand = _bucket_pairs(
+    cand = _band_probe(ld, lh, ["band_id", "key"])
+    sim_cand = _band_probe(
         dstate["simhash_bands"], state["simhash_bands"], ["k", "bv"], ("sim",)
     )
     # verbatim substring: the delta winnows itself and probes the
@@ -3943,18 +3769,9 @@ def incremental_substring_pairs(
     # boilerplate gram hot on both sides (H_i incoming × H_h history
     # rows) would otherwise funnel H_i·H_h pair rows through one join
     # key — the cross-join form of the self-join funnel the batch
-    # path guards with grid_self_pairs. Multiset-identical to the
-    # plain join, so the same oracle certifies it.
-    from finmapreduce_spark.operators.pairgrid import grid_cross_pairs
-
-    pairs = grid_cross_pairs(
-        gi,
-        gh,
-        ["gram"],
-        "doc_id",
-        "hist_id",
-        block=SUBSTR_GRID_BLOCK,
-    )
+    # path guards with grid_self_pairs. Each row pair meets in one
+    # cell, so per-pair count(*) is the shared-gram count.
+    pairs = grid_cross_pairs(gi, gh, ["gram"], "doc_id", "hist_id")
     return pairs.groupBy("doc_id", "hist_id").agg(
         F.count("*").cast("long").alias("n_shared_grams")
     )
@@ -4719,8 +4536,6 @@ WMH_THRESHOLD = JACCARD_THRESHOLD  # same bar as the unweighted lane
 def dedup_weighted_minhash_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from finmapreduce_spark.operators.pairgrid import grid_self_pairs
-
     # The shingled projection is PERSISTED before the explode:
     # Catalyst collapses the scan→split→shingle expression into the
     # Generate's child, and the generator path re-evaluates it per
@@ -4797,16 +4612,7 @@ def dedup_weighted_minhash_pairs(
     # the heaviest payload in the family, 4× shingle replication at
     # the df=1 weight). Merge-hinted for the pairgrid reasons: both
     # sides corpus-derived, broadcast never legitimate at scale.
-    ids = grid_self_pairs(
-        buckets.select("doc_id", "band_id", "key"),
-        ["band_id", "key"],
-        "doc_id",
-        [],
-        block=LSH_GRID_BLOCK,
-    ).select(
-        F.col("doc_id_a").alias("doc_a"),
-        F.col("doc_id_b").alias("doc_b"),
-    )
+    ids = _lsh_grid_cand(buckets)
     rtab = buckets.filter(F.col("band_id") == 0).select("doc_id", "rh")
     cand = (
         ids.hint("merge")
@@ -4914,7 +4720,7 @@ QUERIES.update(
 def split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finmapreduce_spark.queries.textops import _hash_bucket_expr
 
-    pairs = dedup_lsh_pairs_grid(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = dedup_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     labels = connected_components(pairs)
     lab = (
         _docs(spark, sf_dir)

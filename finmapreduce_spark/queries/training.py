@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from finmapreduce_spark.operators.checkpoints import (
     iter_checkpoint,
+    keep,
     release_iter_checkpoint,
 )
 from finmapreduce_spark.operators.distrank import banded_rank, hex_band
@@ -3980,7 +3981,7 @@ def curation_pipeline_frames(spark: SparkSession, sf_dir: str) -> dict:
 
     docs = _docs(spark, sf_dir)
     staged = cleaning_stage(docs)
-    clean_kept = staged.filter(F.col("keep")).persist()
+    clean_kept = keep(staged.filter(F.col("keep")))
     clean_unique = (
         clean_kept.groupBy("fp")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -3998,9 +3999,10 @@ def curation_pipeline_frames(spark: SparkSession, sf_dir: str) -> dict:
     # ONE persisted _qsk_base feeds the lens projection AND both plan
     # branches inside the cutoff (threshold agg + sample join) —
     # unpersisted, those were 3 corpus scans of the same projection
-    # (round-14 advice). Lifecycle caller-owned per the clearCache
-    # contract, same as the other persists in this frame bundle.
-    qbase = _qsk_base(docs).persist()
+    # (round-14 advice). Kept, like the other frames of this bundle:
+    # owned by the caller's scratch block (curate.run opens one), or
+    # the caller's clearCache with none open.
+    qbase = keep(_qsk_base(docs))
     lens = qbase.select("doc_id", "val")
     cutoff = qsk_length_cutoff(spark, base=qbase)
     trimmed = (
@@ -4010,9 +4012,9 @@ def curation_pipeline_frames(spark: SparkSession, sf_dir: str) -> dict:
         .select("doc_id")
     )
     keeplist = dedup_master_keep_list(spark, sf_dir).select("doc_id")
-    survivors = trimmed.join(keeplist, "doc_id").persist()
+    survivors = keep(trimmed.join(keeplist, "doc_id"))
 
-    db = _dsir_doc_buckets(spark, sf_dir).persist()
+    db = keep(_dsir_doc_buckets(spark, sf_dir))
     is_t = F.col("lang") == DSIR_TARGET_LANG
     tb = db.filter(is_t).groupBy("b").agg(F.sum("c").alias("t"))
     rb = db.filter(~is_t).groupBy("b").agg(F.sum("c").alias("r"))
@@ -4028,9 +4030,9 @@ def curation_pipeline_frames(spark: SparkSession, sf_dir: str) -> dict:
         .select("doc_id")
     )
     surv_t = pool.filter(is_t).select("doc_id").distinct()
-    selected = surv_t.unionByName(sel_nt).persist()
+    selected = keep(surv_t.unionByName(sel_nt))
 
-    sel_docs = docs.join(selected, "doc_id").persist()
+    sel_docs = keep(docs.join(selected, "doc_id"))
     cur = train_curriculum_order(spark, sf_dir, docs=sel_docs)
     toks = sel_docs.select(
         "doc_id",

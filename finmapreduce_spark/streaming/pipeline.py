@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from finmapreduce_spark.operators.checkpoints import keep, scratch
+from finmapreduce_spark.operators.pairgrid import grid_cross_pairs
 from finmapreduce_spark.sources.sinks import (
     CMS_REPLAY_KEY,
     DOREMI_REPLAY_KEY,
@@ -1313,7 +1314,7 @@ def serve_incremental_phash_continuous(
     probed against the STORE only; intra-batch duplicates both admit
     (self-dedup the delta with dedup_image_phash_pairs first).
 
-    Scale: per-epoch cost is |delta| decodes + a band equi-join
+    Scale: per-epoch cost is |delta| decodes + a tiled band probe
     against the store; the store grows by 4 rows per admitted image
     and compacts like the signature stores."""
     from finmapreduce_spark.operators.multimodal import (
@@ -1343,8 +1344,19 @@ def serve_incremental_phash_continuous(
                 ],
             )
         )
+        # the band probe through the rectangular pairgrid tiler: a
+        # band value hot in the batch and the store cannot funnel its
+        # pair product through one task
         matches = (
-            bands.join(hist, ["k", "bv"])
+            grid_cross_pairs(
+                bands,
+                hist,
+                ["k", "bv"],
+                "asset_id",
+                "hist_asset",
+                left_payload=[f"b{k}" for k in range(DHASH_BANDS)],
+                right_payload=[f"hist_b{k}" for k in range(DHASH_BANDS)],
+            )
             .withColumn("hamming", phash_hamming("b{}", "hist_b{}"))
             .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
             .groupBy("asset_id")

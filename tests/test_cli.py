@@ -515,6 +515,34 @@ def test_curate_cli(spark, tmp_path, capsys):
     spark.catalog.clearCache()
 
 
+def test_curate_run_releases_every_persist(spark, sf_dir, tmp_path, monkeypatch):
+    """curate.run owns what it persists: once it returns, no frame it
+    persisted (in any thread) is still cached, with no clearCache by
+    the caller (the keep-list's CC checkpoints are not frames)."""
+    from pyspark import StorageLevel
+
+    from finmapreduce_spark.curate import run
+
+    spark.catalog.clearCache()
+    frame_cls = type(spark.range(1))
+    real_persist = frame_cls.persist
+    persisted = []
+
+    def persist(self, *a, **kw):
+        persisted.append(self)
+        return real_persist(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "persist", persist)
+    summary = run(spark, sf_dir, str(tmp_path / "curated"))
+    monkeypatch.undo()
+    assert summary["funnel"]["n_selected"] > 0
+    # the six pipeline frames + the keep-list's state and lanes
+    assert len(persisted) >= 14, persisted
+    cached = [df for df in persisted if df.storageLevel != StorageLevel.NONE]
+    assert cached == [], f"{len(cached)} of {len(persisted)} frames still cached"
+    spark.catalog.clearCache()
+
+
 def test_ingest_cli_drives_continuous_dedup(spark, tmp_path, capsys):
     """The ingest CLI processes a two-file backlog through the live
     dedup store with availableNow semantics: two epochs emitted, the

@@ -157,7 +157,7 @@ def test_cc_star_handles_diameter_past_minlabel_budget(spark):
         connected_components(e, "minlabel").collect()
 
 
-def test_cluster_canonical_star_flag_matches_default(spark, sf_dir, monkeypatch):
+def test_cluster_canonical_star_flag_matches_default(spark, sf_dir):
     from finmapreduce_spark.queries.dedup import dedup_cluster_canonical
 
     base = {
@@ -169,12 +169,6 @@ def test_cluster_canonical_star_flag_matches_default(spark, sf_dir, monkeypatch)
         for r in dedup_cluster_canonical(spark, sf_dir, "minlabel").collect()
     }
     assert via_arg == base
-    monkeypatch.setenv("FMR_CC_ALGORITHM", "minlabel")
-    via_env = {
-        tuple(r)
-        for r in dedup_cluster_canonical(spark, sf_dir).collect()
-    }
-    assert via_env == base
     with pytest.raises(ValueError, match="unknown CC algorithm"):
         dedup_cluster_canonical(spark, sf_dir, "nope")
 
@@ -183,26 +177,37 @@ def test_cluster_canonical_star_flag_matches_default(spark, sf_dir, monkeypatch)
 # Grid-decomposed LSH pair join (hot band buckets)
 # ---------------------------------------------------------------------------
 
-def test_lsh_grid_equals_plain_on_hot_corpus(spark, sf_dir, tmp_path):
-    """dedup_lsh_pairs_grid must produce EXACTLY the plain band-join's
-    pairs, including on a distribution-poisoned corpus whose hot
-    bucket spans many grid blocks (500003 clones > LSH_GRID_BLOCK)."""
+def _duck_over(corpus_dir):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{corpus_dir}/documents.parquet'"
+    )
+    return con
+
+
+def test_lsh_pairs_match_oracle_on_hot_corpus(spark, sf_dir, tmp_path):
+    """The tiled LSH pair lane must equal the DuckDB oracle's pairs on
+    a distribution-poisoned corpus whose hot bucket spans many grid
+    blocks (every clone shares both band buckets, and the clone pairs
+    outnumber the block size)."""
     from tools.adversarial_corpus import build_hot_bucket_corpus
 
+    from finmapreduce_spark.operators.pairgrid import DEFAULT_BLOCK
     from finmapreduce_spark.queries.dedup import (
-        LSH_GRID_BLOCK,
+        DEDUP_LSH_ORACLE,
         dedup_lsh_pairs,
-        dedup_lsh_pairs_grid,
     )
+    from tests.oracle_utils import assert_matches_oracle
 
     hot_dir = build_hot_bucket_corpus(sf_dir, str(tmp_path / "hot"), frac=0.2)
-    plain = sorted(map(tuple, dedup_lsh_pairs(spark, hot_dir).collect()))
-    grid = sorted(map(tuple, dedup_lsh_pairs_grid(spark, hot_dir).collect()))
-    assert grid == plain
-    assert len(plain) > 0
+    pairs = dedup_lsh_pairs(spark, hot_dir)
+    assert_matches_oracle(pairs, _duck_over(hot_dir), DEDUP_LSH_ORACLE)
     # the fixture really exercises multi-block tiling
-    n_hot = sum(1 for a, b, _j in plain if a >= 500000 and b >= 500000)
-    assert n_hot > LSH_GRID_BLOCK  # hot cluster pairs span blocks
+    n_hot = pairs.filter((pairs.doc_a >= 500000) & (pairs.doc_b >= 500000)).count()
+    spark.catalog.clearCache()
+    assert n_hot > DEFAULT_BLOCK  # hot cluster pairs span blocks
 
 
 def test_grid_self_pairs_block_boundaries(spark):
@@ -255,35 +260,32 @@ def test_grid_self_pairs_block_boundaries(spark):
 # Grid-tiled exact-substring verify join (hot 40-grams)
 # ---------------------------------------------------------------------------
 
-def test_substring_grid_equals_plain_on_hot_gram_corpus(spark, sf_dir, tmp_path):
-    """The pairgrid-routed exact-substring verify (the default) must
-    produce EXACTLY the un-tiled gram self-join's (doc_a, doc_b,
-    n_shared_grams) rows — including on a corpus where one planted
-    boilerplate sentence puts 20% of docs behind shared gram keys
-    spanning many grid blocks (the license-header pathology the tiler
-    exists for)."""
+def test_substring_pairs_match_oracle_on_hot_gram_corpus(
+    spark, sf_dir, tmp_path
+):
+    """The pairgrid-routed exact-substring verify must equal the DuckDB
+    oracle's (doc_a, doc_b, n_shared_grams) rows on a corpus where one
+    planted boilerplate sentence puts 20% of docs behind a shared gram
+    key spanning many grid blocks (the license-header pathology the
+    tiler exists for)."""
     from tools.adversarial_corpus import build_hot_gram_corpus
 
+    from finmapreduce_spark.operators.pairgrid import DEFAULT_BLOCK
     from finmapreduce_spark.queries.dedup import (
-        SUBSTR_GRID_BLOCK,
+        EXACT_SUBSTRING_ORACLE,
         _docs,
         exact_substring_pairs,
     )
+    from tests.oracle_utils import assert_matches_oracle
 
     hot_dir = build_hot_gram_corpus(sf_dir, str(tmp_path / "hotgram"), frac=0.2)
-    docs = _docs(spark, hot_dir)
-    grid = sorted(map(tuple, exact_substring_pairs(docs).collect()))
-    spark.catalog.clearCache()
-    plain = sorted(
-        map(tuple, exact_substring_pairs(docs, block=None).collect())
-    )
-    spark.catalog.clearCache()
-    assert grid == plain
-    assert len(plain) > 0
+    pairs = exact_substring_pairs(_docs(spark, hot_dir))
+    assert_matches_oracle(pairs, _duck_over(hot_dir), EXACT_SUBSTRING_ORACLE)
     # the planted cluster really exercises multi-block tiling: H docs
-    # share every boilerplate gram, H > block
-    n_hot = sum(1 for a, b, _n in plain if a >= 600000 and b >= 600000)
-    assert n_hot > SUBSTR_GRID_BLOCK
+    # share the boilerplate gram, H > block
+    n_hot = pairs.filter((pairs.doc_a >= 600000) & (pairs.doc_b >= 600000)).count()
+    spark.catalog.clearCache()
+    assert n_hot > DEFAULT_BLOCK
 
 
 def test_substring_batch_scratch_releases_persists(spark, sf_dir):
@@ -369,17 +371,54 @@ def test_grid_cross_pairs_multiset_equals_plain_join(spark):
     assert len(want) > B * B  # multiple cells really exercised
 
 
-def test_incremental_verdicts_tiled_equals_plain_on_hot_corpus(
+def _equi_join_verdicts(incoming, history, score, gate):
+    """Reference verdicts: the plain band equi-join of the delta with
+    the store, deduped per doc pair, scored with ``score`` over the
+    ``_i``/``_h`` payloads, max per delta doc at ``gate``."""
+    from pyspark.sql import functions as F
+
+    i, h = incoming.alias("i"), history.alias("h")
+    cand = (
+        i.join(
+            h,
+            (F.col("i.band_id") == F.col("h.band_id"))
+            & (F.col("i.key") == F.col("h.key")),
+        )
+        .select(
+            F.col("i.doc_id").alias("doc_id"),
+            F.col("h.doc_id").alias("hist_id"),
+            *[
+                F.col(f"{s}.{c}").alias(f"{c}_{s}")
+                for s in "ih"
+                for c in incoming.columns
+                if c not in ("doc_id", "band_id", "key")
+            ],
+        )
+        .dropDuplicates(["doc_id", "hist_id"])
+    )
+    return sorted(
+        tuple(r)
+        for r in cand.withColumn("score", F.round(score, 6))
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n"), F.max("score").alias("best"))
+        .filter(F.col("best") >= gate)
+        .collect()
+    )
+
+
+def test_incremental_verdicts_match_equi_join_on_hot_corpus(
     spark, sf_dir, tmp_path
 ):
-    """The opt-in tiled band-store probe must produce EXACTLY the
-    plain probe's verdicts on the identical-clone hot corpus, where
-    the template bucket is hot on BOTH the incoming split and the
-    history store and the clone count spans many grid blocks."""
+    """The tiled band-store probe must produce EXACTLY the plain band
+    equi-join's verdicts on the identical-clone hot corpus, where the
+    template bucket is hot on BOTH the incoming split and the history
+    store and the clone count spans many grid blocks."""
     from tools.adversarial_corpus import build_hot_bucket_corpus
 
+    from finmapreduce_spark.operators.pairgrid import DEFAULT_BLOCK
     from finmapreduce_spark.queries.dedup import (
         INGEST_MOD,
+        JACCARD_THRESHOLD,
         _docs,
         band_signature_table,
         incremental_verdicts,
@@ -390,21 +429,66 @@ def test_incremental_verdicts_tiled_equals_plain_on_hot_corpus(
     buckets = band_signature_table(_docs(spark, hot_dir)).persist()
     incoming = buckets.filter(F.pmod("doc_id", F.lit(INGEST_MOD)) == 0)
     history = buckets.filter(F.pmod("doc_id", F.lit(INGEST_MOD)) != 0)
-    plain = sorted(
-        map(tuple, incremental_verdicts(incoming, history).collect())
+    got = sorted(
+        (r["doc_id"], r["n_candidates"], r["max_jaccard"])
+        for r in incremental_verdicts(incoming, history).collect()
     )
-    tiled = sorted(
-        map(
-            tuple,
-            incremental_verdicts(incoming, history, tiled=True).collect(),
-        )
+    inter = F.size(F.array_intersect("sh_i", "sh_h"))
+    want = _equi_join_verdicts(
+        incoming,
+        history,
+        inter / (F.size("sh_i") + F.size("sh_h") - inter),
+        JACCARD_THRESHOLD,
     )
     spark.catalog.clearCache()
-    assert tiled == plain
+    assert got == want
     # the clone family really exercises the two-sided hot bucket:
-    # every incoming clone rejects against the history clones
-    hot_rejects = [r for r in plain if r[0] >= 500000]
-    assert len(hot_rejects) > 0
+    # every incoming clone rejects against more history clones than
+    # one block holds
+    hot = [r for r in want if r[0] >= 500000]
+    assert hot and min(n for _d, n, _j in hot) > DEFAULT_BLOCK
+
+
+def test_incremental_semantic_verdicts_match_equi_join_on_hot_corpus(
+    spark, sf_dir, tmp_path
+):
+    """The semantic store probe shares the tiled band probe: its
+    verdicts must equal the plain band equi-join's on the same
+    two-sided hot corpus."""
+    from tools.adversarial_corpus import build_hot_bucket_corpus
+
+    from finmapreduce_spark.operators.pairgrid import DEFAULT_BLOCK
+    from finmapreduce_spark.queries.dedup import (
+        INGEST_MOD,
+        SEMANTIC_INGEST_MIN,
+        _docs,
+        _dot,
+        incremental_semantic_verdicts,
+        semantic_signature_table,
+    )
+    from pyspark.sql import functions as F
+
+    hot_dir = build_hot_bucket_corpus(sf_dir, str(tmp_path / "hots"), frac=0.4)
+    sig = semantic_signature_table(_docs(spark, hot_dir)).persist()
+    incoming = sig.filter(F.pmod("doc_id", F.lit(INGEST_MOD)) == 0)
+    history = sig.filter(F.pmod("doc_id", F.lit(INGEST_MOD)) != 0)
+    got = sorted(
+        (r["doc_id"], r["n_candidates"], r["max_cosine"])
+        for r in incremental_semantic_verdicts(incoming, history).collect()
+    )
+    nm = F.col("nm_i") * F.col("nm_h")
+    want = _equi_join_verdicts(
+        incoming,
+        history,
+        F.when(nm > 0, _dot(F.col("e_i"), F.col("e_h")) / nm).otherwise(
+            F.lit(0.0)
+        ),
+        SEMANTIC_INGEST_MIN,
+    )
+    spark.catalog.clearCache()
+    assert got == want
+    hot = [r for r in want if r[0] >= 500000]
+    assert hot and min(n for _d, n, _c in hot) > DEFAULT_BLOCK
 
 
 def test_grid_cross_pairs_rejects_colliding_output_names(spark):

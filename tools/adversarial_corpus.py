@@ -158,9 +158,9 @@ def build_hot_bucket_corpus(sf_dir: str, out: str, frac: float = 0.10) -> str:
     lands in the SAME band bucket (both bands), so the LSH band
     self-join must push H²/2 candidate pairs through one join key —
     the "boilerplate page duplicated site-wide" pathology. Used by the
-    skew study (SCALE.md): ``dedup_lsh_pairs`` funnels the bucket
-    through one task; ``dedup_lsh_pairs_grid`` tiles it over
-    ceil(H/B)² cells.
+    skew study (SCALE.md): a plain band self-join funnels the bucket
+    through one task; the pairgrid tiler behind ``dedup_lsh_pairs``
+    spreads it over ceil(H/B)² cells.
 
         python tools/adversarial_corpus.py /tmp/fmr_hot BASE --hot
     """
@@ -211,7 +211,7 @@ def build_hot_gram_corpus(sf_dir: str, out: str, frac: float = 0.20) -> str:
     self-join must push H²/2 pair rows through single gram keys while
     the pairgrid-tiled verify spreads them over ceil(H/B)² cells.
     Used by the round-11 skew study (SCALE.md) and
-    tests/test_skew.py::test_substring_grid_equals_plain_on_hot_gram_corpus.
+    tests/test_skew.py::test_substring_pairs_match_oracle_on_hot_gram_corpus.
 
         python tools/adversarial_corpus.py /tmp/fmr_hotgram BASE --hot-gram
     """

@@ -85,114 +85,14 @@ def build_scratch(spark, base: str, out: str, copies: int) -> None:
     )
 
 
-def band_probe_study(base: str, frac: float, scratch: str) -> None:
-    """Two-sided hot-bucket study for the band-signature store probe
-    (round-11 ask): on the identical-clone corpus the template bucket
-    is hot on BOTH the incoming split and the history store, so the
-    plain probe funnels |inc_clones|×|hist_clones| pair rows per band
-    through one join key / one task, while ``tiled=True`` spreads the
-    same multiset over the pairgrid's ceil(H/B)² cells. Prints one
-    JSON line per arm with wall time and per-stage max/median task
-    durations (Spark REST status API, same source as skew_report) —
-    the numbers that decide whether the tiled probe should become the
-    default on a given workload.
-    """
-    from pyspark.sql import functions as F
-
-    from finmapreduce_spark.queries.dedup import (
-        INGEST_MOD,
-        _docs,
-        band_signature_table,
-        incremental_verdicts,
-    )
-    from finmapreduce_spark.session import get_spark
-    from tools.adversarial_corpus import build_hot_bucket_corpus
-    from tools.skew_report import stage_ids, stage_report
-
-    hot_dir = build_hot_bucket_corpus(base, scratch, frac=frac)
-    # Diagnostic session: UI on for per-task metrics; coalescing off so
-    # local runs show the raw per-key distribution (skew_report posture).
-    spark = get_spark(
-        "band-probe-study",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.sql.adaptive.coalescePartitions.enabled": "false",
-        },
-    )
-    api = f"{spark.sparkContext.uiWebUrl}/api/v1"
-    app_id = spark.sparkContext.applicationId
-
-    buckets = band_signature_table(_docs(spark, hot_dir)).persist()
-    buckets.count()  # materialize once so every arm probes the same store
-    incoming = buckets.filter(F.pmod("doc_id", F.lit(INGEST_MOD)) == 0)
-    history = buckets.filter(F.pmod("doc_id", F.lit(INGEST_MOD)) != 0)
-
-    # Arms: (name, tiled, broadcast threshold, AQE skewJoin). The band
-    # table at test scale sits under the 64 MB broadcast threshold, so
-    # the DEFAULT plain probe is a broadcast join with no funnel at
-    # all; "plain_smj_raw" forces the sort-merge shape a 100 TB store
-    # takes (history ≫ broadcastable) with skew mitigation OFF — the
-    # naive cluster distribution; "plain_smj_aqe" is the same shape
-    # with AQE skew-split ON (what a tuned cluster actually runs).
-    arms = (
-        ("plain_broadcast", False, str(64 * 1024 * 1024), "true"),
-        ("plain_smj_raw", False, "-1", "false"),
-        ("plain_smj_aqe", False, "-1", "true"),
-        ("tiled", True, str(64 * 1024 * 1024), "true"),
-    )
-    for arm, tiled, bcast, skew in arms:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skew)
-        seen = stage_ids(api, app_id)
-        t0 = time.time()
-        n = incremental_verdicts(incoming, history, tiled=tiled).count()
-        wall = round(time.time() - t0, 2)
-        stages = stage_report(api, app_id, top=3, skip=seen)
-        print(
-            json.dumps(
-                {
-                    "arm": arm,
-                    "frac": frac,
-                    "wall_s": wall,
-                    "verdict_rows": n,
-                    "max_task_ms": max(
-                        (s["dur_ms"][2] for s in stages), default=None
-                    ),
-                    "stages": stages,
-                }
-            )
-        )
-    spark.conf.set(
-        "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-    )
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    buckets.unpersist()
-
-
 def main():
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("queries", nargs="*")
+    ap.add_argument("queries", nargs="+")
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--copies", type=int, default=10)
     ap.add_argument("--scratch", default="/tmp/fmr_scale_scratch")
     ap.add_argument("--rebuild", action="store_true")
-    ap.add_argument(
-        "--band-probe",
-        action="store_true",
-        help="run the two-sided hot-bucket band-store probe study "
-        "(plain vs tiled incremental_verdicts) instead of the 1x/Nx "
-        "replication study",
-    )
-    ap.add_argument("--hot-frac", type=float, default=0.1)
     args = ap.parse_args()
-
-    if args.band_probe:
-        band_probe_study(
-            args.base, args.hot_frac, args.scratch.rstrip("/") + "_hotband"
-        )
-        return
-    if not args.queries:
-        ap.error("queries required unless --band-probe")
 
     from finmapreduce_spark.queries import all_queries
     from finmapreduce_spark.session import get_spark
