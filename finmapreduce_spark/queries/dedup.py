@@ -1344,47 +1344,6 @@ def ml_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 ML_LSH_RECALL_FLOOR = 0.5  # 4 OR'd hash tables; guards a banding collapse
 
 
-def _exact_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_a, doc_b, jaccard): every unordered doc pair whose exact
-    shingle-set Jaccard is >= JACCARD_THRESHOLD — the exhaustive
-    reference the MinHash recall gates (dedup_ml_minhash_lsh,
-    dedup_lsh_recall) measure against. An inverted-index self-join on
-    the shingle (exact: any pair with J > 0 shares a shingle), a count
-    of shared shingles per pair, and the two set sizes. It stays a
-    plain join: it is the truth the tiled banding is measured
-    against, and an offline gate (at 100 TB it runs on a sampled
-    slice, the argument ann_recall_at_k makes)."""
-    # kept: feeds the inverted-index self-join AND the size map
-    docs = keep(with_shingles(_docs(spark, sf_dir)))
-    ex = docs.select("doc_id", F.explode("shingles").alias("s"))
-    inter = (
-        ex.alias("a")
-        .join(
-            ex.alias("b"),
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("i"))
-    )
-    sizes = docs.select("doc_id", F.size("shingles").alias("sz"))
-    jac = F.col("i") / (F.col("sz_a") + F.col("sz_b") - F.col("i"))
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("sz", "sz_a")
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "sz", "sz_b"
-            ),
-            "doc_b",
-        )
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
-
-
 def dedup_ml_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-certification of the spark.ml MinHashLSH path against the
     exhaustive exact-Jaccard ground truth (VERDICT r10 #2 — this used
@@ -1436,6 +1395,47 @@ def dedup_ml_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(n_true > 0, n_hits / n_true >= ML_LSH_RECALL_FLOOR)
         .otherwise(F.lit(True))
         .alias("recall_floor_met"),
+    )
+
+
+def _exact_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, jaccard): every unordered doc pair whose exact
+    shingle-set Jaccard is >= JACCARD_THRESHOLD — the exhaustive
+    reference the MinHash recall gates (dedup_ml_minhash_lsh,
+    dedup_lsh_recall) measure against. An inverted-index self-join on
+    the shingle (exact: any pair with J > 0 shares a shingle), a count
+    of shared shingles per pair, and the two set sizes. It stays a
+    plain join: it is the truth the tiled banding is measured
+    against, and an offline gate (at 100 TB it runs on a sampled
+    slice, the argument ann_recall_at_k makes)."""
+    # kept: feeds the inverted-index self-join AND the size map
+    docs = keep(with_shingles(_docs(spark, sf_dir)))
+    ex = docs.select("doc_id", F.explode("shingles").alias("s"))
+    inter = (
+        ex.alias("a")
+        .join(
+            ex.alias("b"),
+            (F.col("a.s") == F.col("b.s"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .agg(F.count("*").alias("i"))
+    )
+    sizes = docs.select("doc_id", F.size("shingles").alias("sz"))
+    jac = F.col("i") / (F.col("sz_a") + F.col("sz_b") - F.col("i"))
+    return (
+        inter.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
+        .withColumnRenamed("sz", "sz_a")
+        .join(
+            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
+                "sz", "sz_b"
+            ),
+            "doc_b",
+        )
+        .filter(jac >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
 
 

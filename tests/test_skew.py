@@ -204,10 +204,11 @@ def test_lsh_pairs_match_oracle_on_hot_corpus(spark, sf_dir, tmp_path):
     hot_dir = build_hot_bucket_corpus(sf_dir, str(tmp_path / "hot"), frac=0.2)
     pairs = dedup_lsh_pairs(spark, hot_dir)
     assert_matches_oracle(pairs, _duck_over(hot_dir), DEDUP_LSH_ORACLE)
-    # the fixture really exercises multi-block tiling
+    # the fixture really exercises multi-block tiling: more clone
+    # pairs than one block's triangle holds, so more clones than B
     n_hot = pairs.filter((pairs.doc_a >= 500000) & (pairs.doc_b >= 500000)).count()
     spark.catalog.clearCache()
-    assert n_hot > DEFAULT_BLOCK  # hot cluster pairs span blocks
+    assert n_hot > DEFAULT_BLOCK * (DEFAULT_BLOCK - 1) // 2
 
 
 def test_grid_self_pairs_block_boundaries(spark):
@@ -282,10 +283,10 @@ def test_substring_pairs_match_oracle_on_hot_gram_corpus(
     pairs = exact_substring_pairs(_docs(spark, hot_dir))
     assert_matches_oracle(pairs, _duck_over(hot_dir), EXACT_SUBSTRING_ORACLE)
     # the planted cluster really exercises multi-block tiling: H docs
-    # share the boilerplate gram, H > block
+    # share the boilerplate gram, H(H-1)/2 pairs with H > block
     n_hot = pairs.filter((pairs.doc_a >= 600000) & (pairs.doc_b >= 600000)).count()
     spark.catalog.clearCache()
-    assert n_hot > DEFAULT_BLOCK
+    assert n_hot > DEFAULT_BLOCK * (DEFAULT_BLOCK - 1) // 2
 
 
 def test_substring_batch_scratch_releases_persists(spark, sf_dir):
