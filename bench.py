@@ -26,6 +26,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from finmapreduce_spark.operators.checkpoints import (  # noqa: E402
+    release_all_persistent_rdds,
+)
 from finmapreduce_spark.queries import all_queries  # noqa: E402
 from finmapreduce_spark.session import get_spark  # noqa: E402
 
@@ -227,31 +230,6 @@ ITERATIVE_LANES = {
 }
 
 
-def _release_persistent_rdds(spark):
-    """BLOCKING release of every persistent RDD — including
-    localCheckpoint blocks, which spark.catalog.clearCache() does NOT
-    touch (it only unpersists the cache manager's DataFrames).
-
-    Dropping the Python refs + gc.collect() (the round-14 approach)
-    frees the py4j handles, but the JVM-side removal then depends on
-    an eventual JVM GC plus the ContextCleaner's fire-and-forget
-    block-removal messages — under back-to-back trials nothing forces
-    either, so trial N+1 runs under trial N's accumulated disk/memory
-    pressure (the r14 close record's monotone 10→15→25 s CC lane).
-    Enumerating the context's persistent RDDs and unpersisting each
-    with blocking=True makes the release synchronous: when this
-    returns, the blocks are gone. Safe here because bench has already
-    dropped every DataFrame handle from the finished trial — nothing
-    can re-read a truncated-lineage RDD.
-    """
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in jmap.values():
-            jrdd.unpersist(True)
-    except Exception as e:  # diagnostics must never fail the bench
-        print(f"bench: persistent-RDD release skipped: {e}", file=sys.stderr)
-
-
 def _git_sha(root):
     """Current commit hash (best effort, no subprocess — bench must
     not fork under a loaded box): read .git/HEAD and its ref file."""
@@ -376,7 +354,7 @@ def main():
             # across trials in the committed close record.
             df = None
             gc.collect()
-            _release_persistent_rdds(spark)
+            release_all_persistent_rdds(spark)
             if t == 0 and probe is not None:
                 # shuffle volume is plan-determined — one measurement
                 after1 = probe()

@@ -274,45 +274,52 @@ def _lsh_band_buckets(
     )
 
 
-def _attach_shingle_sets(
-    cand: DataFrame, buckets_a: DataFrame, buckets_b: DataFrame
+def _attach_payloads(
+    cand: DataFrame,
+    store_a: DataFrame,
+    store_b: DataFrame,
+    band: str,
+    cols: list[str],
 ) -> DataFrame:
-    """``cand`` (doc_a, doc_b) + ``sh_a``/``sh_b`` hashed-shingle
-    arrays from each side's persisted bucket table, band-0 slice (one
-    row per doc — guide §2.3/§8 "decide with small rows, attach the
-    heavy payload once": the candidate join and the grid tiler move
-    bare 8-byte ids; the shingle arrays cross the wire exactly once
-    here, instead of riding the in-bucket index window, both
-    replicated explode sides and the candidate dedup). A self-join
-    passes the same table twice; the incremental capstone's cross
-    probe passes the delta's and the history's. Joins are pinned
-    sort-merge for the pairgrid reasons: both sides are corpus-derived
-    (candidates via explode, the shingle table corpus-sized), so a
-    broadcast is never legitimate at scale and a shuffled-hash build
-    is an unspillable per-partition map."""
+    """``cand`` (doc_a, doc_b) + each ``cols`` payload suffixed
+    ``_a``/``_b``, read from each side's banded signature store at its
+    ``band`` == 0 slice (one row per doc — guide §2.3/§8 "decide with
+    small rows, attach the heavy payload once": the pair builders
+    move bare 8-byte ids; shingle arrays, embeddings and SimHash
+    values cross the wire exactly once here, instead of riding the
+    in-bucket index window, both replicated explode sides and the
+    candidate dedup). A self-join passes the same store twice; a
+    delta × store probe passes the delta's and the store's. Joins are
+    pinned sort-merge for the pairgrid reasons: both sides are
+    corpus-derived (candidates via explode, the store corpus-sized),
+    so a broadcast is never legitimate at scale and a shuffled-hash
+    build is an unspillable per-partition map."""
 
-    def side(buckets, suffix):
-        return buckets.filter(F.col("band_id") == 0).select(
+    def side(store, suffix):
+        return store.filter(F.col(band) == 0).select(
             F.col("doc_id").alias(f"doc_{suffix}"),
-            F.col("shingles").alias(f"sh_{suffix}"),
+            *[F.col(c).alias(f"{c}_{suffix}") for c in cols],
         )
 
     return (
         cand.hint("merge")
-        .join(side(buckets_a, "a"), "doc_a")
+        .join(side(store_a, "a"), "doc_a")
         .hint("merge")
-        .join(side(buckets_b, "b"), "doc_b")
+        .join(side(store_b, "b"), "doc_b")
     )
 
 
 def _jaccard_verify(pairs: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, jaccard) for the pairs passing the threshold —
-    |A∪B| = |A|+|B|−|A∩B| for distinct arrays: one hash-set pass per
-    pair instead of two (array_union was ~half the verify cost)."""
+    """(doc_a, doc_b, jaccard) for the (doc_a, doc_b, shingles_a,
+    shingles_b) pairs passing the threshold — |A∪B| = |A|+|B|−|A∩B|
+    for distinct arrays: one hash-set pass per pair instead of two
+    (array_union was ~half the verify cost)."""
     with_inter = pairs.withColumn(
-        "inter", F.size(F.array_intersect("sh_a", "sh_b"))
+        "inter", F.size(F.array_intersect("shingles_a", "shingles_b"))
     )
-    jac = F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter"))
+    jac = F.col("inter") / (
+        F.size("shingles_a") + F.size("shingles_b") - F.col("inter")
+    )
     return (
         with_inter.withColumn("jaccard", F.round(jac, 6))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
@@ -340,31 +347,21 @@ def _lsh_grid_cand(buckets: DataFrame) -> DataFrame:
     )
 
 
-def _band_probe(
-    delta: DataFrame, store: DataFrame, keys: list[str], payload: tuple = ()
-) -> DataFrame:
-    """(doc_a, doc_b, {payload}_a, {payload}_b): one row per (delta
-    doc, store doc) pair sharing all ``keys`` in some bucket (deduped
-    across buckets) — the delta × store band probe of the incremental
-    lanes, through the rectangular pairgrid tiler, so a bucket hot on
-    both sides (a boilerplate template arriving in a boilerplate-heavy
-    corpus) cannot funnel its pair product through one task."""
+def _band_probe(delta: DataFrame, store: DataFrame, keys: list[str]) -> DataFrame:
+    """(doc_a, doc_b): one row per (delta doc, store doc) pair sharing
+    all ``keys`` in some bucket (deduped across buckets) — the delta ×
+    store band probe of the incremental lanes, through the rectangular
+    pairgrid tiler, so a bucket hot on both sides (a boilerplate
+    template arriving in a boilerplate-heavy corpus) cannot funnel its
+    pair product through one task. Ids only, like the self-join
+    lanes: callers attach each side's payload to the deduped pairs
+    (_attach_payloads)."""
 
     def side(df: DataFrame, s: str) -> DataFrame:
-        return df.select(
-            *keys,
-            F.col("doc_id").alias(f"doc_{s}"),
-            *[F.col(c).alias(f"{c}_{s}") for c in payload],
-        )
+        return df.select(*keys, F.col("doc_id").alias(f"doc_{s}"))
 
     return grid_cross_pairs(
-        side(delta, "a"),
-        side(store, "b"),
-        keys,
-        "doc_a",
-        "doc_b",
-        left_payload=[f"{c}_a" for c in payload],
-        right_payload=[f"{c}_b" for c in payload],
+        side(delta, "a"), side(store, "b"), keys, "doc_a", "doc_b"
     ).dropDuplicates(["doc_a", "doc_b"])
 
 
@@ -373,12 +370,14 @@ def dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the bucket and its pairgrid cell — at 100 TB this is the only
     join that runs, never the n² cross), verified with exact Jaccard
     over distinct shingles. The bucket join moves ids only; shingle
-    arrays attach once at the verify (_attach_shingle_sets). Registered
+    arrays attach once at the verify (_attach_payloads). Registered
     as dedup_lsh_pairs and dedup_lsh_pairs_grid.
     """
     buckets = _lsh_band_buckets(spark, sf_dir)
     return _jaccard_verify(
-        _attach_shingle_sets(_lsh_grid_cand(buckets), buckets, buckets)
+        _attach_payloads(
+            _lsh_grid_cand(buckets), buckets, buckets, "band_id", ["shingles"]
+        )
     )
 
 
@@ -961,78 +960,20 @@ WHERE round(list_inner_product(a.v, b.v) / (a.norm * b.norm), 6) >= {COSINE_THRE
 
 MAX_CC_ITERS = 20
 
-# Flag: "star" (default) is the alternating large-star/small-star
-# algorithm (Kiveris et al.,
-# "Connected Components in MapReduce and Beyond", SoCC'14) —
-# O(log n) rounds regardless of graph diameter, and measured faster
-# than minlabel even on the shallow near-dup graphs (SCALE.md: its
-# convergence probe is two scalar aggs vs a join+count per round).
-# "minlabel" (iterations = diameter) is kept as the equivalence
-# reference; both reach the identical unique fixpoint.
-CC_ALGORITHMS = ("star", "minlabel")
-DEFAULT_CC_ALGORITHM = "star"
-
-
-def _cc_minlabel(edges: DataFrame) -> DataFrame:
-    """Min-label propagation: label := min(label, neighbors' labels)
-    per iteration (one join+agg); driver sees only the converged flag.
-    Deterministic: the fixpoint is unique regardless of order."""
-    # Checkpoint (not persist): the label table's plan nests one
-    # join deeper per iteration; past ~15 iterations even FORMATTING
-    # the plan (codegen tree strings) blows the heap. Checkpointing
-    # cuts lineage to a leaf each round; iter_checkpoint upgrades to
-    # reliable checkpoint(dir) when FMR_CHECKPOINT_DIR is set (a
-    # cluster run must survive executor loss mid-loop).
-    labels = iter_checkpoint(
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-    )
-    for _ in range(MAX_CC_ITERS):
-        neighbor_min = (
-            edges.join(labels, edges.doc_b == labels.doc_id)
-            .groupBy(edges.doc_a)
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = iter_checkpoint(
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.doc_a, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-            )
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        prev = labels
-        labels = new_labels
-        # The `changed` count above was the last reader of the old
-        # label snapshot; free its checkpoint blocks synchronously so
-        # a long run holds one label table, not one per iteration.
-        release_iter_checkpoint(prev)
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"components did not converge in {MAX_CC_ITERS} iters")
-
 
 def _cc_star(edges: DataFrame) -> DataFrame:
-    """Alternating large-star/small-star connected components.
+    """Alternating large-star/small-star connected components (Kiveris
+    et al., "Connected Components in MapReduce and Beyond", SoCC'14).
 
-    Each round is two map+agg+join passes over the EDGE set (vs
-    minlabel's pass over the label table): large-star hangs every
-    larger neighbor of u off min(N(u) ∪ {u}); small-star does the same
-    for the not-larger neighbors. The edge set converges to stars
-    rooted at component minima in O(log n) rounds INDEPENDENT of
-    diameter — a long chain collapses geometrically where minlabel
-    walks it one hop per round. Per round it shuffles ~2× more than a
-    minlabel round, so it wins only past the diameter crossover
-    (SCALE.md measures both).
+    Each round is two map+agg+join passes over the EDGE set:
+    large-star hangs every larger neighbor of u off min(N(u) ∪ {u});
+    small-star does the same for the not-larger neighbors. The edge
+    set converges to stars rooted at component minima in O(log n)
+    rounds INDEPENDENT of diameter — a long chain collapses
+    geometrically where min-label propagation walks it one hop per
+    round. The convergence probe is two scalar aggs per round;
+    SCALE.md r3 measured it faster than min-label even on the shallow
+    near-dup graphs.
     """
 
     def large_star(e: DataFrame) -> DataFrame:
@@ -1137,50 +1078,31 @@ def _cc_star(edges: DataFrame) -> DataFrame:
     return out
 
 
-def connected_components(edges: DataFrame, algorithm: str | None = None) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(doc_a, doc_b) edge list → (doc_id, label) with label = min
-    doc_id of the component. ``algorithm``: "star" (the default —
-    O(log n) rounds independent of diameter) or "minlabel" (the
-    equivalence reference)."""
-    algorithm = algorithm or DEFAULT_CC_ALGORITHM
-    if algorithm not in CC_ALGORITHMS:
-        raise ValueError(f"unknown CC algorithm {algorithm!r}; known: {CC_ALGORITHMS}")
-    if algorithm == "star":
-        # The star path needs no up-front symmetric closure: its
-        # initial normalization (greatest/least + distinct) and its
-        # node list are direction-invariant, and each round
-        # re-symmetrizes its own current edge set inside large_star.
-        # Persist the RAW edge input instead (round-16, guide §2.4):
-        # half the cached rows, and — because a union's two branches
-        # each evaluate the input subtree — the symmetric-closure
-        # build used to run the caller's (often expensive) pair
-        # pipeline once per branch before anything was cached.
-        with scratch():
-            return _cc_star(keep(edges))
-    # minlabel propagates along directed doc_a -> doc_b rows, so it
-    # genuinely needs both directions materialized.
-    sym = edges.union(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
+    doc_id of the component, by large-star/small-star rounds."""
+    # No up-front symmetric closure: the star loop's initial
+    # normalization (greatest/least + distinct) and its node list are
+    # direction-invariant, and each round re-symmetrizes its own
+    # current edge set inside large_star. Persist the RAW edge input
+    # (round-16, guide §2.4): half the cached rows, and — because a
+    # union's two branches each evaluate the input subtree — a
+    # symmetric-closure build would run the caller's (often
+    # expensive) pair pipeline once per branch before anything was
+    # cached.
     with scratch():
-        return _cc_minlabel(keep(sym))
+        return _cc_star(keep(edges))
 
 
-def dedup_cluster_canonical(
-    spark: SparkSession, sf_dir: str, algorithm: str | None = None
-) -> DataFrame:
+def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the verified near-dup pairs;
-    canonical = min doc_id per component. Default algorithm is the
-    O(log n)-round large-star/small-star ("star"); "minlabel"
-    (diameter-bound label propagation) is selectable via the arg as
-    the equivalence reference. Both reach the same unique fixpoint
-    (equivalence-tested).
-    """
+    canonical = min doc_id per component (large-star/small-star,
+    O(log n) rounds)."""
     # Edge source: the tiled LSH pair builder — hot-bucket-safe, so a
     # boilerplate cluster inflates edge VOLUME without funneling the
     # pair build through one task (SCALE.md hot-band-bucket stress).
     pairs = dedup_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(pairs, algorithm)
+    labels = connected_components(pairs)
     return labels.select(
         "doc_id",
         F.col("label").alias("cluster_id"),
@@ -1504,7 +1426,13 @@ def incremental_verdicts(incoming: DataFrame, history: DataFrame) -> DataFrame:
     bucket hot on BOTH the delta and the store), verify candidates
     with exact Jaccard, emit per-doc reject verdicts. Both inputs
     carry the band_signature_table schema."""
-    cand = _band_probe(incoming, history, ["band_id", "key"], ("sh",))
+    cand = _attach_payloads(
+        _band_probe(incoming, history, ["band_id", "key"]),
+        incoming,
+        history,
+        "band_id",
+        ["sh"],
+    )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = inter / (F.size("sh_a") + F.size("sh_b") - inter)
     verdicts = (
@@ -2309,7 +2237,13 @@ def incremental_semantic_verdicts(
     (_band_probe, the LSH lane's tiled probe), verify candidates with
     embedding cosine, emit per-doc reject verdicts. Both inputs carry
     the semantic_signature_table schema."""
-    cand = _band_probe(incoming, history, ["band_id", "key"], ("e", "nm"))
+    cand = _attach_payloads(
+        _band_probe(incoming, history, ["band_id", "key"]),
+        incoming,
+        history,
+        "band_id",
+        ["e", "nm"],
+    )
     cos = F.round(
         F.when(
             F.col("nm_a") * F.col("nm_b") > 0,
@@ -3292,7 +3226,7 @@ def _master_lanes(
     cand = keep(_lsh_grid_cand(lsh_b))
     return [
         ("lsh", lambda: _jaccard_verify(
-            _attach_shingle_sets(cand, lsh_b, lsh_b))),
+            _attach_payloads(cand, lsh_b, lsh_b, "band_id", ["shingles"]))),
         ("semantic", lambda: _cosine_verify(cand, emb, emb)),
         ("simhash", lambda: dedup_simhash_pairs(
             spark, sf_dir, bands=state["simhash_bands"])),
@@ -3563,8 +3497,9 @@ def _master_cross_edges(
     # The semantic band keys are the LSH lane's by shared definition
     # (see master_history_state), so one probe feeds both verifies.
     cand = _band_probe(ld, lh, ["band_id", "key"])
-    sim_cand = _band_probe(
-        dstate["simhash_bands"], state["simhash_bands"], ["k", "bv"], ("sim",)
+    sd, sh = dstate["simhash_bands"], state["simhash_bands"]
+    sim_cand = _attach_payloads(
+        _band_probe(sd, sh, ["k", "bv"]), sd, sh, "k", ["sim"]
     )
     # verbatim substring: the delta winnows itself and probes the
     # history fingerprint store (window guarantee: no shared
@@ -3580,7 +3515,7 @@ def _master_cross_edges(
     lanes = (
         # every delta doc → the history keeper of its content hash
         _exact_pairs(dstate["hashed"], state["keepers"]),
-        _jaccard_verify(_attach_shingle_sets(cand, ld, lh)),
+        _jaccard_verify(_attach_payloads(cand, ld, lh, "band_id", ["shingles"])),
         _hamming_verify(sim_cand),
         _cosine_verify(cand, dstate["embeddings"], state["embeddings"]),
         sub_cross,
@@ -4607,28 +4542,11 @@ def dedup_weighted_minhash_pairs(
         .persist()
     )
     # The tiler moves bare ids; the replicated-hash multiset payloads
-    # attach once at the verify from the band-0 bucket slice (guide
-    # §2.3/§8, same split as _attach_shingle_sets — the rh arrays are
+    # attach once at the verify (_attach_payloads — the rh arrays are
     # the heaviest payload in the family, 4× shingle replication at
-    # the df=1 weight). Merge-hinted for the pairgrid reasons: both
-    # sides corpus-derived, broadcast never legitimate at scale.
-    ids = _lsh_grid_cand(buckets)
-    rtab = buckets.filter(F.col("band_id") == 0).select("doc_id", "rh")
-    cand = (
-        ids.hint("merge")
-        .join(
-            rtab.select(
-                F.col("doc_id").alias("doc_a"), F.col("rh").alias("rh_a")
-            ),
-            "doc_a",
-        )
-        .hint("merge")
-        .join(
-            rtab.select(
-                F.col("doc_id").alias("doc_b"), F.col("rh").alias("rh_b")
-            ),
-            "doc_b",
-        )
+    # the df=1 weight).
+    cand = _attach_payloads(
+        _lsh_grid_cand(buckets), buckets, buckets, "band_id", ["rh"]
     )
     inter = F.size(F.array_intersect("rh_a", "rh_b"))
     wj = inter / (F.size("rh_a") + F.size("rh_b") - inter)

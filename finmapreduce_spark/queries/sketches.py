@@ -123,7 +123,8 @@ def sketch_countmin_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with CMS_DEPTH md5 per word, token explode) are map-side CPU on
     # what is otherwise one scan split locally; no-op at scale, and
     # unlike the perceptron there are no downstream per-epoch jobs to
-    # pay task-scheduling overhead on (the _cls_features counter-case)
+    # pay task-scheduling overhead on (the _cls_features_unlabeled
+    # counter-case)
     docs = scan_floor(
         _docs(spark, sf_dir).select("doc_id", "text"), "doc_id"
     )

@@ -1340,8 +1340,8 @@ def text_trigram_interp_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 15): n-gram keys are mostly unique, so the count aggregations'
     # map-side partial agg compresses ~10× better from one map
     # partition than from 32 (shuffle 0.7 → 7.7 MB, wall 1.9 → 3.4 s
-    # at sf0.1) — the same trade _cls_features documents. At scale
-    # the scan fans out by itself.
+    # at sf0.1) — the same trade _cls_features_unlabeled documents. At
+    # scale the scan fans out by itself.
     docs = _docs(spark, sf_dir)
     w = F.col("__w")
     ev = (
@@ -1514,14 +1514,18 @@ QUERIES.update(
 # adjacent token pairs over the corpus, pick the global argmax pair,
 # merge it everywhere.
 #
-# Spark shape per merge: one explode+groupBy with map-side combine
-# over the DISTINCT-WORD table (weights = word frequencies, so the
-# pair count shuffle carries |vocab| rows, not |corpus|), a
-# TakeOrdered(1) for the argmax (the merge table IS the model — one
-# row to the driver per iteration, exactly the k-means centroid
-# pattern), then a narrow JVM replace pass to apply the merge. K
-# merges = K cheap shuffles; at 100 TB the distinct-word compression
-# is what makes this tractable (corpus → |vocab| ≈ millions of rows).
+# Spark shape per merge round: one explode+groupBy with map-side
+# combine over the DISTINCT-WORD table (weights = word frequencies, so
+# the pair count shuffle carries |vocab| rows, not |corpus|), a
+# TakeOrdered of the top BPE_CAND_WINDOW ranked pairs (the merge table
+# IS the model — a bounded handful of rows to the driver per round,
+# exactly the k-means centroid pattern), then a narrow JVM replace
+# pass to apply the round's merges. ONE loop (_bpe_train_batched)
+# trains every lane: batch=1 takes the argmax each round (sequential
+# BPE, the bpe_train_merges family), batch=M the top-M batched
+# variant below. K rounds = K cheap shuffles; at 100 TB the
+# distinct-word compression is what makes this tractable (corpus →
+# |vocab| ≈ millions of rows).
 #
 # Exact SQL oracle: the K iterations unroll as CTEs (same technique
 # as the k-means oracle). Merge application is defined as THREE
@@ -1529,8 +1533,8 @@ QUERIES.update(
 # on the space-padded token string — identical semantics in Spark's
 # replace(), DuckDB's replace(), and Python str.replace, and three
 # passes fully merge any run the sampled pair can produce (a
-# documented bounded-pass BPE variant; both engines compute the
-# identical result, which is what the value-hash checks).
+# documented bounded-pass BPE variant; Spark and the DuckDB oracle
+# compute the identical result, which is what the value-hash checks).
 # ---------------------------------------------------------------------------
 
 BPE_MERGES = 3
@@ -1598,35 +1602,6 @@ def _bpe_apply_merges(toks: DataFrame, pairs: list[str]) -> DataFrame:
     return toks.select(F.trim(applied).alias("s"), "weight")
 
 
-def _bpe_train(spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES):
-    """Run the merge loop; → (merge rows, final tokenized word table).
-
-    Caller owns unpersisting the returned DataFrame."""
-    toks = _bpe_char_toks(spark, sf_dir).persist()
-    rows = []
-    for rank in range(1, n_merges + 1):
-        top = (
-            _bpe_pair_counts(toks)
-            .orderBy(F.desc("cnt"), F.asc("pair"))
-            .limit(1)
-            .collect()[0]
-        )
-        pair, cnt = top["pair"], int(top["cnt"])
-        rows.append((rank, pair, pair.replace(" ", ""), cnt))
-        nxt = _bpe_apply_merges(toks, [pair]).persist()
-        toks.unpersist()
-        toks = nxt
-    return rows, toks
-
-
-def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rows, toks = _bpe_train(spark, sf_dir)
-    toks.unpersist()
-    return spark.createDataFrame(
-        rows, "merge_rank int, pair string, merged string, pair_count long"
-    )
-
-
 # Top-M batched merge rounds: the standard driver-round-trip cut for
 # real vocab sizes (|vocab| merges → |vocab|/M corpus-count rounds).
 # Per round ONE pair-count shuffle runs over the corpus-compressed
@@ -1643,8 +1618,9 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reported pair_count equals what sequential training would have
 # counted for that pair. The batch SELECTION can still diverge from
 # sequential BPE (a merge's newly created pairs never compete within
-# the same round) — M=1 (`bpe_train_merges`) stays the reference;
-# tests measure the fixture-corpus agreement.
+# the same round) — M=1 (`bpe_train_merges`: the same loop, one pick
+# per round, so exactly sequential BPE) stays the reference; tests
+# measure the fixture-corpus agreement.
 
 BPE_BATCH_ROUNDS = 2
 BPE_BATCH_M = 2
@@ -1660,6 +1636,9 @@ def _bpe_train_batched(
     docs: DataFrame | None = None,
     cand_window: int = BPE_CAND_WINDOW,
 ):
+    """Run ``rounds`` merge rounds of up to ``batch`` merges each; →
+    (merge rows, final tokenized word table). batch=1 is sequential
+    BPE. Caller owns unpersisting the returned DataFrame."""
     toks = _bpe_char_toks(spark, sf_dir, docs).persist()
     rows = []
     last_ckpt = None  # newest checkpoint generation; predecessors released
@@ -1731,13 +1710,21 @@ def bpe_train_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    rows, toks = _bpe_train_batched(spark, sf_dir, rounds=BPE_MERGES, batch=1)
+    toks.unpersist()
+    return spark.createDataFrame(
+        rows, "merge_rank int, pair string, merged string, pair_count long"
+    )
+
+
 def bpe_apply_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train→apply tokenizer lifecycle in one plan: after the learned
     merges are applied everywhere, report the corpus-level compression
     — tokens before (= characters of the filtered words) vs after,
     frequency-weighted. The apply side is the narrow JVM replace pass;
     the summary is a single map-side-combined agg."""
-    _, toks = _bpe_train(spark, sf_dir)
+    _, toks = _bpe_train_batched(spark, sf_dir, rounds=BPE_MERGES, batch=1)
     out = toks.agg(
         F.count("*").alias("n_distinct_words"),
         F.sum("weight").cast("long").alias("n_words"),
@@ -2077,7 +2064,7 @@ def _bpe_tokens_col(text_col, merges: list[tuple[str, str]]):
 def bpe_chunk_documents_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train 3 merges on the corpus (the bounded-collect merge loop),
     then chunk every document token-exactly under that tokenizer."""
-    rows, toks = _bpe_train(spark, sf_dir)
+    rows, toks = _bpe_train_batched(spark, sf_dir, rounds=BPE_MERGES, batch=1)
     toks.unpersist()
     merges = [tuple(r[1].split(" ")) for r in sorted(rows)]
     # Guarded scan-parallelism floor (guide §6; operators/
@@ -2215,7 +2202,7 @@ BPE_TRUNC_BUDGET = 1024
 
 
 def bpe_truncate_documents_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rows, toks = _bpe_train(spark, sf_dir)
+    rows, toks = _bpe_train_batched(spark, sf_dir, rounds=BPE_MERGES, batch=1)
     toks.unpersist()
     merges = [tuple(r[1].split(" ")) for r in sorted(rows)]
     # same guarded parallelism floor as bpe_chunk_documents_exact
@@ -2529,15 +2516,19 @@ QUERIES.update(
 # quality-classifier step of a pre-training data pipeline): hashed
 # bag-of-words features (Weinberger et al. 2009, the same 64-bucket
 # signed-md5 scheme functions/scoring.py embeds with) + a full-batch
-# perceptron trained for K epochs, predicting lang=='en'.
+# one-vs-all perceptron trained for K epochs. ONE trainer
+# (_cls_multiclass_train) serves every lane: the binary lanes
+# (lang=='en', the contrastive quality labels) are its one-class
+# calls.
 #
 # Spark shape: features are ONE explode + groupBy(doc, bucket) with
-# map-side combine (≤ 65 rows per doc regardless of doc length).
-# Each epoch is: margins as a narrow JVM map over the feature table
-# with the weight vector inlined as an array literal (the model is
-# O(dim) — the k-means-centroid pattern: 65 longs to the driver per
-# epoch, never a wide collect), one groupBy(doc) for the margin sum,
-# one 65-row aggregate for the update. K epochs = K cheap shuffles
+# map-side combine (≤ 65 rows per doc regardless of doc length),
+# joined once to the tiny (doc, class, ±1) label table. Each epoch
+# is: margins as a narrow JVM map over that table with the weight
+# vectors inlined as a map-of-arrays literal (the model is O(K·dim) —
+# the k-means-centroid pattern: K×65 longs to the driver per epoch,
+# never a wide collect), one groupBy(class, doc) for the margin sum,
+# one K×65-row aggregate for the update. K epochs = K cheap shuffles
 # over the compacted feature table, not the corpus.
 #
 # Exactness: features, labels (±1), weights, and margins are ALL
@@ -2553,13 +2544,10 @@ CLS_EPOCHS = 3
 _HEXPOS = "strpos('0123456789abcdef', substring(h, {p}, 1)) - 1"
 
 
-def _cls_features(
-    spark: SparkSession, sf_dir: str, labeled: DataFrame | None = None
-):
-    """(doc_id, y, idx, wgt) signed hashed-BoW features + bias rows.
-    ``labeled`` overrides the default lang=='en' labeling with any
-    (doc_id, y, text) frame (r13: the contrastive quality classifier
-    labels from the engine's own funnel/dedup signals).
+def _cls_features_unlabeled(docs: DataFrame) -> DataFrame:
+    """(doc_id, idx, wgt): the label-free signed hashed-BoW feature
+    table + bias rows over the ``docs`` (doc_id, text, ...) the caller
+    gives; labels live in the per-class y table the trainer joins.
 
     Tokenization and md5 bucket/sign bit-match the SQL oracle (the
     u6_hashing_bow_cosine correspondence: trim = spaces only, split
@@ -2573,18 +2561,8 @@ def _cls_features(
     # scheduling on the small persisted feature table). At 100 TB
     # the corpus is thousands of row groups and the scan fans out by
     # itself; the ingest-side fix is the bucketed corpus sink.
-    docs = (
-        labeled
-        if labeled is not None
-        else _docs(spark, sf_dir).select(
-            "doc_id",
-            F.when(F.col("lang") == "en", 1).otherwise(-1).alias("y"),
-            "text",
-        )
-    )
     toks = docs.select(
         "doc_id",
-        "y",
         F.explode(
             F.split(F.lower(F.trim(F.col("text"))), "[ \t\n\f\r]+")
         ).alias("w"),
@@ -2595,62 +2573,143 @@ def _cls_features(
         F.conv(F.substring(h, 10, 1), 16, 10).cast("int") % 2 == 1, 1
     ).otherwise(-1)
     feat = (
-        toks.select("doc_id", "y", idx.alias("idx"), sign.alias("sign"))
-        .groupBy("doc_id", "y", "idx")
+        toks.select("doc_id", idx.alias("idx"), sign.alias("sign"))
+        .groupBy("doc_id", "idx")
         .agg(F.sum("sign").cast("long").alias("wgt"))
     )
     bias = docs.select(
-        "doc_id", "y", F.lit(CLS_DIM).alias("idx"), F.lit(1).cast("long").alias("wgt")
+        "doc_id",
+        F.lit(CLS_DIM).alias("idx"),
+        F.lit(1).cast("long").alias("wgt"),
     )
     return feat.unionByName(bias)
 
 
-def _cls_train(feat: DataFrame):
-    """Run the averaged-perceptron epochs over the persisted feature
-    table; → (final weights, epoch-summed weights, margins builder).
-    Caller owns feat's persist lifecycle."""
+def _cls_multiclass_train(
+    feat: DataFrame, ydf: DataFrame, classes: list[str]
+):
+    """The averaged-perceptron epochs (Freund & Schapire 1999), one
+    integer weight row per class trained jointly: ``feat`` is the
+    (doc_id, idx, wgt) feature table, ``ydf`` the (doc_id, cls, y ±1)
+    label table over ``classes``. → (final weights, epoch-summed
+    weights — both {cls: [dim+1 longs]} —, margins builder, fy frame).
+    fy stays persisted — callers embedding margins() plans in their
+    result own the lifecycle (catalog-wide clearCache contract)."""
+    # (cls, y, doc_id, idx, wgt): K×(≤65) rows per doc; persisted —
+    # every epoch's margin and update jobs read it
+    fy = feat.join(ydf, "doc_id").persist()
+    weights = {c: [0] * (CLS_DIM + 1) for c in classes}
+    acc = {c: [0] * (CLS_DIM + 1) for c in classes}
 
-    weights = [0] * (CLS_DIM + 1)
-    acc = [0] * (CLS_DIM + 1)  # sum of post-epoch weight vectors
-
-    def margins(wv, out_col="m"):
-        arr = F.array(*[F.lit(int(x)).cast("long") for x in wv])
+    def margins(wd, out_col="m"):
+        wmap = F.create_map(
+            *[
+                x
+                for c in classes
+                for x in (
+                    F.lit(c),
+                    F.array(*[F.lit(int(v)).cast("long") for v in wd[c]]),
+                )
+            ]
+        )
         return (
-            feat.select(
+            fy.select(
+                "cls",
                 "doc_id",
                 "y",
-                (F.col("wgt") * F.element_at(arr, F.col("idx") + 1)).alias("t"),
+                (
+                    F.col("wgt")
+                    * F.element_at(
+                        F.element_at(wmap, F.col("cls")), F.col("idx") + 1
+                    )
+                ).alias("t"),
             )
-            .groupBy("doc_id", "y")
+            .groupBy("cls", "doc_id", "y")
             .agg(F.sum("t").cast("long").alias(out_col))
         )
 
     for epoch in range(CLS_EPOCHS):
         if epoch == 0:
-            # w0 = 0 ⇒ every margin is 0 ⇒ every doc is misclassified:
-            # the first update is a single aggregate over the feature
-            # table, no margin job (the oracle's w1 CTE states the
-            # same identity)
-            miss_feat = feat
+            # w0 = 0 ⇒ margin 0 ⇒ every (class, doc) misclassified:
+            # first update is one aggregate, no margin job (the
+            # oracles' w1 CTE states the same identity per class)
+            miss_feat = fy
         else:
-            miss = margins(weights).filter(F.col("y") * F.col("m") <= 0)
-            miss_feat = feat.join(miss.select("doc_id"), "doc_id")
+            miss = (
+                margins(weights)
+                .filter(F.col("y") * F.col("m") <= 0)
+                .select("cls", "doc_id")
+            )
+            miss_feat = fy.join(miss, ["cls", "doc_id"])
         delta = (
-            miss_feat.groupBy("idx")
+            miss_feat.groupBy("cls", "idx")
             .agg(F.sum(F.col("y") * F.col("wgt")).alias("d"))
             .collect()
         )
         for r in delta:
-            weights[r["idx"]] += int(r["d"])
-        for j in range(CLS_DIM + 1):
-            acc[j] += weights[j]
-    return weights, acc, margins
+            weights[r["cls"]][r["idx"]] += int(r["d"])
+        for c in classes:
+            wc, ac = weights[c], acc[c]
+            for j in range(CLS_DIM + 1):
+                ac[j] += wc[j]
+    return weights, acc, margins, fy
+
+
+def _cls_langid_train(
+    spark: SparkSession, sf_dir: str, classes: list[str] | None
+):
+    """Langid one-vs-all over the corpus: y = +1 iff the doc's lang
+    (NULL → '') is the class. ``classes`` None trains every lang
+    present (the multiclass lanes); the binary lanes pass ["en"].
+    → (classes, weights, acc, margins builder, labels frame, fy)."""
+    docs = _docs(spark, sf_dir)
+    labels = docs.select(
+        "doc_id", F.coalesce("lang", F.lit("")).alias("lang")
+    )
+    if classes is None:
+        classes = sorted(
+            r["lang"] for r in labels.select("lang").distinct().collect()
+        )
+    ydf = labels.select(
+        "doc_id",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(c).alias("cls"),
+                    F.when(F.col("lang") == c, 1)
+                    .otherwise(-1)
+                    .alias("y"),
+                )
+                for c in classes
+            ])
+        ).alias("cy"),
+    ).select("doc_id", "cy.cls", "cy.y")
+    feat = _cls_features_unlabeled(docs)
+    weights, acc, margins, fy = _cls_multiclass_train(feat, ydf, classes)
+    return classes, weights, acc, margins, labels, fy
+
+
+def _cls_binary_margins(weights: dict, acc: dict, margins) -> DataFrame:
+    """(doc_id, label, margin, margin_avg, pred) of a one-class model:
+    final and averaged margins and the averaged-weight prediction."""
+    return (
+        margins(weights, "m")
+        .join(margins(acc, "m_avg"), ["cls", "doc_id", "y"])
+        .select(
+            "doc_id",
+            F.col("y").cast("int").alias("label"),
+            F.col("m").alias("margin"),
+            F.col("m_avg").alias("margin_avg"),
+            (F.col("m_avg") > 0).cast("int").alias("pred"),
+        )
+    )
 
 
 def classifier_langid_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the AVERAGED perceptron (Freund & Schapire 1999 — the
     voted/averaged variant that stabilizes batch-perceptron
-    oscillation on non-separable data) for CLS_EPOCHS epochs; return
+    oscillation on non-separable data) for CLS_EPOCHS epochs on
+    lang=='en' (the one-class call of the one-vs-all trainer); return
     per-document final + averaged margins and the averaged-weight
     prediction: (doc_id, label, margin, margin_avg, pred).
 
@@ -2663,22 +2722,10 @@ def classifier_langid_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     ARITHMETIC: margins, updates, and averaged weights are
     bit-identical to the unrolled SQL oracle because everything is
     integer."""
-    feat = _cls_features(spark, sf_dir).persist()
-    weights, acc, margins = _cls_train(feat)
-    out = (
-        margins(weights, "m")
-        .join(margins(acc, "m_avg"), ["doc_id", "y"])
-        .select(
-            "doc_id",
-            F.col("y").cast("int").alias("label"),
-            F.col("m").alias("margin"),
-            F.col("m_avg").alias("margin_avg"),
-            (F.col("m_avg") > 0).cast("int").alias("pred"),
-        )
-    )
-    # feat stays persisted: the returned plan references it and the
+    _, weights, acc, margins, _, _ = _cls_langid_train(spark, sf_dir, ["en"])
+    # fy stays persisted: the returned plan references it and the
     # driver executes lazily; it is a ≤65-rows-per-doc table.
-    return out
+    return _cls_binary_margins(weights, acc, margins)
 
 
 def _cls_oracle(
@@ -2786,11 +2833,10 @@ def classifier_langid_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (idx CLS_DIM is the bias). Same training loop as
     classifier_langid_train; the oracle certifies the weight vector
     directly rather than through the margins."""
-    feat = _cls_features(spark, sf_dir).persist()
-    weights, acc, _ = _cls_train(feat)
-    feat.unpersist()
+    _, weights, acc, _, _, fy = _cls_langid_train(spark, sf_dir, ["en"])
+    fy.unpersist()
     return spark.createDataFrame(
-        [(i, int(weights[i]), int(acc[i])) for i in range(CLS_DIM + 1)],
+        [(i, weights["en"][i], acc["en"][i]) for i in range(CLS_DIM + 1)],
         "idx int, w_final long, w_avg long",
     )
 
@@ -2819,136 +2865,13 @@ QUERIES.update(
 
 # ---------------------------------------------------------------------------
 # Multi-class langid (VERDICT r10 #6 — the real fasttext shape): the
-# corpus has >= 3 languages, so the binary en-vs-rest perceptron
-# becomes one-vs-all — per-CLASS integer weight rows trained jointly
-# (every epoch is ONE margin job + ONE update aggregate covering ALL
-# classes: the feature table joins the tiny (doc, class, ±1) label
-# table once, margins group by (class, doc), deltas by (class, idx),
-# and K×(dim+1) longs travel to the driver per epoch — still the
-# O(dim) k-means/centroid pattern, now O(K·dim)), with argmax
-# prediction over averaged margins (ties broken by class name asc,
-# deterministically in both engines). Arithmetic stays ALL-INTEGER,
-# so the unrolled-CTE DuckDB oracle is bit-exact.
+# corpus has >= 3 languages, so the trainer runs one-vs-all over every
+# lang present — per-CLASS integer weight rows trained jointly (every
+# epoch is ONE margin job + ONE update aggregate covering ALL
+# classes), with argmax prediction over averaged margins (ties broken
+# by class name asc, deterministically in both engines). Arithmetic
+# stays ALL-INTEGER, so the unrolled-CTE DuckDB oracle is bit-exact.
 # ---------------------------------------------------------------------------
-
-
-def _cls_features_unlabeled(spark: SparkSession, sf_dir: str):
-    """(doc_id, idx, wgt): the label-free hashed-BoW feature table +
-    bias rows — identical tokenization/bucket/sign arithmetic to
-    _cls_features (the certified binary lane), with the label moved
-    out to the per-class y table."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.split(F.lower(F.trim(F.col("text"))), "[ \t\n\f\r]+")
-        ).alias("w"),
-    )
-    h = F.md5(F.col("w"))
-    idx = (F.conv(F.substring(h, 7, 2), 16, 10).cast("int") % CLS_DIM)
-    sign = F.when(
-        F.conv(F.substring(h, 10, 1), 16, 10).cast("int") % 2 == 1, 1
-    ).otherwise(-1)
-    feat = (
-        toks.select("doc_id", idx.alias("idx"), sign.alias("sign"))
-        .groupBy("doc_id", "idx")
-        .agg(F.sum("sign").cast("long").alias("wgt"))
-    )
-    bias = docs.select(
-        "doc_id",
-        F.lit(CLS_DIM).alias("idx"),
-        F.lit(1).cast("long").alias("wgt"),
-    )
-    return feat.unionByName(bias)
-
-
-def _cls_multiclass_train(spark: SparkSession, sf_dir: str):
-    """Shared one-vs-all training loop; → (classes, weights, acc,
-    margins builder, labels frame, fy frame). fy stays persisted —
-    callers embedding margins() plans in their result own the
-    lifecycle (catalog-wide clearCache contract)."""
-    labels = _docs(spark, sf_dir).select(
-        "doc_id", F.coalesce("lang", F.lit("")).alias("lang")
-    )
-    classes = sorted(
-        r["lang"] for r in labels.select("lang").distinct().collect()
-    )
-    ydf = labels.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(c).alias("cls"),
-                    F.when(F.col("lang") == c, 1)
-                    .otherwise(-1)
-                    .alias("y"),
-                )
-                for c in classes
-            ])
-        ).alias("cy"),
-    ).select("doc_id", "cy.cls", "cy.y")
-    # (cls, y, doc_id, idx, wgt): K×(≤65) rows per doc; persisted —
-    # every epoch's margin and update jobs read it
-    fy = (
-        _cls_features_unlabeled(spark, sf_dir)
-        .join(ydf, "doc_id")
-        .persist()
-    )
-    weights = {c: [0] * (CLS_DIM + 1) for c in classes}
-    acc = {c: [0] * (CLS_DIM + 1) for c in classes}
-
-    def margins(wd, out_col="m"):
-        wmap = F.create_map(
-            *[
-                x
-                for c in classes
-                for x in (
-                    F.lit(c),
-                    F.array(*[F.lit(int(v)).cast("long") for v in wd[c]]),
-                )
-            ]
-        )
-        return (
-            fy.select(
-                "cls",
-                "doc_id",
-                "y",
-                (
-                    F.col("wgt")
-                    * F.element_at(
-                        F.element_at(wmap, F.col("cls")), F.col("idx") + 1
-                    )
-                ).alias("t"),
-            )
-            .groupBy("cls", "doc_id", "y")
-            .agg(F.sum("t").cast("long").alias(out_col))
-        )
-
-    for epoch in range(CLS_EPOCHS):
-        if epoch == 0:
-            # w0 = 0 ⇒ margin 0 ⇒ every (class, doc) misclassified:
-            # first update is one aggregate, no margin job (the
-            # oracle's w1 CTE states the same identity per class)
-            miss_feat = fy
-        else:
-            miss = (
-                margins(weights)
-                .filter(F.col("y") * F.col("m") <= 0)
-                .select("cls", "doc_id")
-            )
-            miss_feat = fy.join(miss, ["cls", "doc_id"])
-        delta = (
-            miss_feat.groupBy("cls", "idx")
-            .agg(F.sum(F.col("y") * F.col("wgt")).alias("d"))
-            .collect()
-        )
-        for r in delta:
-            weights[r["cls"]][r["idx"]] += int(r["d"])
-        for c in classes:
-            wc, ac = weights[c], acc[c]
-            for j in range(CLS_DIM + 1):
-                ac[j] += wc[j]
-    return classes, weights, acc, margins, labels, fy
 
 
 def classifier_langid_multiclass(
@@ -2960,7 +2883,7 @@ def classifier_langid_multiclass(
     accuracy note as the binary lane: the synthetic corpus draws all
     languages from one vocabulary, so what the oracle certifies is
     the distributed one-vs-all training ARITHMETIC, bit-exact."""
-    _, _, acc, margins, labels, _ = _cls_multiclass_train(spark, sf_dir)
+    _, _, acc, margins, labels, _ = _cls_langid_train(spark, sf_dir, None)
     w = W.partitionBy("doc_id").orderBy(F.desc("m_avg"), F.asc("cls"))
     pick = (
         margins(acc, "m_avg")
@@ -2982,11 +2905,11 @@ def classifier_langid_multiclass_weights(
     """The multi-class model ARTIFACT: per-(class, bucket) final and
     epoch-summed weights — the K×(dim+1)-row table a serving path
     broadcasts (idx CLS_DIM is the bias)."""
-    classes, weights, acc, _, _, fy = _cls_multiclass_train(spark, sf_dir)
+    classes, weights, acc, _, _, fy = _cls_langid_train(spark, sf_dir, None)
     fy.unpersist()
     return spark.createDataFrame(
         [
-            (c, i, int(weights[c][i]), int(acc[c][i]))
+            (c, i, weights[c][i], acc[c][i])
             for c in classes
             for i in range(CLS_DIM + 1)
         ],
@@ -4274,10 +4197,10 @@ QUERIES.update(
 # bootstrap every production quality pipeline runs (CCNet/Gopher
 # labels → linear scorer → corpus-wide inference at a fraction of
 # the rule battery's cost). Reuses the ENTIRE certified trainer
-# (_cls_features/_cls_train — integer arithmetic, bit-identical
-# oracle) with only the label CTE swapped; Spark-side labels come
-# from the same cleaning_stage / dedup_cluster_canonical operators
-# the funnel runs, so the twins cannot diverge on labeling.
+# (_cls_multiclass_train as a one-class call — integer arithmetic,
+# bit-identical oracle) with only the label CTE swapped; Spark-side
+# labels come from the same cleaning_stage / dedup_cluster_canonical
+# operators the funnel runs, so the twins cannot diverge on labeling.
 #
 # Honest accuracy note (the langid convention): the synthetic corpus
 # draws every doc from one shared vocabulary, so hashed-BoW barely
@@ -4303,30 +4226,20 @@ def classifier_quality_contrastive(
         .filter(~F.col("is_canonical"))
         .select("doc_id", F.lit(True).alias("is_loser"))
     )
-    labeled = (
+    ydf = (
         docs.join(keepf, "doc_id")
         .join(losers, "doc_id", "left")
         .select(
             "doc_id",
+            F.lit("ship").alias("cls"),
             F.when(F.col("keep") & F.col("is_loser").isNull(), 1)
             .otherwise(-1)
             .alias("y"),
-            "text",
         )
     )
-    feat = _cls_features(spark, sf_dir, labeled=labeled).persist()
-    weights, acc, margins = _cls_train(feat)
-    return (
-        margins(weights, "m")
-        .join(margins(acc, "m_avg"), ["doc_id", "y"])
-        .select(
-            "doc_id",
-            F.col("y").cast("int").alias("label"),
-            F.col("m").alias("margin"),
-            F.col("m_avg").alias("margin_avg"),
-            (F.col("m_avg") > 0).cast("int").alias("pred"),
-        )
-    )
+    feat = _cls_features_unlabeled(docs)
+    weights, acc, margins, _ = _cls_multiclass_train(feat, ydf, ["ship"])
+    return _cls_binary_margins(weights, acc, margins)
 
 
 def _quality_cls_oracle() -> str:

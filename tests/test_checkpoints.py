@@ -49,13 +49,10 @@ def test_iter_checkpoint_writes_reliable_state(spark, tmp_path, monkeypatch):
 def test_cc_reliable_checkpoint_matches_local(spark, tmp_path, monkeypatch):
     e = _edges(spark)
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    want = _labels(connected_components(e, "star"))
+    want = _labels(connected_components(e))
     monkeypatch.setenv(CHECKPOINT_DIR_ENV, str(tmp_path / "ck2"))
-    got = _labels(connected_components(e, "star"))
+    got = _labels(connected_components(e))
     assert got == want
-    # minlabel loop under reliable mode reaches the same fixpoint
-    got_min = _labels(connected_components(e, "minlabel"))
-    assert got_min == want
 
 
 def test_pagerank_reliable_checkpoint_matches_local(spark, tmp_path, monkeypatch):
@@ -139,7 +136,7 @@ def test_cc_star_retains_bounded_snapshots(spark, monkeypatch):
     superseded round is blocking-released (the r14 100x ENOSPC class)."""
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
     before = _live_ids(spark)
-    out = connected_components(_edges(spark), "star")
+    out = connected_components(_edges(spark))
     assert out.count() == 7
     # retained: the converged edge set + the node-list checkpoint
     assert len(_live_ids(spark) - before) <= 2

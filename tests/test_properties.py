@@ -248,8 +248,9 @@ def test_bpe_merges_on_controlled_corpus(spark, tmp_path, monkeypatch):
 def test_bpe_batched_invariants(spark, sf_dir):
     """Top-M batched BPE (`_bpe_train_batched`):
 
-    1. batch=1 degenerates EXACTLY to sequential training — the
-       reference equivalence (same selection rule, one pick/round).
+    1. batch=1 is sequential training (one pick per round;
+       bpe_train_merges certifies it against the unrolled sequential
+       oracle) and supplies the reference merges below.
     2. With M=2, round 1's first pick equals sequential merge 1
        (identical argmax), every batch satisfies full-closure
        disjointness, and each reported pair_count equals the true
@@ -267,18 +268,12 @@ def test_bpe_batched_invariants(spark, sf_dir):
         _bpe_apply_merges,
         _bpe_char_toks,
         _bpe_pair_counts,
-        _bpe_train,
         _bpe_train_batched,
     )
 
     n = BPE_BATCH_ROUNDS * BPE_BATCH_M
-    seq, st = _bpe_train(spark, sf_dir, n_merges=n)
+    seq, st = _bpe_train_batched(spark, sf_dir, rounds=n, batch=1)
     st.unpersist()
-    one, ot = _bpe_train_batched(spark, sf_dir, rounds=n, batch=1)
-    ot.unpersist()
-    assert [(p, m, c) for _, p, m, c in one] == [
-        (p, m, c) for _, p, m, c in seq
-    ]
 
     bat, bt = _bpe_train_batched(spark, sf_dir)
     bt.unpersist()
@@ -602,6 +597,7 @@ def test_multiclass_pred_is_argmax_with_name_tiebreak(spark, sf_dir):
     re-derived here from the weight artifact applied driver-side."""
     from finmapreduce_spark.queries.training import (
         _cls_features_unlabeled,
+        _docs,
         classifier_langid_multiclass,
         classifier_langid_multiclass_weights,
     )
@@ -611,7 +607,7 @@ def test_multiclass_pred_is_argmax_with_name_tiebreak(spark, sf_dir):
         wavg.setdefault(r["cls"], {})[r["idx"]] = r["w_avg"]
     spark.catalog.clearCache()
     feats = {}
-    for r in _cls_features_unlabeled(spark, sf_dir).collect():
+    for r in _cls_features_unlabeled(_docs(spark, sf_dir)).collect():
         feats.setdefault(r["doc_id"], []).append((r["idx"], r["wgt"]))
     got = {
         r["doc_id"]: (r["pred_lang"], r["margin_avg"])

@@ -102,8 +102,8 @@ def test_embedding_cosine_grid_decomposition_equivalence(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# Connected-components algorithm equivalence: min-label vs alternating
-# large-star/small-star (the deep-graph escape hatch).
+# Connected components (alternating large-star/small-star) against
+# fixed label tables.
 # ---------------------------------------------------------------------------
 
 
@@ -132,16 +132,12 @@ def test_cc_algorithms_agree_on_fixtures(spark, pairs, want):
     from finmapreduce_spark.queries.dedup import connected_components
 
     e = _edges_df(spark, pairs)
-    got_min = _labels(connected_components(e, "minlabel"))
-    got_star = _labels(connected_components(e, "star"))
-    assert got_min == want
-    assert got_star == want
+    assert _labels(connected_components(e)) == want
 
 
 def test_cc_star_handles_diameter_past_minlabel_budget(spark):
-    """A 30-hop chain needs 29 min-label rounds (> MAX_CC_ITERS=20)
-    but collapses in O(log n) star rounds — the reason the flag
-    exists."""
+    """A 30-hop chain would need 29 min-label rounds (> MAX_CC_ITERS=20)
+    but collapses in O(log n) star rounds."""
     from finmapreduce_spark.queries.dedup import (
         MAX_CC_ITERS,
         connected_components,
@@ -151,26 +147,8 @@ def test_cc_star_handles_diameter_past_minlabel_budget(spark):
     assert n - 1 > MAX_CC_ITERS
     chain = [(i, i + 1) for i in range(1, n)]
     e = _edges_df(spark, chain)
-    got = _labels(connected_components(e, "star"))
+    got = _labels(connected_components(e))
     assert got == {i: 1 for i in range(1, n + 1)}
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(e, "minlabel").collect()
-
-
-def test_cluster_canonical_star_flag_matches_default(spark, sf_dir):
-    from finmapreduce_spark.queries.dedup import dedup_cluster_canonical
-
-    base = {
-        tuple(r)
-        for r in dedup_cluster_canonical(spark, sf_dir).collect()
-    }
-    via_arg = {
-        tuple(r)
-        for r in dedup_cluster_canonical(spark, sf_dir, "minlabel").collect()
-    }
-    assert via_arg == base
-    with pytest.raises(ValueError, match="unknown CC algorithm"):
-        dedup_cluster_canonical(spark, sf_dir, "nope")
 
 
 # ---------------------------------------------------------------------------

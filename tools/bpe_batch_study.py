@@ -182,17 +182,16 @@ def main() -> int:
     if args.twin_parity:
         return vocab_scale(args)
 
-    from finmapreduce_spark.queries.training import (
-        _bpe_train,
-        _bpe_train_batched,
-    )
+    from finmapreduce_spark.queries.training import _bpe_train_batched
     from finmapreduce_spark.session import get_spark
 
     spark = get_spark("bpe-batch-study")
     spark.range(1).count()  # warm up
 
     t0 = time.time()
-    seq_rows, toks = _bpe_train(spark, args.sf_dir, n_merges=args.merges)
+    seq_rows, toks = _bpe_train_batched(
+        spark, args.sf_dir, rounds=args.merges, batch=1
+    )
     toks.unpersist()
     seq = {
         "arm": "sequential",

@@ -21,7 +21,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import ITERATIVE_LANES, _release_persistent_rdds, _shuffle_probe
+from bench import ITERATIVE_LANES, _shuffle_probe
+from finmapreduce_spark.operators.checkpoints import release_all_persistent_rdds
 from finmapreduce_spark.queries import all_queries
 from finmapreduce_spark.session import get_spark
 
@@ -57,7 +58,7 @@ def main() -> None:
             spark.catalog.clearCache()
             df = None
             gc.collect()
-            _release_persistent_rdds(spark)
+            release_all_persistent_rdds(spark)
             if t == 0 and probe is not None:
                 after1 = probe()
                 if before is not None and after1 is not None:
